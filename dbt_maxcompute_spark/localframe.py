@@ -18,14 +18,14 @@ partition count of the local relation changes, which for driver-built
 metadata-sized frames is always what you want (they feed broadcasts
 and single-file fixture writes, never parallel scans).
 
-``SPARK_GRAFT_LOCAL_FRAME=pickle`` keeps the stock
-``createDataFrame`` path as the reference form (equivalence tests /
-A/B hook); any failure inside the fast path also falls back to it.
+The stock ``createDataFrame`` is the test-side reference
+(tests/test_localframe.py). Production falls back to it only when the
+private conversion API drifts (ImportError / AttributeError); a row
+that fails the type verifier raises from the verifier, once.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,8 +39,6 @@ def local_frame(
     local relation. ``data`` is a driver-local iterable (list of
     tuples/Rows/dicts); ``schema`` a DDL string or StructType."""
     data = data if isinstance(data, list) else list(data)
-    if os.environ.get("SPARK_GRAFT_LOCAL_FRAME", "") == "pickle":
-        return spark.createDataFrame(data, schema)
     try:
         from pyspark.sql.types import (
             _create_converter,
@@ -69,7 +67,7 @@ def local_frame(
         df = DataFrame(jdf, spark)
         df._schema = struct
         return df
-    except Exception:
-        # any drift in the private conversion API degrades to the stock
+    except (ImportError, AttributeError):
+        # drift in the private conversion API degrades to the stock
         # path — slower, never wrong
         return spark.createDataFrame(data, schema)

@@ -8,12 +8,11 @@ Spark-first iteration shape — each Lloyd step is:
 
 1. centroids live on the DRIVER as plain lists (K x dim doubles —
    metadata-sized; 1024 x 768 floats is ~3 MB);
-2. assignment is ONE pure-Catalyst expression: the centroid matrix
-   rides in as a broadcast single-row frame (one attribute reference
-   in the plan — a literal matrix would put K x dim Literal nodes in
-   every iteration's plan and analysis/codegen would dominate) and the
-   argmin is a nested transform/aggregate fold — one lambda
-   instantiation regardless of K. No Python, no UDF, no shuffle;
+2. assignment is ONE Arrow stage (``vecmath.argmin_dists_udf``): the
+   centroid matrix ships as a Spark broadcast (the plan never carries
+   K x dim literals, so re-planning each iteration with fresh values
+   stays cheap) and the squared-L2 argmin runs vectorized over rows.
+   No shuffle;
 3. the update is posexplode(vector) -> groupBy(cluster, dim) — ONE
    map-side-combinable aggregate with a 2-column key yielding K x dim
    rows, collected to the driver. Works at any dimensionality without
@@ -22,51 +21,18 @@ Spark-first iteration shape — each Lloyd step is:
 Total per iteration: one corpus scan, one K*dim-row shuffle. Nothing
 materializes on the driver except the K x dim centroid matrix itself.
 Deterministic throughout: init picks the first K vectors in id order,
-ties in argmin break toward the lower cluster index (array_position
-returns the FIRST minimum), and the update sums accumulate in
+ties in argmin break toward the lower cluster index (the kernel
+takes the FIRST minimum), and the update sums accumulate in
 decimal(28,12) so the fit is identical under any partition layout
 (double sums are addition-order dependent).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbt_maxcompute_spark.localframe import local_frame
-
-
-def _dists_expr_col(vec: Column, mat: Column) -> Column:
-    """array<double> of squared L2 distances to every centroid row of
-    `mat` — one nested fold, not K unrolled copies."""
-    return F.transform(
-        mat,
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda v, cj: (v.cast("double") - cj) * (v.cast("double") - cj)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-
-
-def _with_matrix(df: DataFrame, centroids: list[list[float]]) -> tuple[DataFrame, str]:
-    """Attach the K x dim centroid matrix as ONE broadcast column.
-
-    Embedding the matrix as literals puts K*dim Literal nodes in the
-    plan; at K=8, dim=64 that is 512 nodes PER ITERATION, and Lloyd
-    re-plans every iteration with fresh values — analysis + codegen of
-    those trees dominates wall time on anything but huge inputs. A
-    broadcast single-row frame keeps the plan a single attribute
-    reference regardless of K and dim, and is also the right shape for
-    1024 x 768 matrices on a real cluster (3 MB broadcast vs a 786k-node
-    expression tree)."""
-    spark = df.sparkSession
-    mdf = local_frame(
-        spark,
-        [([[float(x) for x in c] for c in centroids],)],
-        "__mat array<array<double>>",
-    )
-    return df.crossJoin(F.broadcast(mdf)), "__mat"
+from dbt_maxcompute_spark.operators import vecmath
 
 
 def assign_clusters(
@@ -77,24 +43,16 @@ def assign_clusters(
     the only extra input is the broadcast centroid matrix — so it is
     safe to chain into a partitioned-by-cluster write at scale.
 
-    Round-13: the K x dim fold math per row runs behind one Arrow
-    stage by default (vecmath.argmin_dists_udf — identical IEEE
-    sequence and first-min tiebreak; equality pinned by
-    tests/test_vecmath.py). The fold form stays as the
-    USE_ARROW=False reference."""
-    from dbt_maxcompute_spark.operators import vecmath
-
-    if vecmath.USE_ARROW:
-        am = vecmath.argmin_dists_udf(df.sparkSession, centroids)
-        return (
-            df.withColumn("__am", am(F.col(vec_col)))
-            .withColumn("cluster", F.col("__am.cluster"))
-            .drop("__am")
-        )
-    with_m, mcol = _with_matrix(df, centroids)
-    dists = _dists_expr_col(F.col(vec_col), F.col(mcol))
-    cluster = (F.array_position(dists, F.array_min(dists)) - 1).cast("long")
-    return with_m.withColumn("cluster", cluster).drop(mcol)
+    Round-13: the K x dim math per row runs behind one Arrow stage
+    (vecmath.argmin_dists_udf — the squared-L2 fold's IEEE sequence
+    and first-min tiebreak, pinned bit-exact against a scalar replay
+    in tests/test_vecmath.py)."""
+    am = vecmath.argmin_dists_udf(df.sparkSession, centroids)
+    return (
+        df.withColumn("__am", am(F.col(vec_col)))
+        .withColumn("cluster", F.col("__am.cluster"))
+        .drop("__am")
+    )
 
 
 def kmeans_fit(
@@ -193,31 +151,12 @@ def kmeans_cluster_profile(
 ) -> DataFrame:
     """Fit + assign + per-cluster profile (size, mean within-cluster
     squared distance). The driver-visible shape of the operator."""
-    from dbt_maxcompute_spark.operators import vecmath
-
     centroids, _ = kmeans_fit(df, id_col, vec_col, k=k, max_iter=max_iter)
-    if vecmath.USE_ARROW:
-        am = vecmath.argmin_dists_udf(df.sparkSession, centroids)
-        with_m = (
-            df.withColumn("__am", am(F.col(vec_col)))
-            .withColumn("__d2", F.col("__am.d2"))
-            .withColumn("cluster", F.col("__am.cluster"))
-        )
-        return (
-            with_m.groupBy("cluster")
-            .agg(
-                F.count(F.lit(1)).alias("n_members"),
-                F.round(F.avg("__d2"), 6).alias("mean_sq_dist"),
-            )
-            .orderBy("cluster")
-        )
-    with_m, mcol = _with_matrix(df, centroids)
-    dists = _dists_expr_col(F.col(vec_col), F.col(mcol))
+    am = vecmath.argmin_dists_udf(df.sparkSession, centroids)
     return (
-        with_m.withColumn("__d2", F.array_min(dists))
-        .withColumn(
-            "cluster", (F.array_position(dists, F.col("__d2")) - 1).cast("long")
-        )
+        df.withColumn("__am", am(F.col(vec_col)))
+        .withColumn("__d2", F.col("__am.d2"))
+        .withColumn("cluster", F.col("__am.cluster"))
         .groupBy("cluster")
         .agg(
             F.count(F.lit(1)).alias("n_members"),

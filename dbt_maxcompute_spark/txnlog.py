@@ -192,9 +192,8 @@ _DUP_KEY_MSG = "DELETE_INSERT_DUPLICATE_KEYS"
 
 # commits at or below this many files read parquet footers directly on
 # the driver (metadata-sized); larger commits fan the reads out in one
-# parallelize().map() job. Env-tunable for clusters where even small
-# commits should stay off the driver.
-_DRIVER_STAT_MAX_FILES = int(os.environ.get("SPARK_GRAFT_DRIVER_STAT_MAX", "16"))
+# parallelize().map() job.
+_DRIVER_STAT_MAX_FILES = 16
 
 
 def _bloom_hash64(values):
@@ -898,10 +897,7 @@ class TxnTable:
         # cached plans keep their pre-AQE shuffle partitioning, so the
         # staged write fans out into dozens of tiny files.) Bonus: the
         # duplicate-key guard now fires before ANY store write.
-        # SPARK_GRAFT_DV_PROBE=feed keeps the re-execute-the-feed form
-        # as the reference path for equivalence tests and A/B timing.
-        staged_probe = os.environ.get("SPARK_GRAFT_DV_PROBE", "staged") != "feed"
-        adds = self._stage_files(source) if staged_probe else None
+        adds = self._stage_files(source)
         if snap.schema_json:
             schema = StructType.fromJson(json.loads(snap.schema_json))
             raw = self.spark.read.schema(schema).parquet(
@@ -917,9 +913,7 @@ class TxnTable:
             ).withColumn("__p", F.col("_metadata.row_index")),
             snap,
         )
-        if not staged_probe:
-            probe = source
-        elif adds:
+        if adds:
             probe = self.spark.read.schema(source.schema).parquet(
                 *[os.path.join(self.path, a["add"]) for a in adds]
             )
@@ -940,8 +934,6 @@ class TxnTable:
             matched = matched.unionByName(old)
         dv_name = f"dv-{uuid.uuid4().hex}"
         matched.write.parquet(os.path.join(self.path, dv_name))
-        if adds is None:
-            adds = self._stage_files(source)
         return self._commit(
             snap.version + 1,
             [{"set_dv": dv_name}] + adds,

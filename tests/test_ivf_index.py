@@ -890,30 +890,43 @@ def test_cached_bench_index_key_is_salted_by_build_recipe(
         _tf.tempdir = None
 
 
-def test_maintain_kept_checkpoint_and_plan_paths_agree(
-    spark, sf_dir, tmp_path, monkeypatch
+def test_maintain_kept_checkpoint_matches_fresh_assignment(
+    spark, sf_dir, tmp_path
 ):
     """r13 §13: `kept` (touched-cell read minus removals) feeds both the
     idempotence anti-join and the written union; the lazy localCheckpoint
     that makes it evaluate once must not change the maintained artifact.
-    Both modes run the full keyed-CDF batch (deletes, update pairs,
-    inserts) and must produce identical cell placement and vectors."""
+    After the full keyed-CDF batch (deletes, update pairs, inserts) the
+    index must hold exactly the post-change corpus placed by
+    ``assign_with_meta``, and replaying the batch must change nothing."""
+    import json
+
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     base = emb.filter(F.col("vec_id") % 5 != 4)
-    got = {}
-    for mode in ("checkpoint", "plan"):
-        monkeypatch.setenv("SPARK_GRAFT_IVF_KEPT", mode)
-        idx_path = str(tmp_path / f"ivf_{mode}")
-        similarity.build_ivf_index(
-            base, "vec_id", "embedding", idx_path, num_centroids=8
-        )
-        res = similarity.maintain_ivf_index(spark, idx_path, _changes(emb))
-        # replay the same batch: the idempotent upsert (which consumes
-        # `kept` a second way) must be a no-op in both modes
-        res2 = similarity.maintain_ivf_index(spark, idx_path, _changes(emb))
-        rows = sorted(
+    idx_path = str(tmp_path / "ivf")
+    similarity.build_ivf_index(
+        base, "vec_id", "embedding", idx_path, num_centroids=8
+    )
+    with open(f"{idx_path}/_ivf_meta.json") as fh:
+        meta = json.load(fh)
+
+    def index_rows():
+        return sorted(
             (r.vec_id, r.centroid_id, tuple(r.embedding))
             for r in spark.read.parquet(idx_path).collect()
         )
-        got[mode] = (res["touched_cells"], res2["touched_cells"], rows)
-    assert got["checkpoint"] == got["plan"]
+
+    res = similarity.maintain_ivf_index(spark, idx_path, _changes(emb))
+    rows = index_rows()
+    # partition values read back as strings (no partition type inference)
+    want = sorted(
+        (r.vec_id, str(r.centroid_id), tuple(r.embedding))
+        for r in similarity.assign_with_meta(_final_corpus(emb), meta).collect()
+    )
+    assert rows == want
+    assert res["touched_cells"]
+    # replay the same batch: the idempotent upsert (which consumes
+    # `kept` a second way) must be a no-op
+    res2 = similarity.maintain_ivf_index(spark, idx_path, _changes(emb))
+    assert res2["touched_cells"] == res["touched_cells"]
+    assert index_rows() == rows

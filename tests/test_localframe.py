@@ -38,6 +38,7 @@ CASES = [
         ],
     ),
     ("k string, v string", []),  # empty frame
+    ("x long, y string", [(1, "a"), (None, "it's"), (-(2**40), None)]),
 ]
 
 
@@ -64,10 +65,21 @@ def test_local_frame_rows_and_structtype(spark):
     assert a.schema == b.schema and a.collect() == b.collect()
 
 
-def test_local_frame_pickle_env_reference_path(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_FRAME", "pickle")
-    df = local_frame(spark, [(1, "a")], "x long, y string")
-    assert df.collect() == [Row(x=1, y="a")]
+def test_local_frame_never_reaches_createdataframe(spark, monkeypatch):
+    """Valid rows take the one-slice path only; a row the type verifier
+    rejects raises from the verifier, not from a silent stock retry."""
+    calls = []
+
+    def boom(*a, **k):
+        calls.append(a)
+        raise AssertionError("createDataFrame fallback taken")
+
+    monkeypatch.setattr(spark, "createDataFrame", boom)
+    for schema, rows in CASES:
+        local_frame(spark, rows, schema).collect()
+    with pytest.raises(TypeError):
+        local_frame(spark, [("not an int",)], "x int")
+    assert calls == []
 
 
 def test_local_frame_verifies_types_like_stock(spark):

@@ -61,18 +61,6 @@ def test_simhash_fast_matches_catalyst_fold(spark, sf_dir):
     assert got and all(r.slow == r.fast for r in got)
 
 
-def test_minhash_fast_matches_fold(spark, sf_dir):
-    """The Arrow fast path must be bit-identical to the pure-Catalyst
-    reference fold (same h1 XOR rot_k(h2) family, same signed min)."""
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    sh = dedup.shingles(dedup.tokens(F.col("text")), 3)
-    got = docs.select(
-        dedup.minhash_signature(sh, 32).alias("slow"),
-        dedup.minhash_signature_fast(sh, 32).alias("fast"),
-    ).collect()
-    assert got and all(list(r.slow) == list(r.fast) for r in got)
-
-
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)

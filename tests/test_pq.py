@@ -24,7 +24,7 @@ def test_codes_shape_and_determinism(spark, sf_dir):
 
 def test_adc_matches_python_reference(spark, sf_dir):
     # ADC score of a coded row == python dot(LUT row, codes) on a
-    # handful of rows — the staged Catalyst pipeline computes exactly
+    # handful of rows — the ADC kernel computes exactly
     # the Jegou formulation, not something approximately like it
     import math
 
@@ -47,32 +47,19 @@ def test_adc_matches_python_reference(spark, sf_dir):
         assert math.isclose(r.s, want, rel_tol=1e-12)
 
 
-def test_encode_is_shuffle_free(spark, sf_dir, monkeypatch):
-    from dbt_maxcompute_spark.operators import vecmath
-
+def test_encode_is_shuffle_free(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     cb = quantize.pq_codebook(emb, "vec_id", "embedding", m=8, ks=16)
 
-    # default path (round-13): one Arrow stage per scan — never the
-    # row-pickling BatchEvalPython — and still projection-only
+    # round-13: one Arrow stage per scan — never the row-pickling
+    # BatchEvalPython — and still projection-only
     coded = quantize.pq_encode(emb.select("vec_id", "embedding"), "embedding", cb)
     plan = plan_of(spark, coded, "simple")
     assert "Exchange" not in plan.replace("BroadcastExchange", ""), (
         "PQ encoding must be a pure projection"
     )
-    assert "ArrowEvalPython" in plan, "default encode must be the Arrow kernel"
+    assert "ArrowEvalPython" in plan, "encode must be the Arrow kernel"
     assert "BatchEvalPython" not in plan, "row-pickling UDF path is forbidden"
-
-    # reference path (USE_ARROW=False): pure Catalyst, zero Python; the
-    # only exchange is the metadata-sized broadcast of the codebook
-    # frame (round-11: the codebook rides broadcast, not plan literals)
-    monkeypatch.setattr(vecmath, "USE_ARROW", False)
-    coded = quantize.pq_encode(emb.select("vec_id", "embedding"), "embedding", cb)
-    plan = plan_of(spark, coded, "simple")
-    assert "Exchange" not in plan.replace("BroadcastExchange", ""), (
-        "PQ encoding must be a pure projection"
-    )
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_pq_topk_full_results_and_rerank_exact(spark, sf_dir):
