@@ -425,49 +425,14 @@ def token_hash_expr(t: Column, family: str = "xxhash64") -> Column:
     raise ValueError(f"unknown token-hash family: {family!r}")
 
 
-def simhash(toks: Column, bits: int = 64, hash_family: str = "xxhash64") -> Column:
-    """64-bit SimHash from token hashes, pure Catalyst: for each bit
-    position, sum ±1 over token hash bits, take the sign. Expressed as
-    an aggregate fold over the token array (no Python).
-    """
-    if bits != 64:
-        raise ValueError("simhash: only 64-bit supported")
-    # Bit positions are unrolled statically: PySpark's shiftright/
-    # shiftleft take literal ints only. The fold runs over PRE-HASHED
-    # tokens (hashing inside the per-bit terms would re-inline xxhash64
-    # 64× per token), counts ONE-bits with branch-free arithmetic
-    # ((h>>i)&1 summed; higher-order functions are interpreted, so
-    # per-bit CASE WHEN chains cost ~3× the plain add), and derives the
-    # majority sign at the end: bit i set iff 2*ones > n.
-    ones = F.aggregate(
-        F.transform(toks, lambda t: token_hash_expr(t, hash_family)),
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(*[F.shiftright(h, i).bitwiseAND(F.lit(1)) for i in range(64)]),
-            lambda a, b: a + b,
-        ),
-    )
-    n = F.size(toks).cast("long")
-    # two's-complement value of bit i (bit 63 = min-long sign bit)
-    bit_val = [(1 << i) if i < 63 else -(1 << 63) for i in range(64)]
-    fp = F.lit(0).cast("long")
-    for i in range(64):
-        fp = fp.bitwiseOR(
-            F.when(
-                F.element_at(ones, i + 1) * 2 > n, F.lit(bit_val[i]).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return fp
-
-
 def simhash_fast(toks: Column, hash_family: str = "xxhash64") -> Column:
     """SimHash fingerprint, Arrow fast path: token hashing stays
     JVM-side (xxhash64 inside whole-stage codegen); only the 64-bit
     majority vote crosses to Python, where numpy unpackbits/packbits
-    vectorizes it.  Bit-identical to :func:`simhash` (same token
-    hashes, same majority rule) — the pure-Catalyst fold evaluates
-    64 interpreted zip_with lambdas per token, ~10x slower.
+    vectorizes it.  Bit-identical to the pure-Catalyst fold replayed in
+    ``tests/test_pipeline_suite.py`` (same token hashes, same majority
+    rule), which evaluates 64 interpreted zip_with lambdas per token,
+    ~10x slower.
     """
     import numpy as np
     import pandas as pd

@@ -332,14 +332,3 @@ def decode_media(
             yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
 
     return src.select("media_id", "kind", "payload").mapInPandas(batches, FEATURE_SCHEMA)
-
-
-def frame_sample(features: DataFrame, every_n: int = 8) -> DataFrame:
-    """Sample frame indices 0, every_n, 2*every_n, ... per video row —
-    pure Catalyst explode, no Python. Non-video rows pass through with
-    frame_idx 0."""
-    idxs = F.when(
-        F.col("kind") == "video",
-        F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n)),
-    ).otherwise(F.array(F.lit(0)))
-    return features.withColumn("frame_idx", F.explode(idxs))

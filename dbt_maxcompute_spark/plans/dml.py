@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from dbt_maxcompute_spark.catalog import EngineCatalog, TableMeta, cluster_for_write
 from dbt_maxcompute_spark.localframe import local_frame
+from dbt_maxcompute_spark.txnlog import retry_commit
 
 _T, _S = "__dml_tgt_present", "__dml_src_present"
 
@@ -250,8 +251,6 @@ def _leaf_partition_dirs(base: str, depth: int) -> list[str]:
     return out
 
 
-_TXN_MAX_ATTEMPTS = 3
-
 # Distinct-key ceiling for the deletion-vector upsert fast path: the op
 # broadcasts source.select(keys).distinct(), so above this the batch
 # routes to the copy-on-write recompute instead of risking a broadcast/
@@ -272,29 +271,6 @@ def _dv_key_set_fits_broadcast(src: DataFrame, keys: list[str]) -> bool:
         .count()
     )
     return n <= DV_BROADCAST_MAX_KEYS
-
-
-def _txn_commit_loop(catalog: EngineCatalog, name: str, compute) -> int:
-    """Optimistic-concurrency loop for read-compute-commit DML on a
-    transactional table: read a pinned snapshot, compute the post-DML
-    row set from it, commit expecting exactly snapshot+1. A concurrent
-    commit makes ours a CommitConflict — re-read, recompute, retry
-    (Delta-paper protocol; the recompute is what makes the retry
-    CORRECT, not just successful: it folds the interleaved commit's
-    rows into the new result)."""
-    from dbt_maxcompute_spark.txnlog import CommitConflict
-
-    t = catalog.txn(name)
-    last: Exception | None = None
-    for _ in range(_TXN_MAX_ATTEMPTS):
-        v = t.latest_version()
-        tgt = t.read(v)
-        result = compute(tgt)
-        try:
-            return t.overwrite_from(v, result)
-        except CommitConflict as e:
-            last = e
-    raise last
 
 
 def _derive_auto(meta: TableMeta, df: DataFrame) -> DataFrame:
@@ -328,16 +304,8 @@ def append(catalog: EngineCatalog, name: str, source: DataFrame) -> None:
     if meta.transactional:
         # append-only commits never conflict semantically; a version
         # race just re-commits at the next number
-        from dbt_maxcompute_spark.txnlog import CommitConflict
-
         t = catalog.txn(name)
-        for attempt in range(_TXN_MAX_ATTEMPTS):
-            try:
-                t.append(src)
-                return
-            except CommitConflict:
-                if attempt == _TXN_MAX_ATTEMPTS - 1:
-                    raise
+        retry_commit(lambda: t.append(src))
         return
     pt = meta.all_partition_cols()
     w = cluster_for_write(src, pt).write.mode("append")
@@ -393,12 +361,10 @@ def merge(
         # log-committed merge: the post-merge row set computes from a
         # PINNED snapshot and commits as exactly one version on top of
         # it — one merge, one commit in history(); conflicts recompute
-        _txn_commit_loop(
-            catalog,
-            name,
+        catalog.txn(name).overwrite_recomputed(
             lambda snap_tgt: _merge_result(
                 snap_tgt, src, keys, update_cols, incremental_predicates
-            ),
+            )
         )
         return
 
@@ -574,16 +540,10 @@ def delete_insert(
             # broadcasts the key set, so a batch whose keys would blow
             # the broadcast/driver limit falls through to the
             # snapshot-pinned COW recompute below instead of failing.
-            from dbt_maxcompute_spark.txnlog import CommitConflict
-
             t = catalog.txn(name)
-            for attempt in range(_TXN_MAX_ATTEMPTS):
-                try:
-                    t.delete_insert_dv(src, keys, allow_duplicate_keys=True)
-                    return
-                except CommitConflict:
-                    if attempt == _TXN_MAX_ATTEMPTS - 1:
-                        raise
+            retry_commit(
+                lambda: t.delete_insert_dv(src, keys, allow_duplicate_keys=True)
+            )
             return
 
         # predicate-scoped deletes (the predicate narrows the delete
@@ -596,7 +556,7 @@ def delete_insert(
                 snap_tgt, src, keys, incremental_predicates
             ).unionByName(src)
 
-        _txn_commit_loop(catalog, name, compute)
+        catalog.txn(name).overwrite_recomputed(compute)
         return
 
     replace_parts = None

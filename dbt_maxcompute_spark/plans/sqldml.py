@@ -40,11 +40,10 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, functions as F
 from dbt_maxcompute_spark.localframe import local_frame
+from dbt_maxcompute_spark.txnlog import guard_raised_as_value_error, retry_commit
 
 if TYPE_CHECKING:
     from dbt_maxcompute_spark.catalog import EngineCatalog
-
-_TXN_MAX_ATTEMPTS = 3
 
 
 # ---------------------------------------------------------------------------
@@ -826,16 +825,8 @@ def classify(stmt: str):
         parts: list[tuple[str, str | None]] = []
         pm = re.match(r"\s*PARTITION\s*\(", mrest, re.IGNORECASE)
         if pm:
-            open_i, close_i = mrest.index("(", pm.start()), -1
-            depth = 0
-            for i in range(open_i, len(mrest)):
-                if mrest[i] == "(":
-                    depth += 1
-                elif mrest[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close_i = i
-                        break
+            open_i = mrest.index("(", pm.start())
+            close_i = _find_close(mrest, open_i)
             for part in _split_top_level(
                 rest[open_i + 1:close_i], mrest[open_i + 1:close_i]
             ):
@@ -849,15 +840,7 @@ def classify(stmt: str):
             # (otherwise the parenthesised text IS the query — the
             # reference wraps inserted SELECTs in parens)
             open_i = mrest.index("(")
-            depth, close_i = 0, -1
-            for i in range(open_i, len(mrest)):
-                if mrest[i] == "(":
-                    depth += 1
-                elif mrest[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close_i = i
-                        break
+            close_i = _find_close(mrest, open_i)
             cand = [
                 c.strip().strip("`")
                 for c in rest[open_i + 1:close_i].split(",")
@@ -1612,8 +1595,6 @@ def _require_txn(catalog: "EngineCatalog", tbl: str, op: str):
 
 
 def _exec_delete(catalog: "EngineCatalog", tbl: str, where: str | None) -> int:
-    from dbt_maxcompute_spark.txnlog import CommitConflict
-
     t = _require_txn(catalog, tbl, "DELETE")
     # conditions may contain subqueries over other catalog tables
     # (the reference's delete+insert issues tuple-IN DELETEs —
@@ -1630,17 +1611,11 @@ def _exec_delete(catalog: "EngineCatalog", tbl: str, where: str | None) -> int:
             before = t.read(snap.version).count()
         t.overwrite_from(snap.version, t.read(snap.version).limit(0))
         return before
-    for attempt in range(_TXN_MAX_ATTEMPTS):
-        try:
-            # single pass: the DV write itself observes the visible
-            # matched-row count — no separate pre-count scan, and the
-            # count is pinned to the snapshot the delete committed on
-            _v, affected = t.delete_where_dv(where, return_count=True)
-            return affected
-        except CommitConflict:
-            if attempt == _TXN_MAX_ATTEMPTS - 1:
-                raise
-    raise AssertionError
+    # single pass: the DV write itself observes the visible matched-row
+    # count — no separate pre-count scan, and the count is pinned to
+    # the snapshot the delete committed on
+    _v, affected = retry_commit(lambda: t.delete_where_dv(where, return_count=True))
+    return affected
 
 
 def _exec_update(
@@ -1650,8 +1625,6 @@ def _exec_update(
     the PRE-update row (one select over the snapshot guarantees this —
     chained withColumn would leak updated values into later
     assignments), committed copy-on-write through the optimistic loop."""
-    from dbt_maxcompute_spark.txnlog import CommitConflict
-
     from pyspark.sql import Observation
 
     t = _require_txn(catalog, tbl, "UPDATE")
@@ -1663,15 +1636,12 @@ def _exec_update(
         # from the condition's conjuncts — O(matched), never a table
         # rewrite. Tiny unprunable tables keep the single-pass COW
         # overwrite below (its one job beats the DV path's two there).
-        for attempt in range(_TXN_MAX_ATTEMPTS):
-            try:
-                _v, affected = t.update_where_dv(sets, where, return_count=True)
-                return affected
-            except CommitConflict:
-                if attempt == _TXN_MAX_ATTEMPTS - 1:
-                    raise
-        raise AssertionError
-    for attempt in range(_TXN_MAX_ATTEMPTS):
+        _v, affected = retry_commit(
+            lambda: t.update_where_dv(sets, where, return_count=True)
+        )
+        return affected
+
+    def step() -> int:
         v = t.latest_version()
         tgt = t.read(v)
         bad = set(sets) - set(tgt.columns)
@@ -1703,13 +1673,10 @@ def _exec_update(
                 for c in tgt.columns
             ]
         )
-        try:
-            t.overwrite_from(v, out)
-            return int(obs.get["n"] or 0)
-        except CommitConflict:
-            if attempt == _TXN_MAX_ATTEMPTS - 1:
-                raise
-    raise AssertionError
+        t.overwrite_from(v, out)
+        return int(obs.get["n"] or 0)
+
+    return retry_commit(step)
 
 
 def _exec_insert(
@@ -1827,16 +1794,8 @@ def _exec_insert(
         if pt_cols:
             dml.insert_overwrite(catalog, tbl, full, partitions=static_parts)
         elif meta.transactional:
-            from dbt_maxcompute_spark.txnlog import CommitConflict
-
             t = catalog.txn(tbl)
-            for attempt in range(_TXN_MAX_ATTEMPTS):
-                try:
-                    t.overwrite(dml._align_columns(full, t.read()))
-                    break
-                except CommitConflict:
-                    if attempt == _TXN_MAX_ATTEMPTS - 1:
-                        raise
+            retry_commit(lambda: t.overwrite(dml._align_columns(full, t.read())))
         else:
             aligned = dml._align_columns(full, catalog.read(tbl))
             catalog._rewrite(tbl, aligned, meta)
@@ -1923,8 +1882,6 @@ def _exec_merge(catalog: "EngineCatalog", m: MergeStmt) -> int:
     """
     from pyspark.sql import Observation, Window
 
-    from dbt_maxcompute_spark.txnlog import CommitConflict
-
     t = _require_txn(catalog, m.target, "MERGE")
     ta, sa = m.target_alias, m.source_alias
     if m.source_is_query:
@@ -1979,7 +1936,7 @@ def _exec_merge(catalog: "EngineCatalog", m: MergeStmt) -> int:
                 src = limited
                 n_src_bound = n_probe
 
-    for attempt in range(_TXN_MAX_ATTEMPTS):
+    def step() -> int:
         v = t.latest_version()
         if dv_route:
             snap = t.snapshot(v)
@@ -2102,36 +2059,24 @@ def _exec_merge(catalog: "EngineCatalog", m: MergeStmt) -> int:
             d_tags = [f"d{i}" for i, c in matched_clauses if c.action == "delete"]
             i_tags = [f"i{i}" for i, c in notm_clauses]
             write_tags = u_tags + i_tags
-            try:
-                adds = []
-                if write_tags:
-                    # the observe node sits BELOW this filter, so the
-                    # staged write fires it over the FULL join — n is
-                    # the complete affected count (u + d + i)
-                    adds_frame = j.filter(
-                        F.col("__action").isin(*write_tags)
-                    ).select(*[out_col(c) for c in out_cols])
-                    adds = t._stage_files(adds_frame)
-                pos = j.filter(
-                    F.col("__action").isin(*(u_tags + d_tags))
-                    if (u_tags or d_tags)
-                    else F.lit(False)
-                ).select(
-                    F.col(f"{ta}.__f").alias("file"),
-                    F.col(f"{ta}.__p").alias("pos"),
-                )
-                _v, dv_delta = t.commit_dv_delta(snap, adds, pos)
-            except CommitConflict:
-                if attempt == _TXN_MAX_ATTEMPTS - 1:
-                    raise
-                continue
-            except Exception as e:  # noqa: BLE001 — map the in-plan guard
-                if _CARDINALITY_MSG in str(e):
-                    raise ValueError(
-                        "MERGE: a target row matches multiple source rows "
-                        "(cardinality violation)"
-                    ) from None
-                raise
+            adds = []
+            if write_tags:
+                # the observe node sits BELOW this filter, so the
+                # staged write fires it over the FULL join — n is
+                # the complete affected count (u + d + i)
+                adds_frame = j.filter(
+                    F.col("__action").isin(*write_tags)
+                ).select(*[out_col(c) for c in out_cols])
+                adds = t._stage_files(adds_frame)
+            pos = j.filter(
+                F.col("__action").isin(*(u_tags + d_tags))
+                if (u_tags or d_tags)
+                else F.lit(False)
+            ).select(
+                F.col(f"{ta}.__f").alias("file"),
+                F.col(f"{ta}.__p").alias("pos"),
+            )
+            _v, dv_delta = t.commit_dv_delta(snap, adds, pos)
             if write_tags:
                 return int(obs.get["n"] or 0)
             return dv_delta  # pure-delete merge: affected = deletions
@@ -2139,21 +2084,14 @@ def _exec_merge(catalog: "EngineCatalog", m: MergeStmt) -> int:
             j.filter(~F.col("__action").isin("drop", *[f"d{i}" for i, _ in matched_clauses]))
             .select(*[out_col(c) for c in out_cols])
         )
-        try:
-            t.overwrite_from(v, result)
-        except CommitConflict:
-            if attempt == _TXN_MAX_ATTEMPTS - 1:
-                raise
-            continue
-        except Exception as e:  # noqa: BLE001 — map the in-plan guard
-            if _CARDINALITY_MSG in str(e):
-                raise ValueError(
-                    "MERGE: a target row matches multiple source rows "
-                    "(cardinality violation)"
-                ) from None
-            raise
+        t.overwrite_from(v, result)
         return int(obs.get["n"] or 0)
-    raise AssertionError
+
+    with guard_raised_as_value_error(
+        _CARDINALITY_MSG,
+        "MERGE: a target row matches multiple source rows (cardinality violation)",
+    ):
+        return retry_commit(step)
 
 
 MERGE_DV_MIN_ROWS = 100_000
@@ -2216,8 +2154,8 @@ def _merge_target_big(t) -> bool:
         )
     except (TypeError, ValueError):
         min_rows = MERGE_DV_MIN_ROWS
-    rows = [(snap.stats.get(f) or {}).get("numRecords") for f in snap.files]
-    return any(r is None for r in rows) or sum(rows) >= min_rows
+    rows = snap.logged_rows()
+    return rows is None or rows >= min_rows
 
 
 def _merge_source_rows_from_stats(catalog: "EngineCatalog", m: "MergeStmt") -> int | None:
@@ -2235,7 +2173,4 @@ def _merge_source_rows_from_stats(catalog: "EngineCatalog", m: "MergeStmt") -> i
         snap = catalog.txn(name).snapshot()
     except Exception:
         return None
-    rows = [(snap.stats.get(f) or {}).get("numRecords") for f in snap.files]
-    if any(r is None for r in rows):
-        return None
-    return sum(rows)
+    return snap.logged_rows()

@@ -171,15 +171,6 @@ def tumbling_hourly(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def sliding_half_hour(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """1 h windows sliding every 30 min (each event in 2 windows)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").start.alias("window_start"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
 def run_available_now(agg: DataFrame, query_name: str) -> None:
     """Drain the source with AvailableNow into an in-memory sink (test /
     backfill harness). Complete mode: window aggs without append-mode

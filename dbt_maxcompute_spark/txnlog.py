@@ -47,15 +47,22 @@ import time
 import uuid
 
 from dbt_maxcompute_spark.localframe import local_frame
+from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import Any
+from typing import Any, Callable, Iterable, Iterator
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col as F_col
 
 LOG_DIR = "_txn_log"
 CHECKPOINT_EVERY = 10
-_TXN_RETRIES = 3
+# commit attempts per statement before a CommitConflict surfaces; the
+# ledger-checked idempotent writers re-check their batch id on every
+# attempt (a retry can never double-land), so they afford a deeper one
+TXN_ATTEMPTS = 3
+LEDGER_TXN_ATTEMPTS = 16
 
 
 def _quantized_now() -> float:
@@ -82,6 +89,41 @@ class CommitConflict(RuntimeError):
     concurrency loss). Re-read the snapshot and retry."""
 
 
+def retry_commit(step: Callable[[], Any], attempts: int = TXN_ATTEMPTS) -> Any:
+    """The optimistic-concurrency loop (Delta-paper protocol) behind
+    every retried commit. ``step`` is one attempt: read a snapshot,
+    compute the new table state from it, commit expecting exactly
+    snapshot+1. A concurrent commit makes that a CommitConflict, and
+    the step runs again from a fresh read — the recompute is what makes
+    the retry CORRECT, not just successful: it folds the interleaved
+    commit's rows into the new result (no lost update). The last
+    attempt's CommitConflict propagates; any other error propagates at
+    once."""
+    for _ in range(attempts - 1):
+        try:
+            return step()
+        except CommitConflict:
+            pass
+    return step()
+
+
+@contextmanager
+def guard_raised_as_value_error(marker: str, message: str) -> Iterator[None]:
+    """Map an in-plan ``raise_error(marker)`` guard back to
+    ``ValueError(message)``. Folding a validation (duplicate keys, MERGE
+    cardinality) into the job that writes saves a separate probe pass,
+    but the guard then surfaces as whichever JVM error wraps the failed
+    task (converted by PySpark, or a raw ``Py4JJavaError`` when PySpark
+    has no Python class for it), so only the marker text identifies
+    it."""
+    try:
+        yield
+    except (PySparkException, Py4JJavaError) as e:
+        if marker in str(e):
+            raise ValueError(message) from None
+        raise
+
+
 @dataclass
 class Snapshot:
     version: int
@@ -102,6 +144,19 @@ class Snapshot:
     # without their data files having been rewritten. None = no
     # row-level deletes outstanding.
     dv_file: str | None = None
+
+    def logged_rows(self, files: list[str] | None = None) -> int | None:
+        """Row count of ``files`` (default: every file) from the logged
+        footer stats — zero Spark jobs; deletion-vector rows still
+        count. None when any of them lacks logged stats (legacy logs)."""
+        return _logged_rows(
+            self.stats.get(f) for f in (self.files if files is None else files)
+        )
+
+
+def _logged_rows(file_stats: Iterable[dict | None]) -> int | None:
+    rows = [(st or {}).get("numRecords") for st in file_stats]
+    return None if any(r is None for r in rows) else sum(rows)
 
 
 def _footer_stats(full_path: str) -> dict:
@@ -743,7 +798,7 @@ class TxnTable:
         from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
-        for _attempt in range(_TXN_RETRIES):
+        def step() -> tuple[int, int]:
             snap = self.snapshot()
             new = [
                 p
@@ -789,23 +844,18 @@ class TxnTable:
                         os.unlink(os.path.join(self.path, a["add"]))
                     except OSError:
                         pass
-                continue
-            stats = [(a.get("stats") or {}).get("numRecords") for a in adds]
-            if any(s is None for s in stats):
+                raise
+            rows = _logged_rows(a.get("stats") for a in adds)
+            if rows is None:
                 # a staged file missing footer stats would silently
                 # report 0 rows (round-9 advisory fix): count the
                 # committed files directly instead
-                rows = (
-                    self.spark.read.parquet(
-                        *[os.path.join(self.path, a["add"]) for a in adds]
-                    ).count()
-                    if adds
-                    else 0
-                )
-            else:
-                rows = sum(int(s) for s in stats)
+                rows = self.spark.read.parquet(
+                    *[os.path.join(self.path, a["add"]) for a in adds]
+                ).count()
             return (len(new), rows)
-        raise CommitConflict("COPY INTO: commit contention")
+
+        return retry_commit(step)
 
     def delete_insert_dv(
         self,
@@ -863,16 +913,12 @@ class TxnTable:
                     kcnt > 1, F.raise_error(F.lit(_DUP_KEY_MSG))
                 ).otherwise(F.col(gcol)),
             )
-        try:
+        with guard_raised_as_value_error(
+            _DUP_KEY_MSG, "delete_insert_dv: duplicate key tuples in source"
+        ):
             return self._delete_insert_dv_body(
                 source, keys, txn=txn, base_snapshot=base_snapshot
             )
-        except Exception as e:  # noqa: BLE001 — map the in-plan guard
-            if _DUP_KEY_MSG in str(e):
-                raise ValueError(
-                    "delete_insert_dv: duplicate key tuples in source"
-                ) from None
-            raise
 
     def _delete_insert_dv_body(
         self,
@@ -960,7 +1006,9 @@ class TxnTable:
         double-append (the naive check-then-``append()`` re-read the
         latest version independently and could)."""
         adds: list[dict[str, Any]] | None = None
-        for _ in range(16):
+
+        def step() -> bool:
+            nonlocal adds
             snap = self.snapshot()
             last = snap.app_versions.get(str(app_id))
             if last is not None and batch_id <= last:
@@ -969,19 +1017,15 @@ class TxnTable:
                 return False
             if adds is None:
                 adds = self._stage_files(df)
-            try:
-                self._commit(
-                    snap.version + 1,
-                    adds,
-                    df.schema.json(),
-                    txn={"app_id": app_id, "batch_id": batch_id},
-                )
-                return True
-            except CommitConflict:
-                continue  # re-read ledger at the new version, re-check, retry
-        raise CommitConflict(
-            f"idempotent_append lost {16} consecutive commit races at {self.log_path}"
-        )
+            self._commit(
+                snap.version + 1,
+                adds,
+                df.schema.json(),
+                txn={"app_id": app_id, "batch_id": batch_id},
+            )
+            return True
+
+        return retry_commit(step, LEDGER_TXN_ATTEMPTS)
 
     def idempotent_upsert(
         self,
@@ -1001,25 +1045,22 @@ class TxnTable:
         stays replay-clean.
 
         Returns True if the upsert committed, False if skipped."""
-        for _ in range(16):
+
+        def step() -> bool:
             snap = self.snapshot()
             last = snap.app_versions.get(str(app_id))
             if last is not None and batch_id <= last:
                 return False
-            try:
-                self.delete_insert_dv(
-                    df,
-                    keys,
-                    allow_duplicate_keys=allow_duplicate_keys,
-                    txn={"app_id": app_id, "batch_id": batch_id},
-                    base_snapshot=snap,
-                )
-                return True
-            except CommitConflict:
-                continue  # re-read ledger at the new version, re-check
-        raise CommitConflict(
-            f"idempotent_upsert lost {16} consecutive commit races at {self.log_path}"
-        )
+            self.delete_insert_dv(
+                df,
+                keys,
+                allow_duplicate_keys=allow_duplicate_keys,
+                txn={"app_id": app_id, "batch_id": batch_id},
+                base_snapshot=snap,
+            )
+            return True
+
+        return retry_commit(step, LEDGER_TXN_ATTEMPTS)
 
     def overwrite(self, df: DataFrame) -> int:
         base_snap = self.snapshot()
@@ -1056,6 +1097,18 @@ class TxnTable:
             df.schema.json(),
             txn=txn,
         )
+
+    def overwrite_recomputed(self, compute: Callable[[DataFrame], DataFrame]) -> int:
+        """Read-compute-commit through :func:`retry_commit`: each
+        attempt pins the latest version, computes the post-DML row set
+        from that snapshot's rows, and commits it with
+        :meth:`overwrite_from` on top of exactly that version."""
+
+        def step() -> int:
+            v = self.latest_version()
+            return self.overwrite_from(v, compute(self.read(v)))
+
+        return retry_commit(step)
 
     def delete_where(self, condition: str) -> int:
         """Copy-on-write delete: keep rows NOT matching ``condition``.
@@ -1177,12 +1230,7 @@ class TxnTable:
         # filtered at stage time can still name all-empty files; a scan
         # over them plans zero tasks and writes nothing useful. The
         # logged footer stats already prove 0 visible rows.
-        stats_rows = [
-            (snap.stats.get(f) or {}).get("numRecords") for f in snap.files
-        ]
-        if not snap.files or (
-            all(r is not None for r in stats_rows) and sum(stats_rows) == 0
-        ):
+        if snap.logged_rows() == 0:
             v = self._commit(snap.version + 1, [], snap.schema_json)
             return (v, 0) if return_count else v
         from pyspark.sql import functions as F
@@ -1257,14 +1305,20 @@ class TxnTable:
             st = snap.stats.get(f) or {}
             mn = (st.get("min") or {}).get(col)
             mx = (st.get("max") or {}).get(col)
+            hits = vals
             if mn is not None and mx is not None:
                 try:
-                    i = bisect.bisect_left(vals, mn)
-                    if i >= len(vals) or vals[i] > mx:
-                        continue  # no key can be inside [mn, mx]
+                    lo = bisect.bisect_left(vals, mn)
+                    hits = vals[lo:bisect.bisect_right(vals, mx)]
                 except TypeError:
-                    pass  # incomparable types: keep
-            if not self._bloom_any_hit(snap, f, col, vals):
+                    pass  # incomparable types: every key stays a candidate
+                if not hits:
+                    continue  # no key can be inside [mn, mx]
+            # only in-range keys probe the bloom: a bloom false positive
+            # for a key the range already rules out must not keep the
+            # file (the executor-side prune, which sees the keys in
+            # batches, applies the same rule and so returns the same set)
+            if not self._bloom_any_hit(snap, f, col, hits):
                 continue
             out.append(f)
         return out
@@ -1379,26 +1433,35 @@ class TxnTable:
                 if s.empty:
                     continue
                 vals = s.tolist()
+                # per hash family: which keys normalize, and their hashes
                 fam_hash: dict = {}
                 survivors = []
                 for f, mn, mx, ent in metas:
+                    in_range = np.ones(len(vals), dtype=bool)
                     if mn is not None and mx is not None:
                         try:
-                            if not ((s >= mn) & (s <= mx)).any():
-                                continue  # no key of this batch in range
+                            in_range = ((s >= mn) & (s <= mx)).to_numpy()
                         except TypeError:
                             pass  # incomparable types: range inconclusive
+                        if not in_range.any():
+                            continue  # no key of this batch in range
                     if ent is not None:
                         bits, fam, m = ent
                         if fam not in fam_hash:
                             pr = [_bloom_normalize(v, fam) for v in vals]
-                            fam_hash[fam] = (
-                                None
-                                if any(p is None for p in pr)
-                                else _bloom_hash64(pr)
-                            )
-                        h = fam_hash[fam]
-                        if h is not None:
+                            ok = np.array([p is not None for p in pr])
+                            hashes = np.zeros(len(pr), dtype=np.uint64)
+                            if ok.any():
+                                hashes[ok] = _bloom_hash64(
+                                    [p for p in pr if p is not None]
+                                )
+                            fam_hash[fam] = (ok, hashes)
+                        ok, hashes = fam_hash[fam]
+                        # same rule as the driver-side prune: only
+                        # in-range keys probe, and any of them that
+                        # cannot be normalized keeps the file
+                        if ok[in_range].all():
+                            h = hashes[in_range]
                             arr = np.frombuffer(bits, dtype=np.uint8)
                             hit = np.ones(len(h), dtype=bool)
                             for idx in _bloom_indices(h, m):
@@ -1510,10 +1573,8 @@ class TxnTable:
             kept = self._bloom_prune(snap, kept, prune)
             if len(kept) < len(snap.files):
                 return True
-        rows = [(snap.stats.get(f) or {}).get("numRecords") for f in snap.files]
-        if any(r is None for r in rows):
-            return True
-        return sum(rows) >= 100_000
+        rows = snap.logged_rows()
+        return rows is None or rows >= 100_000
 
     def update_where_dv(
         self,
@@ -1534,12 +1595,7 @@ class TxnTable:
         affected count equals SQL UPDATE's matched-row count and comes
         from the DV parquet footers (never a second data pass)."""
         snap = self.snapshot()
-        stats_rows = [
-            (snap.stats.get(f) or {}).get("numRecords") for f in snap.files
-        ]
-        if not snap.files or (
-            all(r is not None for r in stats_rows) and sum(stats_rows) == 0
-        ):
+        if snap.logged_rows() == 0:
             v = self._commit(snap.version + 1, [], snap.schema_json)
             return (v, 0) if return_count else v
         from pyspark.sql import functions as F
@@ -1595,10 +1651,9 @@ class TxnTable:
         logged stats (legacy logs) — callers fall back to a count job.
         Zero Spark jobs; the DV footers are local KB reads."""
         snap = self.snapshot() if snap is None else snap
-        rows = [(snap.stats.get(f) or {}).get("numRecords") for f in snap.files]
-        if any(r is None for r in rows):
+        total = snap.logged_rows()
+        if total is None:
             return None
-        total = sum(rows)
         if snap.dv_file:
             total -= self._dv_rows(snap.dv_file)
         return total
@@ -1817,18 +1872,10 @@ class TxnTable:
         footers (KBs). Unknown stats (foreign/legacy log) choose the
         DV path: at unknown-and-possibly-huge scale, two full snapshot
         reads are the risk."""
-        base = [
-            (from_snap.stats.get(f) or {}).get("numRecords")
-            for f in from_snap.files
-        ]
-        added = [
-            (to_snap.stats.get(f) or {}).get("numRecords")
-            for f in interval_adds
-        ]
-        if any(r is None for r in base) or any(r is None for r in added):
+        rows_base = from_snap.logged_rows()
+        rows_added = to_snap.logged_rows(interval_adds)
+        if rows_base is None or rows_added is None:
             return True
-        rows_base = sum(base)
-        rows_added = sum(added)
         dv_from = self._dv_rows(from_snap.dv_file) if from_snap.dv_file else 0
         dv_to = self._dv_rows(to_snap.dv_file) if to_snap.dv_file else 0
         delta_est = abs(dv_to - dv_from)
@@ -2381,7 +2428,8 @@ class TxnTable:
                 f"RESTORE to version {version}: {len(missing)} required "
                 f"file(s) no longer exist (vacuumed): {missing[:3]}"
             )
-        for _attempt in range(3):
+
+        def step() -> int:
             cur = self.snapshot()
             if cur.version == version:
                 return cur.version  # restoring to the present: no-op
@@ -2401,11 +2449,9 @@ class TxnTable:
                 )
             if not actions and old.schema_json == cur.schema_json:
                 return cur.version  # state already equals the target
-            try:
-                return self._commit(cur.version + 1, actions, old.schema_json)
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"RESTORE to {version}: commit contention")
+            return self._commit(cur.version + 1, actions, old.schema_json)
+
+        return retry_commit(step)
 
     def vacuum(
         self, retain_versions: int = 1, retention_seconds: float = 3600.0

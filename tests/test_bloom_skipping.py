@@ -247,6 +247,22 @@ def test_prune_df_equals_driver_for_any_key_set(spark, keys, col):
     assert got == want, (col, keys, got, want)
 
 
+def test_prune_ignores_bloom_hits_of_out_of_range_keys(spark):
+    """A key outside a file's logged [min, max] must not keep the file
+    through a bloom false positive: -29 is out of every file's v range
+    yet hits one file's bloom, while 900000 is in range and proves
+    absent there. The driver-side prune used to keep that file, and the
+    executor-side one kept it only when both keys shared an Arrow batch,
+    so its answer depended on the partitioning."""
+    t, snap = _prune_fixture(spark)
+    keys = [-29, 900_000]
+    kdf = spark.createDataFrame([(k,) for k in keys], "v long")
+    want = sorted(t.files_matching_keys(snap, "v", keys))
+    for frame in (kdf.repartition(len(keys)), kdf.coalesce(1)):
+        assert sorted(t.files_matching_keys_df(snap, "v", frame, "v")) == want
+    assert want == sorted(t.files_matching_keys(snap, "v", [900_000]))
+
+
 def _mk_merge_target(spark, tmp_path, name="big2"):
     from dbt_maxcompute_spark.catalog import EngineCatalog
 

@@ -50,13 +50,45 @@ def test_simhash_pairs_are_near_dups(spark, sf_dir):
         assert r.hamming <= 3
 
 
+def _simhash_fold(toks, hash_family: str = "xxhash64"):
+    """Reference 64-bit SimHash, pure Catalyst: for each bit position,
+    sum ±1 over token hash bits, take the sign — an aggregate fold over
+    the token array (no Python).
+
+    Bit positions are unrolled statically: PySpark's shiftright/
+    shiftleft take literal ints only. The fold runs over PRE-HASHED
+    tokens, counts ONE-bits with branch-free arithmetic ((h>>i)&1
+    summed) and derives the majority sign at the end: bit i set iff
+    2*ones > n."""
+    ones = F.aggregate(
+        F.transform(toks, lambda t: dedup.token_hash_expr(t, hash_family)),
+        F.array_repeat(F.lit(0).cast("long"), 64),
+        lambda acc, h: F.zip_with(
+            acc,
+            F.array(*[F.shiftright(h, i).bitwiseAND(F.lit(1)) for i in range(64)]),
+            lambda a, b: a + b,
+        ),
+    )
+    n = F.size(toks).cast("long")
+    # two's-complement value of bit i (bit 63 = min-long sign bit)
+    bit_val = [(1 << i) if i < 63 else -(1 << 63) for i in range(64)]
+    fp = F.lit(0).cast("long")
+    for i in range(64):
+        fp = fp.bitwiseOR(
+            F.when(
+                F.element_at(ones, i + 1) * 2 > n, F.lit(bit_val[i]).cast("long")
+            ).otherwise(F.lit(0).cast("long"))
+        )
+    return fp
+
+
 def test_simhash_fast_matches_catalyst_fold(spark, sf_dir):
     """The Arrow fast path must be bit-identical to the pure-Catalyst
     reference fold (same xxhash64 token hashes, same majority rule)."""
     docs = load_table(spark, sf_dir, "documents").limit(50)
     toks = dedup.tokens(F.col("text"))
     got = docs.select(
-        dedup.simhash(toks).alias("slow"), dedup.simhash_fast(toks).alias("fast")
+        _simhash_fold(toks).alias("slow"), dedup.simhash_fast(toks).alias("fast")
     ).collect()
     assert got and all(r.slow == r.fast for r in got)
 

@@ -259,6 +259,10 @@ def test_classify_insert_partition_clauses():
     )
     assert cols == ["id", "v"] and parts == [("pt", None)]
     assert q.startswith("( select")
+    # an unclosed PARTITION clause is a parse error, not a partition
+    # named after the rest of the statement
+    with pytest.raises(ValueError, match="unbalanced parentheses"):
+        sqldml.classify("INSERT INTO t PARTITION (pt SELECT 1")
 
 
 def test_classify_create_table_columns_and_grants():
@@ -1014,6 +1018,125 @@ def test_sql_merge_dv_path_cardinality_and_pure_delete(spark, cat, monkeypatch):
     ).collect()[0]
     assert out.affected_rows == 2
     assert cat.read("t").count() == 6
+
+
+def _evens_v_plus_1(rows):
+    return {i: (v + 1, s) if i % 2 == 0 else (v, s) for i, (v, s) in rows.items()}
+
+
+def _merge_upd(rows):
+    out = dict(rows)
+    out[3] = (333, rows[3][1])
+    out[1002] = (7, rows[1002][1])  # matches a row only the competitor wrote
+    out[50] = (500, "ins")
+    return out
+
+
+# statement -> (SQL, expected rows from the pre-statement rows, affected
+# rows, route switch). The competitor's rows (ids 1000..1004) are
+# visible only after the forced race, so each expectation holds only if
+# the retry recomputed from the new snapshot.
+_RACED_DML = {
+    "delete": (
+        "DELETE FROM t WHERE id % 2 = 0",
+        lambda rows: {i: r for i, r in rows.items() if i % 2},
+        13,
+        None,
+    ),
+    "update_dv": (
+        "UPDATE t SET v = v + 1 WHERE id % 2 = 0", _evens_v_plus_1, 13, True
+    ),
+    "update_cow": (
+        "UPDATE t SET v = v + 1 WHERE id % 2 = 0", _evens_v_plus_1, 13, False
+    ),
+    "insert_overwrite": (
+        "INSERT OVERWRITE TABLE t SELECT id, v, 'ins' FROM upd",
+        lambda rows: {3: (333, "ins"), 1002: (7, "ins"), 50: (500, "ins")},
+        3,
+        None,
+    ),
+    "merge_cow": (
+        "MERGE INTO t USING upd AS u ON t.id = u.id "
+        "WHEN MATCHED THEN UPDATE SET v = u.v "
+        "WHEN NOT MATCHED THEN INSERT (id, v, s) VALUES (u.id, u.v, 'ins')",
+        _merge_upd,
+        3,
+        False,
+    ),
+    "merge_dv": (
+        "MERGE INTO t USING upd AS u ON t.id = u.id "
+        "WHEN MATCHED THEN UPDATE SET v = u.v "
+        "WHEN NOT MATCHED THEN INSERT (id, v, s) VALUES (u.id, u.v, 'ins')",
+        _merge_upd,
+        3,
+        True,
+    ),
+}
+
+
+@pytest.mark.parametrize("stmt", sorted(_RACED_DML))
+def test_sql_dml_commit_conflict_retry(spark, cat, monkeypatch, stmt):
+    """The shared optimistic loop behind SQL DML: a competitor append
+    that lands between the statement's snapshot read and its commit
+    forces one CommitConflict; the retry recomputes on top of it (the
+    competitor's rows survive, or stay in history for INSERT
+    OVERWRITE), at the cost of exactly one extra version. When every
+    commit conflicts, CommitConflict surfaces after exactly
+    ``TXN_ATTEMPTS`` commit attempts and nothing lands."""
+    from dbt_maxcompute_spark import txnlog
+    from dbt_maxcompute_spark.txnlog import CommitConflict, TxnTable
+
+    sql, expect, affected, dv = _RACED_DML[stmt]
+    if stmt.startswith("update"):
+        monkeypatch.setattr(TxnTable, "dv_update_pays", lambda self, cond: dv)
+    if stmt == "merge_dv":
+        monkeypatch.setattr(sqldml, "MERGE_DV_MIN_ROWS", 0)
+    _mk(cat, spark, n=20)
+    cat.create_table(
+        "upd",
+        spark.createDataFrame([(3, 333), (1002, 7), (50, 500)], "id long, v long"),
+    )
+    competitor = spark.range(1000, 1005).select(
+        F.col("id"), (F.col("id") * 10).alias("v"), F.lit("comp").alias("s")
+    )
+    t = cat.txn("t")
+    v0 = t.latest_version()
+
+    orig_commit = TxnTable._commit
+    raced = []
+
+    def racy(self, *args, **kwargs):
+        if not raced:
+            raced.append(True)
+            TxnTable(spark, self.path).append(competitor)  # wins the version
+        return orig_commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(TxnTable, "_commit", racy)
+    out = cat.execute(sql).collect()[0]
+    monkeypatch.setattr(TxnTable, "_commit", orig_commit)
+
+    assert t.latest_version() == v0 + 2  # competitor + one statement commit
+    comp_rows = {r.id: (r.v, r.s) for r in cat.read("t", version=v0 + 1).collect()}
+    assert all(comp_rows[i] == (i * 10, "comp") for i in range(1000, 1005))
+    final = cat.read("t").collect()
+    got = {r.id: (r.v, r.s) for r in final}
+    assert len(final) == len(got)  # no key landed twice
+    assert got == expect(comp_rows)
+    assert out.affected_rows == affected
+    if dv is not None:
+        assert bool(t.snapshot().dv_file) == dv  # the route under test ran
+
+    calls = []
+
+    def always_conflict(self, expected_version, *args, **kwargs):
+        calls.append(expected_version)
+        raise CommitConflict("forced")
+
+    monkeypatch.setattr(TxnTable, "_commit", always_conflict)
+    with pytest.raises(CommitConflict):
+        cat.execute(sql)
+    assert len(calls) == txnlog.TXN_ATTEMPTS
+    assert t.latest_version() == v0 + 2
 
 
 def test_table_changes_tvf_and_bloom_tblproperty(spark, cat):
