@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from dbt_maxcompute_spark.functions.scalar import trunc_time
 from dbt_maxcompute_spark.localframe import local_frame
+from dbt_maxcompute_spark.plans.sqltext import quote
 
 META_FILE = "_engine_meta.json"
 
@@ -499,7 +500,7 @@ class EngineCatalog:
                 f"CREATE TABLE {reg} ({cols}) USING parquet "
                 f"CLUSTERED BY ({bcols}) {sorted_clause}"
                 f"INTO {meta.bucket_num} BUCKETS "
-                f"LOCATION '{self.table_dir(name)}'"
+                f"LOCATION {quote(self.table_dir(name))}"
             )
         return self.spark.table(reg)
 
@@ -1136,22 +1137,8 @@ class EngineCatalog:
         confs, each statement routes through :meth:`execute`, the last
         statement's DataFrame is returned (lazy). Returns
         (df, recorded_hints, parse_errors) like ``run_raw``."""
-        from dbt_maxcompute_spark.materializations.raw import (
-            inject_query_comment,
-            split_statements,
-        )
-        from dbt_maxcompute_spark.plans.settings import (
-            parse_set_preamble,
-            scoped_confs,
-            split_hints,
-        )
+        from dbt_maxcompute_spark.materializations.raw import run_script
 
-        parsed = parse_set_preamble(script)
-        apply, record = split_hints(parsed.settings)
-        last = None
-        with scoped_confs(self.spark, apply):
-            for stmt in split_statements(parsed.remaining_query):
-                last = self.execute(
-                    inject_query_comment(stmt, query_comment, comment_append)
-                )
-        return last, record, parsed.errors
+        return run_script(
+            self.spark, self.execute, script, query_comment, comment_append
+        )

@@ -5,12 +5,14 @@ hint extraction and script-mode execution
 (`/root/reference/dbt/include/maxcompute/macros/materializations/raw.sql:1-6`,
 `/root/reference/dbt/adapters/maxcompute/impl.py:588-627`). Here the
 script's SET preamble becomes scoped Spark confs, the rest is split on
-top-level semicolons (quote/comment-aware) and executed statement by
-statement via ``spark.sql``; the last statement's DataFrame is
+semicolons outside literals and comments (``sqltext``) and executed
+statement by statement via ``spark.sql``; the last statement's DataFrame is
 returned (lazy — no collect).
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -19,52 +21,7 @@ from dbt_maxcompute_spark.plans.settings import (
     scoped_confs,
     split_hints,
 )
-
-
-def split_statements(script: str) -> list[str]:
-    """Split on semicolons outside quotes/comments. Empty statements
-    are dropped (trailing ';' produces none)."""
-    out, buf = [], []
-    i, n = 0, len(script)
-    while i < n:
-        ch = script[i]
-        if ch in ("'", '"'):
-            q = ch
-            buf.append(ch)
-            i += 1
-            while i < n:
-                buf.append(script[i])
-                if script[i] == "\\" and i + 1 < n:  # escaped char inside literal
-                    buf.append(script[i + 1])
-                    i += 2
-                    continue
-                if script[i] == q:
-                    i += 1
-                    break
-                i += 1
-        elif script.startswith("--", i):
-            j = script.find("\n", i)
-            j = n if j < 0 else j + 1
-            buf.append(script[i:j])
-            i = j
-        elif script.startswith("/*", i):
-            j = script.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            buf.append(script[i:j])
-            i = j
-        elif ch == ";":
-            stmt = "".join(buf).strip()
-            if stmt:
-                out.append(stmt)
-            buf = []
-            i += 1
-        else:
-            buf.append(ch)
-            i += 1
-    stmt = "".join(buf).strip()
-    if stmt:
-        out.append(stmt)
-    return out
+from dbt_maxcompute_spark.plans.sqltext import split_statements
 
 
 def render_query_comment(meta: "dict | str | None") -> str:
@@ -92,21 +49,34 @@ def inject_query_comment(
     return f"{sql}\n{comment}" if append else f"{comment}\n{sql}"
 
 
+def run_script(
+    spark: SparkSession,
+    execute: Callable[[str], "DataFrame | None"],
+    script: str,
+    query_comment: "dict | str | None" = None,
+    comment_append: bool = False,
+) -> tuple[DataFrame | None, dict[str, str], list[str]]:
+    """The script loop: the SET preamble becomes scoped confs, each
+    statement gets the query comment and goes to ``execute``. Returns
+    (last statement's result or None for an empty script, recorded
+    inert hints, parse errors)."""
+    parsed = parse_set_preamble(script)
+    apply, record = split_hints(parsed.settings)
+    last = None
+    with scoped_confs(spark, apply):
+        for stmt in split_statements(parsed.remaining_query):
+            last = execute(inject_query_comment(stmt, query_comment, comment_append))
+    return last, record, parsed.errors
+
+
 def run_raw(
     spark: SparkSession,
     script: str,
     query_comment: "dict | str | None" = None,
     comment_append: bool = False,
 ) -> tuple[DataFrame | None, dict[str, str], list[str]]:
-    """Execute a raw script. Returns (last statement's DataFrame or
-    None for an empty script, recorded inert hints, parse errors).
-    `query_comment` is injected into every executed statement (the
-    statement splitter and Spark's parser both tolerate it — the
-    reference's query-comment contract)."""
-    parsed = parse_set_preamble(script)
-    apply, record = split_hints(parsed.settings)
-    last: DataFrame | None = None
-    with scoped_confs(spark, apply):
-        for stmt in split_statements(parsed.remaining_query):
-            last = spark.sql(inject_query_comment(stmt, query_comment, comment_append))
-    return last, record, parsed.errors
+    """Execute a raw script statement by statement via ``spark.sql``
+    (see :func:`run_script`). `query_comment` is injected into every
+    executed statement (the statement splitter and Spark's parser both
+    tolerate it — the reference's query-comment contract)."""
+    return run_script(spark, spark.sql, script, query_comment, comment_append)

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dbt_maxcompute_spark.localframe import local_frame
+from dbt_maxcompute_spark.plans.sqltext import quote
 
 # Knuth multiplicative hash over 32 bits: portable plain-SQL integer
 # arithmetic (id * 2654435761 mod 2^32), reproducible in any engine.
@@ -175,9 +176,9 @@ def oracle_sql_for_mixture(
     same table) so the oracle stays a static string; it must reproduce
     the Python-side budget with the same IEEE operation order."""
     cases = " ".join(
-        f"WHEN '{g}' THEN {float(t)!r}" for g, t in targets.items()
+        f"WHEN {quote(g)} THEN {float(t)!r}" for g, t in targets.items()
     )
-    in_list = ", ".join(f"'{g}'" for g in targets)
+    in_list = ", ".join(quote(g) for g in targets)
     return f"""
 WITH b AS (SELECT CAST(({budget_sql}) AS DOUBLE) AS budget),
 ranked AS (

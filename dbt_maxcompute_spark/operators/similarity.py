@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from dbt_maxcompute_spark.localframe import local_frame
 from dbt_maxcompute_spark.operators import vecmath
+from dbt_maxcompute_spark.plans.sqltext import quote
 
 # ---------------------------------------------------------------------------
 # vector expressions (pure Catalyst)
@@ -252,12 +253,9 @@ def _neg_idx_arr(n: int) -> Column:
 
 def _lit_ids(ids: list, as_string: bool = False) -> Column:
     """Id lookup array in ONE SQL parse when the ids render exactly:
-    ints within the type :func:`_ids_sql_type` reports, or strings
-    drawn from a quote-free charset. Anything else falls back to the
-    element-wise ``F.lit`` form (C py4j calls — correct, just slower),
-    so the rendered path never has to reason about SQL escaping."""
-    import re
-
+    ints within the type :func:`_ids_sql_type` reports, or any strings
+    (``sqltext.quote``). Other id types fall back to the element-wise
+    ``F.lit`` form (C py4j calls — correct, just slower)."""
     vals = [str(i) for i in ids] if as_string else list(ids)
     t = _ids_sql_type(vals)
     if ids and t in ("int", "long"):
@@ -265,12 +263,8 @@ def _lit_ids(ids: list, as_string: bool = False) -> Column:
         return F.expr(
             "array(" + ",".join(f"{int(i)}{sfx}" for i in vals) + ")"
         )
-    if ids and t == "string" and all(
-        re.fullmatch(r"[A-Za-z0-9_\-:. ]*", s) for s in vals
-    ):
-        return F.expr(
-            "array(" + ",".join(f"'{s}'" for s in vals) + ")"
-        )
+    if ids and t == "string":
+        return F.expr("array(" + ",".join(quote(s) for s in vals) + ")")
     return F.array(*[F.lit(i) for i in vals])
 
 

@@ -48,6 +48,19 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+from dbt_maxcompute_spark.plans.sqltext import (
+    find_close,
+    is_literal,
+    is_quoted_ident,
+    mask_sql,
+    split_literals,
+    split_top_level,
+    strip_outer_parens,
+    tokens,
+    top_level_iter,
+    unquote,
+)
+
 _SQL_KEYWORDS = frozenset(
     """and or not in like between is null true false case when then else end
     cast as date timestamp interval exists distinct""".split()
@@ -70,32 +83,39 @@ _ROLLUP_RX = re.compile(
 
 
 def _norm(s: str) -> str:
-    """Whitespace/case normalization that PRESERVES string literals:
-    normalized text is both compared (exact/containment match — still
-    symmetric) and EMITTED into the rewritten SQL, where lowercasing a
-    literal like 'R' would silently change the predicate's meaning."""
-    s = s.strip().rstrip(";").strip()
-    parts = re.split(r"('[^']*')", s)
-    return "".join(
-        p if p.startswith("'") else re.sub(r"\s+", " ", p).lower() for p in parts
-    )
+    """Whitespace/case normalization that PRESERVES string literals
+    (comments drop): normalized text is both compared (exact/containment
+    match — still symmetric) and EMITTED into the rewritten SQL, where
+    lowercasing a literal like 'R' would silently change the
+    predicate's meaning."""
+    parts = split_literals(s)
+    s = "".join(p if i % 2 else re.sub(r"\s+", " ", p).lower() for i, p in enumerate(parts))
+    return s.strip().rstrip(";").strip()
 
 
-def _split_top(s: str) -> list[str]:
-    """Split on top-level commas (parens nest)."""
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur).strip())
-    return parts
+def _code(s: str) -> str:
+    """``s`` with its string literals (and comments) removed."""
+    return " ".join(split_literals(s)[::2])
+
+
+_EMPTY_ITEM_RX = re.compile(r"(?:^|,)\s*(?:,|$)")
+
+
+def _items(s: str) -> list[str] | None:
+    """Top-level comma-separated items; None when a list item is empty
+    (not valid SQL, so not in-grammar)."""
+    mask = mask_sql(s)
+    return None if _EMPTY_ITEM_RX.search(mask) else split_top_level(s, mask)
+
+
+def _match(rx: re.Pattern, s: str) -> dict | None:
+    """``rx`` matched over the mask of ``s`` (so no clause keyword is
+    found inside a literal); groups sliced from ``s``, unmatched ones
+    None."""
+    m = rx.match(mask_sql(s))
+    if m is None:
+        return None
+    return {k: s[m.start(k):m.end(k)] if v is not None else None for k, v in m.groupdict().items()}
 
 
 @dataclass
@@ -118,11 +138,6 @@ class _Rollup:
     having: str | None = None
 
 
-_CANON_TOKEN_RX = re.compile(
-    r"'[^']*'|>=|<=|<>|!=|\|\||[A-Za-z_]\w*|\d+(?:\.\d+)?|\S"
-)
-
-
 def _canon_expr(s: str) -> str:
     """EXPRESSION-normalized form (round-7 rewrite breadth): tokenize
     and re-join with single spaces so ``x+1`` == ``x + 1``, lowercase
@@ -130,15 +145,7 @@ def _canon_expr(s: str) -> str:
     Purely lexical — no algebra (``2*x`` vs ``x*2`` stays unmatched,
     fail-closed). The output is valid SQL (tokens joined by spaces),
     so canonical text can be both compared AND emitted."""
-    out = []
-    for t in _CANON_TOKEN_RX.findall(s):
-        if t.startswith("'"):
-            out.append(t)
-        elif t == "`":
-            continue
-        else:
-            out.append(t.lower())
-    return " ".join(out)
+    return " ".join(t if is_literal(t) else t.lower() for t in tokens(s))
 
 
 def _parse_item(item: str) -> _Item | None:
@@ -172,11 +179,11 @@ def _parse_item(item: str) -> _Item | None:
 
 def parse_rollup(sql: str) -> _Rollup | None:
     """Parse the restricted rollup grammar; None = not in-grammar."""
-    m = _ROLLUP_RX.match(_norm(sql))
-    if not m:
+    m = _match(_ROLLUP_RX, _norm(sql))
+    if not m or (raw_items := _items(m["select"])) is None:
         return None
     items = []
-    for raw in _split_top(m["select"]):
+    for raw in raw_items:
         it = _parse_item(raw)
         if it is None:
             return None
@@ -194,34 +201,10 @@ def parse_rollup(sql: str) -> _Rollup | None:
     )
 
 
-def _literal_spans(text: str) -> list[tuple[int, int]]:
-    """Half-open [start, end) spans of single-quoted string literals,
-    with the SQL '' escape treated as a continuation of the literal."""
-    spans: list[tuple[int, int]] = []
-    i, n = 0, len(text)
-    while i < n:
-        if text[i] == "'":
-            start = i
-            i += 1
-            while i < n:
-                if text[i] == "'":
-                    if i + 1 < n and text[i + 1] == "'":
-                        i += 2  # escaped quote: still inside
-                        continue
-                    i += 1
-                    break
-                i += 1
-            spans.append((start, i))
-        else:
-            i += 1
-    return spans
-
-
 def _where_identifiers(where: str) -> set[str]:
-    no_strings = re.sub(r"'[^']*'", "", where)
     return {
         t
-        for t in re.findall(r"[a-z_]\w*", no_strings)
+        for t in re.findall(r"[a-z_]\w*", _code(where))
         if t not in _SQL_KEYWORDS and not t.isdigit()
     }
 
@@ -241,30 +224,20 @@ def _conjuncts(where: str | None) -> list[str]:
         return []
     # canonical tokens (round 7): operators split from operands, so
     # ``x>5`` and ``x > 5`` produce identical conjunct text
-    toks = _CANON_TOKEN_RX.findall(where)
-    depth = 0
-    between_pending = 0
-    parts: list[list[str]] = [[]]
-    top_level_or = False
-    for t in toks:
-        low = t.lower()
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        if depth == 0 and low == "between":
+    mask = mask_sql(where)
+    if top_level_iter(mask, r"\bor\b"):
+        return [" ".join(tokens(where))]
+    parts, start, between_pending = [], 0, 0
+    for m in top_level_iter(mask, r"\b(?:between|and)\b"):
+        if m.group().lower() == "between":
             between_pending += 1
-        if depth == 0 and low == "and" and between_pending == 0:
-            parts.append([])
-            continue
-        if depth == 0 and low == "and" and between_pending:
-            between_pending -= 1
-        if depth == 0 and low == "or":
-            top_level_or = True
-        parts[-1].append(t)
-    if top_level_or:
-        return [" ".join(toks)]
-    return [" ".join(p) for p in parts if p]
+        elif between_pending:
+            between_pending -= 1  # the AND of a BETWEEN
+        else:
+            parts.append(where[start:m.start()])
+            start = m.end()
+    parts.append(where[start:])
+    return [" ".join(toks) for p in parts if (toks := tokens(p))]
 
 
 # re-aggregation function per user aggregate: sums and counts add,
@@ -276,9 +249,20 @@ _AGG_CALL_RX = re.compile(r"\b(sum|count|min|max|avg)\s*\(")
 _RANGE_RX = re.compile(
     r"^([a-z_]\w*)\s*(<=|>=|<|>|=)\s*(-\s*)?(\d+(?:\.\d+)?)$"
 )
-_STR_RANGE_RX = re.compile(
-    r"^([a-z_]\w*)\s*(<=|>=|<|>|=)\s*('[^']*')$"
-)
+_CMP_OPS = frozenset({"<=", ">=", "<", ">", "="})
+
+
+def _str_range(conjunct: str) -> tuple[str, str, str] | None:
+    """(column, op, literal value) of a ``col op 'text'`` conjunct."""
+    toks = tokens(conjunct)
+    if (
+        len(toks) == 3
+        and _IDENT_RX.match(toks[0])
+        and toks[1] in _CMP_OPS
+        and is_literal(toks[2])
+    ):
+        return toks[0], toks[1], unquote(toks[2])
+    return None
 
 
 def _implies(user_c: str, mv_c: str) -> bool:
@@ -299,11 +283,9 @@ def _implies(user_c: str, mv_c: str) -> bool:
     # string-literal ranges (the date-partition case: pt >= '2024-01'):
     # Python code-point order equals Spark's binary UTF8 comparison,
     # so lexicographic implication on the literal CONTENT is sound
-    su, sm = _STR_RANGE_RX.match(user_c), _STR_RANGE_RX.match(mv_c)
-    if su and sm and su.group(1) == sm.group(1):
-        return _range_implies(
-            su.group(2), su.group(3)[1:-1], sm.group(2), sm.group(3)[1:-1]
-        )
+    su, sm = _str_range(user_c), _str_range(mv_c)
+    if su and sm and su[0] == sm[0]:
+        return _range_implies(su[1], su[2], sm[1], sm[2])
     return False
 
 
@@ -328,40 +310,12 @@ def _range_implies(uop: str, uval, mop: str, mval) -> bool:
     return uop == "=" and uval == mval  # mop == "="
 
 
-def _strip_wrapping_parens(s: str) -> str:
-    """Remove balanced outer paren pairs that wrap the WHOLE text."""
-    s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        for i, ch in enumerate(s):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i < len(s) - 1:
-                    return s  # closes early: not a wrapping pair
-        s = s[1:-1].strip()
-    return s
-
-
 def _disjuncts(conjunct: str) -> list[str]:
     """Split one (canonical-token) conjunct into top-level OR
     disjuncts, after stripping wrapping parens. A conjunct with no
     top-level OR returns itself as the single disjunct."""
-    text = _strip_wrapping_parens(conjunct)
-    toks = _CANON_TOKEN_RX.findall(text)
-    depth = 0
-    parts: list[list[str]] = [[]]
-    for t in toks:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        if depth == 0 and t == "or":
-            parts.append([])
-            continue
-        parts[-1].append(t)
-    return [" ".join(p) for p in parts if p]
+    text = strip_outer_parens(conjunct)
+    return [" ".join(tokens(p)) for p in split_top_level(text, mask_sql(text), r"\bor\b")]
 
 
 def _implies_or(user_c: str, mv_c: str) -> bool:
@@ -374,7 +328,7 @@ def _implies_or(user_c: str, mv_c: str) -> bool:
     text or numeric range implication; anything else fails closed."""
 
     def atom_implies(ua: str, ma: str) -> bool:
-        ua, ma = _strip_wrapping_parens(ua), _strip_wrapping_parens(ma)
+        ua, ma = strip_outer_parens(ua), strip_outer_parens(ma)
         return ua == ma or _implies(ua, ma)
 
     def disj_implies_atom(ud: str, ma: str) -> bool:
@@ -409,7 +363,7 @@ def _parse_join_tree(from_text: str):
     cond)*``. Returns (tables, on_conds) — tables as (name, alias)
     pairs, on_conds as token-joined ON texts — or None for anything
     else (subquery, outer/cross/comma join, USING): fail closed."""
-    toks = _CANON_TOKEN_RX.findall(from_text)
+    toks = tokens(from_text)
     n = len(toks)
 
     def table_ref(i):
@@ -500,7 +454,7 @@ def _retarget(text: str, qmap: dict, single: bool) -> str:
     aliases become table names; with ``single`` (one-table FROM) the
     qualifier drops entirely, so ``o.price`` and bare ``price``
     normalize identically. Literals pass through untouched."""
-    toks = _CANON_TOKEN_RX.findall(text)
+    toks = tokens(text)
     out: list[str] = []
     i, n = 0, len(toks)
     while i < n:
@@ -617,12 +571,11 @@ def _parse_view_body(sql: str):
     over any FROM text. Returns None (fail closed) for anything else:
     rollup views, DISTINCT, set ops, window functions, subqueries."""
     norm = _norm(sql)
-    if _VIEW_BLOCKERS_RX.search(re.sub(r"'[^']*'", "", norm)):
+    if _VIEW_BLOCKERS_RX.search(_code(norm)):
         return None
-    m = _VIEW_BODY_RX.match(norm)
-    if m is None or "(" in m["table"]:
+    m = _match(_VIEW_BODY_RX, norm)
+    if m is None or "(" in m["table"] or (items := _items(m["select"])) is None:
         return None
-    items = _split_top(m["select"])
     if items == ["*"]:
         colmap = None
     else:
@@ -676,12 +629,12 @@ def _subst_view_refs(
     against the view and must not be answered from the MV."""
     if text is None:
         return None
-    toks = _CANON_TOKEN_RX.findall(text)
+    toks = tokens(text)
     out: list[str] = []
     i, n = 0, len(toks)
     while i < n:
         t = toks[i]
-        if t.startswith("'"):
+        if is_literal(t):
             out.append(t)
             i += 1
             continue
@@ -703,11 +656,11 @@ def _subst_view_refs(
             and (not out or out[-1] != ".")
             and (i >= n or toks[i] != ".")
         ):
-            out.extend(_CANON_TOKEN_RX.findall(colmap[t]))
+            out.extend(tokens(colmap[t]))
         else:
             if (
                 colmap is not None
-                and _IDENT_RX.match(t or "")
+                and (_IDENT_RX.match(t) or is_quoted_ident(t))
                 and t not in _SQL_BARE_TOKENS
                 and not (i < n and toks[i] == "(")  # function call
                 and not (out and out[-1] == ".")  # handled below as chain
@@ -802,14 +755,13 @@ def _subst_keys(text: str, key_out: dict) -> str:
     like ``status = 'status pending'`` must keep its literal intact
     (rewriting data text would silently change the predicate while the
     emitted SQL still analyzes fine, so the fallback never fires)."""
-    segments = re.split(r"('[^']*')", text)
+    segments = split_literals(text)
     for k in sorted(key_out, key=len, reverse=True):
         pat = re.compile(
             r"\b" + r"\s*\.\s*".join(re.escape(p) for p in k.split(".")) + r"\b"
         )
         segments = [
-            s if s.startswith("'") else pat.sub(key_out[k], s)
-            for s in segments
+            s if i % 2 else pat.sub(key_out[k], s) for i, s in enumerate(segments)
         ]
     return "".join(segments)
 
@@ -841,65 +793,24 @@ def _reagg_expr(func: str, arg: str, mv_aggs: dict) -> str | None:
     return f"{_REAGG[func]}({src})"
 
 
-def _scan_close(text: str, open_i: int) -> int:
-    """Index of the paren closing ``text[open_i]``, skipping quoted
-    literals; -1 if unbalanced."""
-    depth, i, n = 0, open_i, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            i += 1
-            while i < n and text[i] != "'":
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return -1
-
-
 def _rewrite_having(having: str, mv_aggs: dict, allowed_idents: set[str]) -> str | None:
     """Rewrite a (normalized) user HAVING clause over the MV's columns:
     each aggregate call becomes its re-aggregation expression; every
     identifier OUTSIDE aggregate arguments must be a grouping key or a
     select alias (anything else does not survive the rollup — fail
     closed)."""
-    spans = _literal_spans(having)
-
-    def _containing_span(i: int):
-        for s, e in spans:
-            if s <= i < e:
-                return (s, e)
-        return None
-
+    mask = mask_sql(having)
     out: list[str] = []
     plain: list[str] = []  # non-replaced segments, for the ident check
     pos = 0
-    while True:
-        m = _AGG_CALL_RX.search(having, pos)
-        if not m:
-            seg = having[pos:]
-            out.append(seg)
-            plain.append(seg)
-            break
-        span = _containing_span(m.start())
-        if span is not None:
-            # agg-looking text inside a quoted literal is DATA, not an
-            # aggregate call — copy through to the literal's end
-            seg = having[pos:span[1]]
-            out.append(seg)
-            plain.append(seg)
-            pos = span[1]
-            continue
+    while m := _AGG_CALL_RX.search(mask, pos):
         seg = having[pos:m.start()]
         out.append(seg)
         plain.append(seg)
         open_i = m.end() - 1
-        close_i = _scan_close(having, open_i)
-        if close_i < 0:
+        try:
+            close_i = find_close(mask, open_i)
+        except ValueError:
             return None
         arg = _canon_expr(_norm(having[open_i + 1:close_i]))
         if m.group(1).lower() == "count" and arg == "1":
@@ -909,6 +820,8 @@ def _rewrite_having(having: str, mv_aggs: dict, allowed_idents: set[str]) -> str
             return None
         out.append(expr)
         pos = close_i + 1
+    out.append(having[pos:])
+    plain.append(having[pos:])
     leftover = _where_identifiers(" ".join(plain))
     if not leftover <= allowed_idents:
         return None

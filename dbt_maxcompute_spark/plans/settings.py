@@ -10,8 +10,9 @@ reproduced here:
 - only the *preamble* is scanned: the scan stops at the first
   non-comment, non-SET content (a later ``set ...`` belongs to the
   query text);
-- ``--`` line comments and ``/* */`` block comments may interleave the
-  preamble and survive into the remaining query;
+- ``--`` line comments and ``/* */`` block comments (lexed by
+  ``sqltext``, as Spark lexes them) may interleave the preamble and
+  survive into the remaining query;
 - values may escape semicolons as ``\\;``;
 - malformed statements (missing ``=``, empty key, missing ``;``)
   are reported as errors and left in place.
@@ -33,6 +34,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from dbt_maxcompute_spark.plans.sqltext import skip_comments
+
 # hints the reference consumes without sending anywhere (wrapper.py:84-94)
 PSEUDO_HINTS = ("dbt.execution_mode", "dbt.quota_name")
 
@@ -42,22 +45,6 @@ class ParsedScript:
     settings: dict[str, str] = field(default_factory=dict)
     remaining_query: str = ""
     errors: list[str] = field(default_factory=list)
-
-
-def _scan_line_comment(s: str, i: int) -> int:
-    """Position after a `--` comment (past the newline)."""
-    while i < len(s) and s[i] != "\n":
-        i += 1
-    return i + 1 if i < len(s) else i
-
-
-def _scan_block_comment(s: str, i: int) -> int:
-    """Position after a `/* */` comment (unterminated runs to EOF)."""
-    while i < len(s):
-        if s.startswith("*/", i):
-            return i + 2
-        i += 1
-    return i
 
 
 def _scan_kv(s: str, i: int) -> tuple[int, str | None]:
@@ -76,15 +63,8 @@ def parse_set_preamble(script: str) -> ParsedScript:
     out = ParsedScript()
     cut: list[tuple[int, int]] = []  # [start, end) ranges to remove
     i, n = 0, len(script)
-    while i < n:
-        ch = script[i]
-        if ch.isspace():
-            i += 1
-        elif script.startswith("--", i):
-            i = _scan_line_comment(script, i + 2)
-        elif script.startswith("/*", i):
-            i = _scan_block_comment(script, i + 2)
-        elif script[i : i + 3].lower() == "set" and i + 3 < n and script[i + 3].isspace():
+    while (i := skip_comments(script, i)) < n:
+        if script[i : i + 3].lower() == "set" and i + 3 < n and script[i + 3].isspace():
             stmt_start = i
             j = i + 4
             while j < n and script[j].isspace():

@@ -21,10 +21,8 @@ and routes everything else to ``catalog.sql`` unchanged. Row-level
 DELETE/UPDATE/MERGE require ``transactional=true`` — the same
 contract the reference enforces server-side.
 
-Parsing works on a MASK of the statement (string literals and comments
-blanked to spaces, length-preserving) so keyword scans and split
-points can use plain regex without being fooled by quoted text, while
-every extracted fragment is sliced from the ORIGINAL text.
+Statements are parsed over ``sqltext.mask_sql``'s mask, so the
+statement regexes below never match inside quoted text.
 
 All execution is Spark-declarative: UPDATE and MERGE build ONE
 projection over a (joined) snapshot frame — no per-row Python — and
@@ -40,90 +38,19 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, functions as F
 from dbt_maxcompute_spark.localframe import local_frame
+from dbt_maxcompute_spark.plans.sqltext import (
+    find_close,
+    is_literal,
+    mask_sql,
+    split_top_level,
+    strip_outer_parens,
+    top_level_iter,
+    unquote,
+)
 from dbt_maxcompute_spark.txnlog import guard_raised_as_value_error, retry_commit
 
 if TYPE_CHECKING:
     from dbt_maxcompute_spark.catalog import EngineCatalog
-
-
-# ---------------------------------------------------------------------------
-# masking + top-level scanning
-# ---------------------------------------------------------------------------
-
-def mask_sql(sql: str) -> str:
-    """Length-preserving mask: string literals, quoted identifiers and
-    comments become runs of spaces so regexes over the mask cannot
-    match inside them, and every match position is valid in ``sql``."""
-    out = list(sql)
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            q = ch
-            i += 1
-            while i < n:
-                if sql[i] == "\\" and i + 1 < n:
-                    out[i] = out[i + 1] = " "
-                    i += 2
-                    continue
-                if sql[i] == q:
-                    # '' style escaped quote
-                    if q == "'" and i + 1 < n and sql[i + 1] == q:
-                        out[i] = out[i + 1] = " "
-                        i += 2
-                        continue
-                    break
-                out[i] = " "
-                i += 1
-            i += 1
-        elif sql.startswith("--", i):
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            for k in range(i, j):
-                out[k] = " "
-            i = j
-        elif sql.startswith("/*", i):
-            j = sql.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            for k in range(i, j):
-                out[k] = " "
-            i = j
-        else:
-            i += 1
-    return "".join(out)
-
-
-def _split_top_level(text: str, masked: str, sep: str = ",") -> list[str]:
-    """Split ``text`` on ``sep`` occurring at paren depth 0 (depth
-    tracked on the mask)."""
-    parts, depth, start = [], 0, 0
-    for i, ch in enumerate(masked):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == sep and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-    parts.append(text[start:])
-    return [p.strip() for p in parts if p.strip()]
-
-
-def _top_level_iter(masked: str, pattern: str) -> list[re.Match]:
-    """Regex matches in the mask at paren depth 0 only."""
-    depth_at = []
-    d = 0
-    for ch in masked:
-        depth_at.append(d)
-        if ch == "(":
-            d += 1
-        elif ch == ")":
-            d -= 1
-    return [
-        m
-        for m in re.finditer(pattern, masked, re.IGNORECASE)
-        if depth_at[m.start()] == 0
-    ]
 
 
 # ---------------------------------------------------------------------------
@@ -153,7 +80,7 @@ def rewrite_time_travel(catalog: "EngineCatalog", sql: str) -> str:
         if m.group("ver") is not None:
             version = int(m.group("ver"))
         else:
-            version = _version_at_timestamp(catalog, tbl, sql[m.start("ts") + 1:m.end("ts") - 1])
+            version = _version_at_timestamp(catalog, tbl, _lit(sql, m, "ts"))
         view = f"__tt_{tbl.replace('.', '_')}_v{version}"
         catalog.read(tbl, version=version).createOrReplaceTempView(view)
         out.append(sql[last:m.start()])
@@ -190,13 +117,13 @@ def _rewrite_table_changes(catalog: "EngineCatalog", sql: str) -> str:
             return v - 1 if is_start else v
         except ValueError:
             pass
-        if len(text) >= 2 and text[0] in "'\"" and text[-1] == text[0]:
+        if is_literal(text):
             # Delta CDF boundary semantics: the START timestamp is
             # from-INCLUSIVE (first commit >= ts), the END keeps the
             # AS-OF rule (newest commit <= ts)
             if is_start:
-                return _start_version_at_timestamp(catalog, tbl, text[1:-1])
-            return _version_at_timestamp(catalog, tbl, text[1:-1])
+                return _start_version_at_timestamp(catalog, tbl, unquote(text))
+            return _version_at_timestamp(catalog, tbl, unquote(text))
         return None
 
     masked = mask_sql(sql)
@@ -206,9 +133,9 @@ def _rewrite_table_changes(catalog: "EngineCatalog", sql: str) -> str:
         if close < 0:
             continue
         args = [a.strip() for a in sql[m.end():close].split(",")]
-        if len(args) not in (2, 3) or not args[0][:1] in "'\"":
+        if len(args) not in (2, 3) or not is_literal(args[0]):
             continue
-        tbl = args[0].strip("'\"")
+        tbl = unquote(args[0])
         v0 = _bound(args[1], is_start=True)
         v1 = _bound(args[2]) if len(args) == 3 else None
         if v0 is None or (len(args) == 3 and v1 is None):
@@ -550,9 +477,26 @@ _DESCRIBE_RE = re.compile(
 )
 
 
-def _unquote(lit: str) -> str:
-    """Undo a single-quoted SQL literal ('' escape included)."""
-    return lit[1:-1].replace("''", "'")
+def _lit(stmt: str, m: re.Match, group: str) -> str | None:
+    """Value of the literal a mask regex captured as ``group``."""
+    return unquote(stmt[m.start(group):m.end(group)]) if m.group(group) else None
+
+
+def _prop(text: str) -> str:
+    """A property key or value: a literal's value, else the bare name."""
+    text = text.strip()
+    return unquote(text) if is_literal(text) else text.strip("`")
+
+
+def _props(body: str, bmask: str, what: str) -> dict[str, str]:
+    """``k = v`` property entries of a TBLPROPERTIES list body."""
+    props: dict[str, str] = {}
+    for part in split_top_level(body, bmask):
+        eq = mask_sql(part).find("=")
+        if eq < 0:
+            raise ValueError(f"{what}: malformed entry {part!r}")
+        props[_prop(part[:eq])] = _prop(part[eq + 1:])
+    return props
 
 
 def parse_create_mv(stmt: str, masked: str, m: re.Match) -> dict:
@@ -563,13 +507,13 @@ def parse_create_mv(stmt: str, masked: str, m: re.Match) -> dict:
     TBLPROPERTIES("k"="v", ...), then AS (sql)."""
     as_ms = [
         am
-        for am in _top_level_iter(masked[m.end():], r"\bAS\b")
+        for am in top_level_iter(masked[m.end():], r"\bAS\b")
     ]
     if not as_ms:
         raise ValueError("CREATE MATERIALIZED VIEW: missing AS")
     a = as_ms[0]
     head, hmask = stmt[m.end():m.end() + a.start()], masked[m.end():m.end() + a.start()]
-    body = _strip_outer_parens(stmt[m.end() + a.end():])
+    body = strip_outer_parens(stmt[m.end() + a.end():])
     spec: dict = {
         "table": m.group("tbl"),
         "if_not_exists": bool(m.group("ifnex")),
@@ -590,37 +534,28 @@ def parse_create_mv(stmt: str, masked: str, m: re.Match) -> dict:
     if re.search(r"\bDISABLE\s+REWRITE\b", hmask, re.IGNORECASE):
         spec["disable_rewrite"] = True
     cm = next(
-        iter(_top_level_iter(hmask, r"\bCOMMENT\s+('[^']*')")), None
+        iter(top_level_iter(hmask, r"\bCOMMENT\s+('[^']*')")), None
     )
     if cm:
-        spec["comment"] = _unquote(head[cm.start(1):cm.end(1)])
+        spec["comment"] = unquote(head[cm.start(1):cm.end(1)])
     pm = re.search(r"\bPARTITIONED\s+(?:BY|ON)\s*\(", hmask, re.IGNORECASE)
     if pm:
         open_i = hmask.index("(", pm.start())
-        close_i = _find_close(hmask, open_i)
+        close_i = find_close(hmask, open_i)
         spec["partition_by"] = [
             # strip any type suffix ("pt string" and bare "pt" both occur)
             p.split()[0].strip("`")
-            for p in _split_top_level(
+            for p in split_top_level(
                 head[open_i + 1:close_i], hmask[open_i + 1:close_i]
             )
         ]
     tm = re.search(r"\bTBLPROPERTIES\s*\(", hmask, re.IGNORECASE)
     if tm:
         open_i = hmask.index("(", tm.start())
-        close_i = _find_close(hmask, open_i)
-        props: dict[str, str] = {}
-        for part in _split_top_level(
-            head[open_i + 1:close_i], hmask[open_i + 1:close_i]
-        ):
-            kv = re.match(
-                r"""\s*["'](?P<k>[^"']*)["']\s*=\s*["'](?P<v>[^"']*)["']\s*$""",
-                part,
-            )
-            if not kv:
-                raise ValueError(f"TBLPROPERTIES: malformed entry {part!r}")
-            props[kv.group("k")] = kv.group("v")
-        spec["tblproperties"] = props
+        close_i = find_close(hmask, open_i)
+        spec["tblproperties"] = _props(
+            head[open_i + 1:close_i], hmask[open_i + 1:close_i], "TBLPROPERTIES"
+        )
     # optional explicit column list: the FIRST top-level paren group,
     # only when it is not the PARTITIONED BY / TBLPROPERTIES group
     first_paren = hmask.find("(")
@@ -629,45 +564,17 @@ def parse_create_mv(stmt: str, masked: str, m: re.Match) -> dict:
         if sm:
             claimed.add(hmask.index("(", sm.start()))
     if first_paren >= 0 and first_paren not in claimed:
-        close_i = _find_close(hmask, first_paren)
+        close_i = find_close(hmask, first_paren)
         cols: dict[str, str | None] = {}
-        for part in _split_top_level(
+        for part in split_top_level(
             head[first_paren + 1:close_i], hmask[first_paren + 1:close_i]
         ):
             pmask = mask_sql(part)
             ccm = re.search(r"\bCOMMENT\s+('[^']*')", pmask, re.IGNORECASE)
             name = part.split()[0].strip("`")
-            cols[name] = _unquote(part[ccm.start(1):ccm.end(1)]) if ccm else None
+            cols[name] = unquote(part[ccm.start(1):ccm.end(1)]) if ccm else None
         spec["columns"] = cols
     return spec
-
-
-def _strip_outer_parens(text: str) -> str:
-    """Remove ONE balanced outer paren pair if it wraps the whole text."""
-    s = text.strip()
-    if not (s.startswith("(") and s.endswith(")")):
-        return s
-    depth = 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0 and i < len(s) - 1:
-                return s  # closes early: not a wrapping pair
-    return s[1:-1].strip()
-
-
-def _find_close(masked: str, open_i: int) -> int:
-    depth = 0
-    for i in range(open_i, len(masked)):
-        if masked[i] == "(":
-            depth += 1
-        elif masked[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    raise ValueError("unbalanced parentheses")
 
 
 _COLDEF_RE = re.compile(
@@ -684,17 +591,17 @@ def parse_create_columns(stmt: str, masked: str, m: re.Match) -> dict:
     LIFECYCLE and a table COMMENT. Returns a spec dict for
     ``_exec_create_table``."""
     open_i = masked.index("(", m.end() - 1)
-    close_i = _find_close(masked, open_i)
+    close_i = find_close(masked, open_i)
     cols: list[dict] = []
     pk: list[str] = []
-    for entry in _split_top_level(
+    for entry in split_top_level(
         stmt[open_i + 1:close_i], masked[open_i + 1:close_i]
     ):
         emask = mask_sql(entry)
         pm = re.match(r"^\s*PRIMARY\s+KEY\s*\(", emask, re.IGNORECASE)
         if pm:
             k_open = emask.index("(", pm.start())
-            k_close = _find_close(emask, k_open)
+            k_close = find_close(emask, k_open)
             pk = [
                 c.strip().strip("`")
                 for c in entry[k_open + 1:k_close].split(",")
@@ -704,18 +611,14 @@ def parse_create_columns(stmt: str, masked: str, m: re.Match) -> dict:
         if not cm:
             raise ValueError(f"CREATE TABLE: malformed column def {entry!r}")
         rest = cm["rest"]
-        comment = None
-        com = re.search(r"\bCOMMENT\s+'((?:[^']|'')*)'", rest, re.IGNORECASE)
-        if com:
-            comment = com.group(1).replace("''", "'")
+        rmask = mask_sql(rest)
+        com = re.search(r"\bCOMMENT\s+('[^']*')", rmask, re.IGNORECASE)
         cols.append(
             {
                 "name": cm["name"].strip("`"),
                 "type": cm["type"].strip(),
-                "comment": comment,
-                "not_null": bool(
-                    re.search(r"\bNOT\s+NULL\b", mask_sql(rest), re.IGNORECASE)
-                ),
+                "comment": unquote(rest[com.start(1):com.end(1)]) if com else None,
+                "not_null": bool(re.search(r"\bNOT\s+NULL\b", rmask, re.IGNORECASE)),
             }
         )
     tail, tmask = stmt[close_i + 1:], masked[close_i + 1:]
@@ -734,7 +637,7 @@ def parse_create_columns(stmt: str, masked: str, m: re.Match) -> dict:
     am = re.search(r"\bAUTO\s+PARTITIONED\s+BY\s*\(", tmask, re.IGNORECASE)
     if am:
         a_open = tmask.index("(", am.end() - 1)
-        a_close = _find_close(tmask, a_open)
+        a_close = find_close(tmask, a_open)
         body = tail[a_open + 1:a_close]
         tm = re.match(
             r"^\s*trunc_time\s*\(\s*`?(?P<col>\w+)`?\s*,\s*"
@@ -753,8 +656,8 @@ def parse_create_columns(stmt: str, masked: str, m: re.Match) -> dict:
         ptm = re.search(r"\bPARTITIONED\s+BY\s*\(", tmask, re.IGNORECASE)
         if ptm:
             p_open = tmask.index("(", ptm.end() - 1)
-            p_close = _find_close(tmask, p_open)
-            for entry in _split_top_level(
+            p_close = find_close(tmask, p_open)
+            for entry in split_top_level(
                 tail[p_open + 1:p_close], tmask[p_open + 1:p_close]
             ):
                 toks = entry.strip().split(None, 1)
@@ -764,26 +667,19 @@ def parse_create_columns(stmt: str, masked: str, m: re.Match) -> dict:
     tpm = re.search(r"\bTBLPROPERTIES\s*\(", tmask, re.IGNORECASE)
     if tpm:
         t_open = tmask.index("(", tpm.end() - 1)
-        t_close = _find_close(tmask, t_open)
-        for entry in _split_top_level(
-            tail[t_open + 1:t_close], tmask[t_open + 1:t_close]
-        ):
-            k, _, v = entry.partition("=")
-            spec["tblproperties"][k.strip().strip("\"'")] = v.strip().strip("\"'")
+        t_close = find_close(tmask, t_open)
+        spec["tblproperties"] = _props(
+            tail[t_open + 1:t_close], tmask[t_open + 1:t_close], "TBLPROPERTIES"
+        )
     lm = re.search(r"\bLIFECYCLE\s+(\d+)", tmask, re.IGNORECASE)
     if lm:
         spec["lifecycle"] = int(lm.group(1))
     # table-level COMMENT: the first top-level COMMENT in the tail that
     # is NOT part of a partition/tblproperties clause (those were
     # handled above on their own slices)
-    for cmatch in _top_level_iter(tmask, r"\bCOMMENT\b"):
-        lit = re.match(r"\s*'", tmask[cmatch.end():])
-        if lit is not None or tail[cmatch.end():].lstrip().startswith("'"):
-            seg = tail[cmatch.end():].lstrip()
-            em = re.match(r"'((?:[^']|'')*)'", seg)
-            if em:
-                spec["comment"] = em.group(1).replace("''", "'")
-                break
+    cm = next(iter(top_level_iter(tmask, r"\bCOMMENT\s*('[^']*')")), None)
+    if cm:
+        spec["comment"] = unquote(tail[cm.start(1):cm.end(1)])
     return spec
 
 
@@ -794,20 +690,20 @@ def classify(stmt: str):
     masked = mask_sql(stmt)
     m = _DELETE_RE.match(masked)
     if m:
-        wms = _top_level_iter(masked, r"\bWHERE\b")
+        wms = top_level_iter(masked, r"\bWHERE\b")
         where = stmt[wms[0].end():].strip() if wms else None
         return ("delete", m.group("tbl"), where)
     m = _UPDATE_RE.match(masked)
     if m:
         body, mbody = stmt[m.end():], masked[m.end():]
-        wms = _top_level_iter(mbody, r"\bWHERE\b")
+        wms = top_level_iter(mbody, r"\bWHERE\b")
         if wms:
             sets_text, sets_mask = body[: wms[0].start()], mbody[: wms[0].start()]
             where = body[wms[0].end():].strip()
         else:
             sets_text, sets_mask, where = body, mbody, None
         sets: dict[str, str] = {}
-        for part in _split_top_level(sets_text, sets_mask):
+        for part in split_top_level(sets_text, sets_mask):
             col, _, expr = part.partition("=")
             if not expr:
                 raise ValueError(f"malformed SET assignment: {part!r}")
@@ -826,8 +722,8 @@ def classify(stmt: str):
         pm = re.match(r"\s*PARTITION\s*\(", mrest, re.IGNORECASE)
         if pm:
             open_i = mrest.index("(", pm.start())
-            close_i = _find_close(mrest, open_i)
-            for part in _split_top_level(
+            close_i = find_close(mrest, open_i)
+            for part in split_top_level(
                 rest[open_i + 1:close_i], mrest[open_i + 1:close_i]
             ):
                 pname, _, pval = part.partition("=")
@@ -840,7 +736,7 @@ def classify(stmt: str):
             # (otherwise the parenthesised text IS the query — the
             # reference wraps inserted SELECTs in parens)
             open_i = mrest.index("(")
-            close_i = _find_close(mrest, open_i)
+            close_i = find_close(mrest, open_i)
             cand = [
                 c.strip().strip("`")
                 for c in rest[open_i + 1:close_i].split(",")
@@ -881,7 +777,7 @@ def classify(stmt: str):
     m = _CREATE_VIEW_RE.match(masked)
     if m:
         rest_mask = masked[m.end():]
-        as_ms = _top_level_iter(rest_mask, r"\bAS\b")
+        as_ms = top_level_iter(rest_mask, r"\bAS\b")
         if as_ms:
             a = as_ms[0]
             head = stmt[m.end():m.end() + a.start()]
@@ -889,8 +785,8 @@ def classify(stmt: str):
             comment = None
             cm = re.search(r"\bCOMMENT\s+('[^']*')", hmask, re.IGNORECASE)
             if cm:
-                comment = _unquote(head[cm.start(1):cm.end(1)])
-            body = _strip_outer_parens(stmt[m.end() + a.end():])
+                comment = unquote(head[cm.start(1):cm.end(1)])
+            body = strip_outer_parens(stmt[m.end() + a.end():])
             return (
                 "create_view",
                 m.group("tbl"),
@@ -910,7 +806,7 @@ def classify(stmt: str):
         return (
             "set_comment",
             m.group("tbl"),
-            _unquote(stmt[m.start("lit"):m.end("lit")]),
+            _lit(stmt, m, "lit"),
         )
     m = _COL_COMMENT_RE.match(masked)
     if m:
@@ -918,7 +814,7 @@ def classify(stmt: str):
             "set_col_comment",
             m.group("tbl"),
             m.group("col"),
-            _unquote(stmt[m.start("lit"):m.end("lit")]),
+            _lit(stmt, m, "lit"),
         )
     m = _CTAS_RE.match(masked)
     if m:
@@ -970,9 +866,9 @@ def classify(stmt: str):
         return ("truncate", m.group("tbl"))
     m = _ALTER_ADD_RE.match(masked)
     if m:
-        text = _strip_outer_parens(stmt[m.start("cols"):m.end("cols")])
+        text = strip_outer_parens(stmt[m.start("cols"):m.end("cols")])
         add: dict[str, str] = {}
-        for part in _split_top_level(text, mask_sql(text)):
+        for part in split_top_level(text, mask_sql(text)):
             toks = part.strip().split(None, 1)
             if len(toks) != 2:
                 raise ValueError(f"ALTER ADD COLUMNS: malformed {part!r}")
@@ -980,7 +876,7 @@ def classify(stmt: str):
         return ("alter_add", m.group("tbl"), add)
     m = _ALTER_DROP_RE.match(masked)
     if m:
-        text = _strip_outer_parens(stmt[m.start("cols"):m.end("cols")])
+        text = strip_outer_parens(stmt[m.start("cols"):m.end("cols")])
         cols = [c.strip().strip("`") for c in text.split(",")]
         return ("alter_drop", m.group("tbl"), cols)
     m = _ALTER_CHANGE_RE.match(masked)
@@ -999,43 +895,38 @@ def classify(stmt: str):
         )
     m = _SHOW_TABLES_RE.match(masked)
     if m:
-        pat = stmt[m.start("pat") + 1:m.end("pat") - 1] if m.group("pat") else None
+        pat = _lit(stmt, m, "pat")
         return ("show_tables", m.group("schema"), pat)
     m = _SHOW_SCHEMAS_RE.match(masked)
     if m:
-        pat = stmt[m.start("pat") + 1:m.end("pat") - 1] if m.group("pat") else None
+        pat = _lit(stmt, m, "pat")
         return ("show_schemas", pat)
     m = _RESTORE_RE.match(masked)
     if m:
         ver = int(m.group("ver")) if m.group("ver") else None
-        ts = stmt[m.start("ts") + 1:m.end("ts") - 1] if m.group("ts") else None
+        ts = _lit(stmt, m, "ts")
         return ("restore", m.group("tbl"), ver, ts)
     m = _SHOW_PARTITIONS_RE.match(masked)
     if m:
         return ("show_partitions", m.group("tbl"))
     m = _COPY_INTO_RE.match(masked)
     if m:
-        src = stmt[m.start("src") + 1:m.end("src") - 1]
-        pat = stmt[m.start("pat") + 1:m.end("pat") - 1] if m.group("pat") else None
+        src = _lit(stmt, m, "src")
+        pat = _lit(stmt, m, "pat")
         return ("copy_into", m.group("tbl"), src, m.group("fmt").lower(), pat)
     m = _SET_TBLPROPS_RE.match(masked)
     if m:
-        body = stmt[m.start("body"):m.end("body")]
-        bmask = masked[m.start("body"):m.end("body")]
-        props: dict[str, str] = {}
-        for part in _split_top_level(body, bmask):
-            k, eq, v = part.partition("=")
-            if not eq:
-                raise ValueError(f"SET TBLPROPERTIES: malformed {part!r}")
-            props[k.strip().strip("'\"`")] = v.strip().strip("'\"")
+        props = _props(
+            stmt[m.start("body"):m.end("body")],
+            masked[m.start("body"):m.end("body")],
+            "SET TBLPROPERTIES",
+        )
         return ("set_tblprops", m.group("tbl"), props)
     m = _UNSET_TBLPROPS_RE.match(masked)
     if m:
         body = stmt[m.start("body"):m.end("body")]
         bmask = masked[m.start("body"):m.end("body")]
-        keys = [
-            p.strip().strip("'\"`") for p in _split_top_level(body, bmask)
-        ]
+        keys = [_prop(p) for p in split_top_level(body, bmask)]
         return ("unset_tblprops", m.group("tbl"), keys)
     m = _SHOW_TBLPROPS_RE.match(masked)
     if m:
@@ -1061,12 +952,12 @@ def _ident_and_alias(text: str) -> tuple[str, str]:
 def parse_merge(stmt: str, masked: str) -> MergeStmt:
     mm = re.match(r"^\s*MERGE\s+INTO\s+", masked, re.IGNORECASE)
     rest_off = mm.end()
-    using = _top_level_iter(masked, r"\bUSING\b")
+    using = top_level_iter(masked, r"\bUSING\b")
     if not using:
         raise ValueError("MERGE: missing USING")
     u = using[0]
     target, target_alias = _ident_and_alias(stmt[rest_off:u.start()])
-    on = _top_level_iter(masked, r"\bON\b")
+    on = top_level_iter(masked, r"\bON\b")
     on = [m for m in on if m.start() > u.end()]
     if not on:
         raise ValueError("MERGE: missing ON")
@@ -1075,22 +966,14 @@ def parse_merge(stmt: str, masked: str) -> MergeStmt:
     src_mask = masked[u.end():o.start()]
     if src_mask.lstrip().startswith("("):
         open_i = src_mask.index("(")
-        depth, close_i = 0, -1
-        for i in range(open_i, len(src_mask)):
-            if src_mask[i] == "(":
-                depth += 1
-            elif src_mask[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    close_i = i
-                    break
+        close_i = find_close(src_mask, open_i)
         source_sql = src_text[open_i + 1:close_i].strip()
         _, source_alias = _ident_and_alias("q " + src_text[close_i + 1:])
         source_is_query = True
     else:
         source_sql, source_alias = _ident_and_alias(src_text)
         source_is_query = False
-    whens = _top_level_iter(masked, r"\bWHEN\s+(NOT\s+)?MATCHED\b")
+    whens = top_level_iter(masked, r"\bWHEN\s+(NOT\s+)?MATCHED\b")
     whens = [m for m in whens if m.start() > o.end()]
     if not whens:
         raise ValueError("MERGE: no WHEN clauses")
@@ -1118,13 +1001,13 @@ def _parse_when(text: str, mask: str) -> MergeClause:
     rest, rmask = text[m.end():], mask[m.end():]
     cond = None
     if re.match(r"AND\b", rmask, re.IGNORECASE):
-        thens = _top_level_iter(rmask, r"\bTHEN\b")
+        thens = top_level_iter(rmask, r"\bTHEN\b")
         if not thens:
             raise ValueError(f"MERGE: WHEN without THEN: {text!r}")
         cond = rest[3:thens[0].start()].strip()
         rest, rmask = rest[thens[0].end():], rmask[thens[0].end():]
     else:
-        thens = _top_level_iter(rmask, r"\bTHEN\b")
+        thens = top_level_iter(rmask, r"\bTHEN\b")
         if not thens:
             raise ValueError(f"MERGE: WHEN without THEN: {text!r}")
         rest, rmask = rest[thens[0].end():], rmask[thens[0].end():]
@@ -1142,7 +1025,7 @@ def _parse_when(text: str, mask: str) -> MergeClause:
         if body.strip() == "*":
             return MergeClause(matched=True, cond=cond, action="update", star=True)
         sets = {}
-        for part in _split_top_level(body, bmask):
+        for part in split_top_level(body, bmask):
             col, _, expr = part.partition("=")
             if not expr:
                 raise ValueError(f"MERGE: malformed SET: {part!r}")
@@ -1166,7 +1049,7 @@ def _parse_when(text: str, mask: str) -> MergeClause:
         vals_text = body[bm.end():]
         vals_mask = bmask[bm.end():]
         close = vals_mask.rfind(")")
-        vals = _split_top_level(vals_text[:close], vals_mask[:close])
+        vals = split_top_level(vals_text[:close], vals_mask[:close])
         if len(cols) != len(vals):
             raise ValueError("MERGE: INSERT column/value count mismatch")
         return MergeClause(
@@ -1230,7 +1113,7 @@ def execute_statement(catalog: "EngineCatalog", stmt: str) -> DataFrame | None:
         from pyspark.sql import Observation
 
         _, tbl, replace, txn, pk, query = parsed
-        df = catalog.sql(rewrite_time_travel(catalog, _strip_outer_parens(query)))
+        df = catalog.sql(rewrite_time_travel(catalog, strip_outer_parens(query)))
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("n"))
         if replace and catalog.exists(tbl):
@@ -1698,7 +1581,7 @@ def _exec_insert(
 
     from dbt_maxcompute_spark.plans import dml
 
-    src = catalog.sql(rewrite_time_travel(catalog, _strip_outer_parens(query)))
+    src = catalog.sql(rewrite_time_travel(catalog, strip_outer_parens(query)))
     meta = catalog.meta(tbl)
     tcols = catalog.columns(tbl)  # data cols first, then visible pt cols
     tgt_names = [c for c, _ in tcols]

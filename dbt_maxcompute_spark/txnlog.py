@@ -47,6 +47,7 @@ import time
 import uuid
 
 from dbt_maxcompute_spark.localframe import local_frame
+from dbt_maxcompute_spark.plans.sqltext import split_literals, unquote
 from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Any, Callable, Iterable, Iterator
@@ -342,7 +343,6 @@ def _bloom_normalize(value, fam: str):
     return None
 
 
-_COND_LIT_RX = re.compile(r"'[^']*'")
 _COND_TERM_RX = re.compile(
     r"^\s*`?([A-Za-z_][A-Za-z0-9_]*)`?\s*(=|<=|>=|<|>)\s*"
     r"(\x00\d+\x00|-?\d+(?:\.\d+)?)\s*$"
@@ -360,13 +360,9 @@ def _extract_conjuncts(condition: str) -> list[tuple]:
     that isn't `col op literal` is simply skipped (pruning on a subset
     of conjuncts is still sound). String literals are masked before
     splitting so an AND inside quotes can't break a term apart."""
-    lits: list[str] = []
-
-    def _mask(m):
-        lits.append(m.group(0)[1:-1])
-        return f"\x00{len(lits) - 1}\x00"
-
-    masked = _COND_LIT_RX.sub(_mask, condition)
+    pieces = split_literals(condition)
+    lits = [unquote(p) for p in pieces[1::2]]
+    masked = "".join(p if i % 2 == 0 else f"\x00{i // 2}\x00" for i, p in enumerate(pieces))
     if "(" in masked or ")" in masked or _COND_BAIL_RX.search(masked):
         return []
     out = []

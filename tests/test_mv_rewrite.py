@@ -855,3 +855,42 @@ def test_join_mv_from_text_canonical():
                "FROM orders JOIN customer ON o_custkey = c_nationkey "
                "GROUP BY c_mktsegment")
     assert try_rewrite(u_other, [("m", mv)]) is None
+
+
+@pytest.fixture()
+def quote_cat(spark, tmp_path):
+    cat = EngineCatalog(spark, str(tmp_path / "wh_quotes"))
+    cat.create_table(
+        "qt",
+        spark.createDataFrame(
+            [(1, "R", 10.0), (2, "r", 1.0), (3, "it's", 5.0), (4, "its", 7.0)],
+            "k int, c string, v double",
+        ),
+    )
+    return cat
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_double_quoted_literal_keeps_its_case(spark, quote_cat):
+    """"R" and "r" are different string literals: an MV filtered on
+    one must not exact-text match a query filtered on the other."""
+    create_materialized_view(
+        quote_cat, "mv_upper", 'SELECT k, sum(v) AS s FROM qt WHERE c = "R" GROUP BY k'
+    )
+    q = 'SELECT k, sum(v) AS s FROM qt WHERE c = "r" GROUP BY k'
+    assert _rows(quote_cat.sql(q)) == _rows(quote_cat.sql(q, mv_rewrite=False))
+
+
+def test_container_rewrite_emits_doubled_quote_literal(spark, quote_cat):
+    """A residual ``c = 'it''s'`` re-applies over the MV as ONE literal
+    (split in two, Spark would concatenate it to 'its')."""
+    create_materialized_view(
+        quote_cat, "mv_ck", "SELECT c, k, sum(v) AS s FROM qt GROUP BY c, k"
+    )
+    q = "SELECT c, sum(v) AS s FROM qt WHERE c = 'it''s' GROUP BY c"
+    got = quote_cat.sql(q)
+    assert "mv_ck" in "\n".join(got.inputFiles())
+    assert _rows(got) == _rows(quote_cat.sql(q, mv_rewrite=False)) == [("it's", 5.0)]

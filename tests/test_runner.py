@@ -82,6 +82,10 @@ def test_split_statements_quotes_and_comments():
     )
     assert len(stmts) == 3
     assert stmts[0] == "select ';' as a"
+    assert split_statements("select `a;b` from t; select 2") == [
+        "select `a;b` from t",
+        "select 2",
+    ]
 
 
 def test_run_raw_applies_scoped_conf(spark):

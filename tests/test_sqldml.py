@@ -82,6 +82,24 @@ def test_sql_delete_uses_deletion_vector(spark, cat):
     assert t.snapshot(0).files == t.snapshot().files
 
 
+def test_sql_delete_backslash_escaped_literal(spark, cat):
+    """One literal holds ``' and d = 5 and e = '``: a predicate lexer
+    that ends it at the escaped quote reads ``d = 5`` as a conjunct and
+    prunes the file (d is 7..8) that holds the matching row."""
+    cat.create_table(
+        "esc",
+        spark.createDataFrame(
+            [(1, "x' and d = 5 and e = 'y", 7), (2, "z", 8)], "id int, c string, d int"
+        ),
+        transactional=True, primary_keys=["id"],
+    )
+    cond = r"c = 'x\' and d = 5 and e = \'y'"
+    assert cat.read("esc").where(cond).count() == 1
+    out = cat.execute(f"DELETE FROM esc WHERE {cond}").collect()[0]
+    assert out.affected_rows == 1
+    assert [r.id for r in cat.read("esc").collect()] == [2]
+
+
 def test_sql_update_pre_update_semantics(spark, cat):
     _mk(cat, spark, n=4)
     # v and s both read the OLD row: swap-flavored update must not chain
@@ -754,8 +772,9 @@ def test_classify_ddl_statements():
     op, tbl, new = sqldml.classify("ALTER TABLE a.b RENAME TO c")
     assert (op, tbl, new) == ("rename", "a.b", "c")
     assert sqldml.classify("CLONE TABLE s TO d")[0] == "clone"
-    op, tbl, comment = sqldml.classify("ALTER TABLE t SET COMMENT 'it''s'")
-    assert (op, comment) == ("set_comment", "it's")
+    for lit in ("'it''s'", r"'it\'s'"):
+        op, tbl, comment = sqldml.classify(f"ALTER TABLE t SET COMMENT {lit}")
+        assert (op, comment) == ("set_comment", "it's")
     op, tbl, col, comment = sqldml.classify(
         "ALTER VIEW v CHANGE COLUMN c COMMENT 'doc'"
     )

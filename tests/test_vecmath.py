@@ -440,17 +440,15 @@ def test_lit_ids_and_neg_idx_match_elementwise(spark):
         .first()
     )
     assert sa == sb
-    # unsafe strings take the fallback path, still exact
-    odd = ["it's", 'a"b']
-    oa, ob = (
-        spark.range(1)
-        .select(
-            F.array(*[F.lit(s) for s in odd]).alias("a"),
-            similarity._lit_ids(odd).alias("b"),
-        )
-        .first()
+    # quotes, backslashes and unicode render through sqltext.quote
+    odd = ["it's", 'a"b', "back\\slash", "\\u0041", "x\\'y", "é😀", "--", "/*"]
+    df = spark.range(1).select(
+        F.array(*[F.lit(s) for s in odd]).alias("a"),
+        similarity._lit_ids(odd).alias("b"),
     )
-    assert oa == ob
+    oa, ob = df.first()
+    assert oa == ob == odd
+    assert df.schema["a"].dataType == df.schema["b"].dataType
     # negated index sequence: values and long type
     df = spark.range(1).select(
         F.array(*[F.lit(-i).cast("long") for i in range(5)]).alias("a"),
