@@ -89,6 +89,23 @@ def _matched_partitions(
     return [r.asDict() for r in rows]
 
 
+def _replace_set(
+    tgt: DataFrame, src: DataFrame, keys: list[str], pt_cols: list[str]
+) -> list[dict]:
+    """The distinct partitions a key-matched rewrite must replace: the
+    source's, plus — when partition cols are not all part of the key —
+    those of target rows whose key the source matches, which may live
+    outside the source partitions."""
+    parts = _affected_partitions(src, pt_cols)
+    if not set(pt_cols) <= set(keys):
+        seen = {tuple(p[c] for c in pt_cols) for p in parts}
+        parts += [
+            p for p in _matched_partitions(tgt, src, keys, pt_cols)
+            if tuple(p[c] for c in pt_cols) not in seen
+        ]
+    return parts
+
+
 def _partition_filter(pt_cols: list[str], parts: list[dict]) -> Column:
     cond = F.lit(False)
     for p in parts:
@@ -381,24 +398,10 @@ def merge(
         # key-column-only semi-join scan of the target; the alternative
         # (inserting the source row as a fresh row in its own partition)
         # silently duplicates the unique key.
-        replace_parts = _affected_partitions(src, pt_cols)
-        if not set(pt_cols) <= set(keys):
-            matched_parts = _matched_partitions(tgt, src, keys, pt_cols)
-            seen = {tuple(p[c] for c in pt_cols) for p in replace_parts}
-            replace_parts += [
-                p for p in matched_parts
-                if tuple(p[c] for c in pt_cols) not in seen
-            ]
+        replace_parts = _replace_set(tgt, src, keys, pt_cols)
         tgt = _scope_to_partitions(tgt, pt_cols, replace_parts)
 
     result = _merge_result(tgt, src, keys, update_cols, incremental_predicates)
-
-    if pt_cols and replace_parts is not None:
-        # a matched row's partition value comes from the target side and
-        # is by construction within replace_parts; source-only rows may
-        # introduce new partitions — extend the replace set
-        new_parts = {tuple(p[c] for c in pt_cols) for p in replace_parts}
-        replace_parts = [dict(zip(pt_cols, t_)) for t_ in new_parts]
     _stage_and_swap(catalog, name, meta, result, replace_parts)
 
 
@@ -566,14 +569,7 @@ def delete_insert(
         # cols are not part of the key a doomed target row may live
         # outside the source partitions — its partition must be
         # rewritten too or the delete silently misses it.
-        replace_parts = _affected_partitions(src, pt_cols)
-        if not set(pt_cols) <= set(keys):
-            matched_parts = _matched_partitions(tgt, src, keys, pt_cols)
-            seen = {tuple(p[c] for c in pt_cols) for p in replace_parts}
-            replace_parts += [
-                p for p in matched_parts
-                if tuple(p[c] for c in pt_cols) not in seen
-            ]
+        replace_parts = _replace_set(tgt, src, keys, pt_cols)
         tgt_scope = _scope_to_partitions(tgt, pt_cols, replace_parts)
     else:
         tgt_scope = tgt

@@ -47,7 +47,12 @@ from dbt_maxcompute_spark.plans.sqltext import (
     top_level_iter,
     unquote,
 )
-from dbt_maxcompute_spark.txnlog import guard_raised_as_value_error, retry_commit
+from dbt_maxcompute_spark.txnlog import (
+    _ROW_ADDR,
+    _dv_positions,
+    guard_raised_as_value_error,
+    retry_commit,
+)
 
 if TYPE_CHECKING:
     from dbt_maxcompute_spark.catalog import EngineCatalog
@@ -1853,8 +1858,8 @@ def _exec_merge(catalog: "EngineCatalog", m: MergeStmt) -> int:
                     files = t.files_matching_keys_df(
                         snap, pair[0], src.select(pair[1]), pair[1]
                     )
-            tgt = t._visible_with_pos(snap, files)
-            out_cols = [c for c in tgt.columns if c not in ("__f", "__p")]
+            tgt = t._visible(snap, files, with_pos=True)
+            out_cols = [c for c in tgt.columns if c not in _ROW_ADDR]
         else:
             tgt = t.read(v)
             out_cols = tgt.columns
@@ -1951,13 +1956,13 @@ def _exec_merge(catalog: "EngineCatalog", m: MergeStmt) -> int:
                     F.col("__action").isin(*write_tags)
                 ).select(*[out_col(c) for c in out_cols])
                 adds = t._stage_files(adds_frame)
-            pos = j.filter(
-                F.col("__action").isin(*(u_tags + d_tags))
-                if (u_tags or d_tags)
-                else F.lit(False)
-            ).select(
-                F.col(f"{ta}.__f").alias("file"),
-                F.col(f"{ta}.__p").alias("pos"),
+            pos = _dv_positions(
+                j.filter(
+                    F.col("__action").isin(*(u_tags + d_tags))
+                    if (u_tags or d_tags)
+                    else F.lit(False)
+                ),
+                ta,
             )
             _v, dv_delta = t.commit_dv_delta(snap, adds, pos)
             if write_tags:
@@ -2024,7 +2029,7 @@ def _merge_target_big(t) -> bool:
     zero Spark jobs."""
     try:
         snap = t.snapshot()
-    except Exception:
+    except (OSError, ValueError):  # missing or unreadable log
         return False
     if not snap.files:
         return False
@@ -2054,6 +2059,6 @@ def _merge_source_rows_from_stats(catalog: "EngineCatalog", m: "MergeStmt") -> i
         if not catalog.exists(name) or not catalog.meta(name).transactional:
             return None
         snap = catalog.txn(name).snapshot()
-    except Exception:
+    except (OSError, ValueError):  # missing or unreadable meta or log
         return None
     return snap.logged_rows()

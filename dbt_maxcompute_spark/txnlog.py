@@ -29,10 +29,12 @@ Storage over Cloud Object Stores", VLDB 2020):
 Writes are file-granular copy-on-write by default (overwrite/delete
 rewrite whole files, reads are plain
 ``spark.read.parquet(active_files)``), with DELETION VECTORS as the
-row-level fast path: ``delete_where_dv`` / ``delete_insert_dv`` commit
-a (file, pos) vector instead of rewriting data files, reads subtract
-it via the file source's own ``_metadata`` row positions, and full
-rewrites (OPTIMIZE / overwrite / COW delete) materialize and clear it.
+row-level fast path: ``delete_where_dv`` / ``delete_insert_dv`` /
+``update_where_dv`` (and SQL MERGE) commit a (file, pos) vector through
+``commit_dv_delta`` instead of rewriting data files, reads subtract it
+via the file source's own ``_metadata`` row positions (``_scan``, the
+one scan of the table's parquet), and full rewrites (OPTIMIZE /
+overwrite / COW delete) materialize and clear it.
 The DML planner's merge-as-rewrite output can land through
 ``overwrite`` to become atomic + time-travelable with no planner
 changes.
@@ -49,7 +51,7 @@ import uuid
 from dbt_maxcompute_spark.localframe import local_frame
 from dbt_maxcompute_spark.plans.sqltext import split_literals, unquote
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Any, Callable, Iterable, Iterator
 
 from py4j.protocol import Py4JJavaError
@@ -162,10 +164,11 @@ def _logged_rows(file_stats: Iterable[dict | None]) -> int | None:
 
 def _footer_stats(full_path: str) -> dict:
     """Min/max/null-count per column from one parquet FOOTER (no data
-    pages). Runs on executors via a parallelize().map() job at stage
-    time — the Delta recipe collects stats in the writer; reading the
-    footer right after the write is the stand-in that keeps the driver
-    off the data path and the cost at KBs per file."""
+    pages), read at stage time — on the driver for small commits, on
+    executors for big ones (see ``_stage_files``). The Delta recipe
+    collects stats in the writer; reading the footer right after the
+    write is the stand-in that keeps the cost at KBs per file, off the
+    data path."""
     import datetime
 
     import pyarrow.parquet as pq
@@ -310,15 +313,19 @@ def _bloom_build(values, m_bits: int):
     return bits
 
 
-def _bloom_contains(bits, m_bits: int, value) -> bool:
+def _bloom_member(bits, m_bits: int, hashes):
+    """Per-hash membership in one bloom bitmap: True where all k probe
+    bits are set (false positives possible, false negatives never).
+    Vectorized over the whole hash array — the one kernel behind both
+    the driver-side and the executor-side prune."""
     import numpy as np
 
     arr = np.frombuffer(bits, dtype=np.uint8)
-    for idx in _bloom_indices(_bloom_hash64([value]), m_bits):
-        i = int(idx[0])
-        if not (arr[i >> 3] >> (i & 7)) & 1:
-            return False
-    return True
+    hit = np.ones(len(hashes), dtype=bool)
+    for idx in _bloom_indices(hashes, m_bits):
+        i = idx.astype(np.int64)
+        hit &= ((arr[i >> 3] >> (i & 7)) & 1).astype(bool)
+    return hit
 
 
 def _bloom_normalize(value, fam: str):
@@ -488,6 +495,27 @@ _WHERE_OPS = {
     ">": lambda c, v: c > v,
     ">=": lambda c, v: c >= v,
 }
+
+# a row's physical address as columns of a ``_scan(with_pos=True)``
+# frame: its data file's basename and its row index in that file
+_ROW_ADDR = ("__row_file", "__row_pos")
+
+
+def _struct(schema_json: str):
+    """A logged ``schema_json`` as a StructType."""
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(schema_json))
+
+
+def _dv_positions(frame: DataFrame, alias: str | None = None) -> DataFrame:
+    """The ``(file, pos)`` deletion-vector rows naming ``frame``'s rows
+    — ``frame`` carries the ``_ROW_ADDR`` columns (qualified by
+    ``alias`` after a join)."""
+    q = f"{alias}." if alias else ""
+    return frame.select(
+        F_col(q + _ROW_ADDR[0]).alias("file"), F_col(q + _ROW_ADDR[1]).alias("pos")
+    )
 
 
 class TxnTable:
@@ -682,9 +710,10 @@ class TxnTable:
         """Write df as immutable uniquely-named parquet under the table
         root; return add-actions ``{"add": name, "stats": {...}}``.
         Files are invisible to every reader until a commit references
-        them.  Column min/max/null stats come from the parquet FOOTERS,
-        read executor-side in one parallelize().map() job (metadata
-        only — KBs per file, driver stays off the data path)."""
+        them.  Column min/max/null stats come from the parquet FOOTERS
+        (metadata only — KBs per file): read on the driver for commits
+        of at most ``_DRIVER_STAT_MAX_FILES`` files, executor-side in
+        one parallelize().map() job for bigger ones."""
         stage = os.path.join(self.path, f".stage-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(stage)
         out = []
@@ -792,7 +821,6 @@ class TxnTable:
 
         Returns (files_loaded, rows_loaded)."""
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
 
         def step() -> tuple[int, int]:
             snap = self.snapshot()
@@ -803,7 +831,7 @@ class TxnTable:
             ]
             if not new:
                 return (0, 0)
-            schema = StructType.fromJson(json.loads(snap.schema_json))
+            schema = _struct(snap.schema_json)
             reader = self.spark.read
             for k, v in (options or {}).items():
                 reader = reader.option(k, v)
@@ -894,7 +922,6 @@ class TxnTable:
         """
         from pyspark.sql import Window
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
 
         if not allow_duplicate_keys:
             # wrap a NON-key column when one exists so the guard
@@ -924,13 +951,8 @@ class TxnTable:
         base_snapshot: "Snapshot | None" = None,
     ) -> int:
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
 
         snap = base_snapshot if base_snapshot is not None else self.snapshot()
-        if not snap.files:
-            # nothing to match: the upsert degenerates to an append
-            adds = self._stage_files(source)
-            return self._commit(snap.version + 1, adds, source.schema.json(), txn=txn)
         # stage the insert files FIRST: the feed plan (a MERGE source,
         # an aggregated count delta — arbitrarily expensive) evaluates
         # exactly once, in the staging job; the broadcast key probe
@@ -940,48 +962,22 @@ class TxnTable:
         # staged write fans out into dozens of tiny files.) Bonus: the
         # duplicate-key guard now fires before ANY store write.
         adds = self._stage_files(source)
-        if snap.schema_json:
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            raw = self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.path, f) for f in snap.files]
-            )
-        else:
-            raw = self.spark.read.parquet(
-                *[os.path.join(self.path, f) for f in snap.files]
-            )
-        visible = self._apply_dv(
-            raw.withColumn(
-                "__f", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-            ).withColumn("__p", F.col("_metadata.row_index")),
-            snap,
+        if not snap.files:
+            # nothing to match: the upsert degenerates to an append
+            return self._commit(snap.version + 1, adds, source.schema.json(), txn=txn)
+        # an all-empty feed stages no file: the empty probe matches no key
+        probe = self._scan(source.schema.json(), [a["add"] for a in adds])
+        matched = self._visible(snap, with_pos=True).join(
+            F.broadcast(probe.select(*keys).distinct()), keys, "left_semi"
         )
-        if adds:
-            probe = self.spark.read.schema(source.schema).parquet(
-                *[os.path.join(self.path, a["add"]) for a in adds]
-            )
-        else:
-            # all-empty feed: same probe semantics (no key matches)
-            probe = local_frame(self.spark, [], source.schema)
-        matched = (
-            visible.join(F.broadcast(probe.select(*keys).distinct()), keys, "left_semi")
-            .select(F.col("__f").alias("file"), F.col("__p").alias("pos"))
-        )
-        if snap.dv_file:
-            old = self.spark.read.schema("file string, pos long").parquet(
-                os.path.join(self.path, snap.dv_file)
-            )
-            # matched is drawn from the DV-subtracted visible set, so it
-            # is disjoint from the old store — plain union, no dedup
-            # shuffle
-            matched = matched.unionByName(old)
-        dv_name = f"dv-{uuid.uuid4().hex}"
-        matched.write.parquet(os.path.join(self.path, dv_name))
-        return self._commit(
-            snap.version + 1,
-            [{"set_dv": dv_name}] + adds,
-            source.schema.json(),
+        # the upsert commits the SOURCE schema, as append does
+        v, _ = self.commit_dv_delta(
+            replace(snap, schema_json=source.schema.json()),
+            adds,
+            _dv_positions(matched),
             txn=txn,
         )
+        return v
 
     def idempotent_append(self, df: DataFrame, app_id: str, batch_id: int) -> bool:
         """Exactly-once foreachBatch append (Delta ``txn`` action):
@@ -1059,12 +1055,7 @@ class TxnTable:
         return retry_commit(step, LEDGER_TXN_ATTEMPTS)
 
     def overwrite(self, df: DataFrame) -> int:
-        base_snap = self.snapshot()
-        adds = self._stage_files(df)
-        removes = [{"remove": f} for f in base_snap.files]
-        return self._commit(
-            base_snap.version + 1, adds + removes + [{"clear_dv": True}], df.schema.json()
-        )
+        return self.overwrite_from(self.latest_version(), df)
 
     def overwrite_from(
         self,
@@ -1075,10 +1066,10 @@ class TxnTable:
         """Overwrite pinned to the snapshot the caller COMPUTED from.
 
         A read-compute-commit writer (merge, delete+insert) must not
-        land on top of a version it never saw — plain ``overwrite``
-        resolves "latest" at commit time and would silently erase a
-        commit that interleaved between the caller's read and its write
-        (lost update). Committing ``base_version + 1`` makes any
+        land on top of a version it never saw — a writer that resolved
+        "latest" at commit time would silently erase a commit that
+        interleaved between the caller's read and its write (lost
+        update). Committing ``base_version + 1`` makes any
         interleaving a :class:`CommitConflict`: the caller re-reads,
         recomputes, retries — the Delta-paper optimistic-concurrency
         loop. ``txn`` rides the same commit (Delta idempotence marker)
@@ -1107,18 +1098,15 @@ class TxnTable:
         return retry_commit(step)
 
     def delete_where(self, condition: str) -> int:
-        """Copy-on-write delete: keep rows NOT matching ``condition``.
-        File-granular — untouched files are carried over, only the
-        survivor set is rewritten (coarse but correct; deletion vectors
-        are the finer-grained extension)."""
-        snap = self.snapshot()
+        """Copy-on-write delete: keep rows NOT matching ``condition``,
+        rewriting the whole survivor set and clearing the deletion
+        vector (:meth:`delete_where_dv` is the row-level form that
+        rewrites nothing). Reads the version it commits on."""
+        v = self.latest_version()
         # SQL DELETE semantics: only rows where the condition is TRUE go;
         # NULL-condition rows stay (bare NOT(cond) would drop them)
-        keep = self.read().filter(f"NOT coalesce(({condition}), false)")
-        adds = self._stage_files(keep)
-        removes = [{"remove": f} for f in snap.files]
-        return self._commit(
-            snap.version + 1, adds + removes + [{"clear_dv": True}], keep.schema.json()
+        return self.overwrite_from(
+            v, self.read(v).filter(f"NOT coalesce(({condition}), false)")
         )
 
     def read(
@@ -1132,152 +1120,160 @@ class TxnTable:
 
         ``where`` — a conjunction of (col, op, value), op in
         {=, <, <=, >, >=} — enables DATA SKIPPING: files whose logged
-        min/max stats prove no row can match are dropped from the scan
-        list before Spark ever sees them (Delta-paper data skipping:
-        at 100 TB a selective key predicate touches a handful of files
-        instead of the table).  The predicate is ALSO applied as a
-        row filter, so skipping is purely an optimization — callers
-        get exactly the rows matching ``where`` either way.  Timestamp
-        and date values may be passed as ISO strings (stats store them
-        that way; lexicographic == temporal order)."""
+        min/max stats (or, for equalities, blooms) prove no row can
+        match are dropped from the scan list before Spark ever sees
+        them (Delta-paper data skipping: at 100 TB a selective key
+        predicate touches a handful of files instead of the table).
+        The predicate is ALSO applied as a row filter, so skipping is
+        purely an optimization — callers get exactly the rows matching
+        ``where`` either way.  Timestamp and date values may be passed
+        as ISO strings (stats store them that way; lexicographic ==
+        temporal order)."""
         snap = self.snapshot(version)
-        files = snap.files
-        if where:
-            files = [f for f in files if _may_match(snap.stats.get(f), where)]
-            files = self._bloom_prune(snap, files, where)
-        if not files:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            return local_frame(self.spark, [], schema)
-        paths = [os.path.join(self.path, f) for f in files]
-        # the COMMITTED schema governs the read (Delta semantics): a
-        # column added by a later commit backfills NULL for files
-        # written before it — without the explicit schema the parquet
-        # reader would take whichever file's footer it sampled first
-        if snap.schema_json:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            df = self.spark.read.schema(schema).parquet(*paths)
-        else:
-            df = self.spark.read.parquet(*paths)
-        df = self._apply_dv(df, snap)
+        df = self._visible(snap, self._prune(snap, where or []))
         for col, op, val in where or []:
             df = df.filter(_WHERE_OPS[op](df[col], val))
         return df
 
-    def _apply_dv(self, df: DataFrame, snap: Snapshot) -> DataFrame:
-        """Subtract deletion-vector rows: anti-join on the file source's
-        own (_metadata.file_path basename, _metadata.row_index) — rows
-        a DV names are invisible without their data file having been
-        rewritten. The DV is broadcast (row-level deletes are a sliver
-        of the table; per-file roaring bitmaps are the known extension
-        when they are not). File basenames are unique per table
-        (part-<hex>), so the basename is a stable join key."""
-        if not snap.dv_file:
-            return df
+    def _scan(
+        self,
+        schema_json: str | None,
+        files: list[str],
+        *,
+        drop: DataFrame | None = None,
+        keep: DataFrame | None = None,
+        with_pos: bool = False,
+    ) -> DataFrame:
+        """THE scan of the table's parquet: ``files`` read under the
+        COMMITTED schema (Delta semantics: a column added by a later
+        commit backfills NULL for files written before it — without
+        the explicit schema the reader would take whichever footer it
+        sampled first); an empty list is the empty frame of that schema.
+
+        A row's address is the file source's own
+        ``(_metadata.file_path`` basename, ``_metadata.row_index)``:
+        basenames are unique per table (part-<hex>) and positions are
+        per file, so pruning the list never shifts an address.
+        ``drop`` (a deletion vector) and ``keep`` are ``(file, pos)``
+        sets, broadcast (row-level deletes are a sliver of the table;
+        per-file roaring bitmaps are the known extension when they are
+        not) and anti- / semi-joined on the address. ``with_pos`` keeps
+        the address as the ``_ROW_ADDR`` columns. With neither, the
+        scan is a bare parquet read carrying no ``_metadata`` column."""
         from pyspark.sql import functions as F
 
-        # explicit schema: an all-rows-filtered DV write leaves a dir
-        # with no data files, which schema inference would reject
-        dv = self.spark.read.schema("file string, pos long").parquet(
-            os.path.join(self.path, snap.dv_file)
-        )
+        f_col, p_col = _ROW_ADDR
+        if not files:
+            df = local_frame(self.spark, [], _struct(schema_json))
+            if with_pos:
+                df = df.withColumn(f_col, F.lit(None).cast("string")).withColumn(
+                    p_col, F.lit(None).cast("long")
+                )
+            return df
+        reader = self.spark.read
+        if schema_json:
+            reader = reader.schema(_struct(schema_json))
+        df = reader.parquet(*[os.path.join(self.path, f) for f in files])
+        if drop is None and keep is None and not with_pos:
+            return df
         cols = df.columns
-        tagged = df.withColumn(
-            "__dv_f",
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-        ).withColumn("__dv_p", F.col("_metadata.row_index"))
-        kept = tagged.join(
-            F.broadcast(
-                dv.select(F.col("file").alias("__dv_f"), F.col("pos").alias("__dv_p"))
-            ),
-            ["__dv_f", "__dv_p"],
-            "left_anti",
+        df = df.withColumn(
+            f_col, F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+        ).withColumn(p_col, F.col("_metadata.row_index"))
+        for pos, how in ((drop, "left_anti"), (keep, "left_semi")):
+            if pos is not None:
+                df = df.join(
+                    F.broadcast(
+                        pos.select(F.col("file").alias(f_col), F.col("pos").alias(p_col))
+                    ),
+                    list(_ROW_ADDR),
+                    how,
+                )
+        return df if with_pos else df.select(*cols)
+
+    def _visible(
+        self, snap: Snapshot, files: list[str] | None = None, with_pos: bool = False
+    ) -> DataFrame:
+        """VISIBLE rows of ``snap`` (its deletion vector subtracted),
+        scanning only ``files`` (default: all of them) — DV entries
+        naming other files simply never match. ``with_pos`` keeps each
+        row's address, the frame every DV writer matches against."""
+        return self._scan(
+            snap.schema_json,
+            snap.files if files is None else files,
+            drop=self._read_dv(snap.dv_file) if snap.dv_file else None,
+            with_pos=with_pos,
         )
-        return kept.select(*cols)
+
+    def _prune(self, snap: Snapshot, where: list[tuple]) -> list[str]:
+        """The files of ``snap`` that may hold a row matching the
+        conjunction ``where``: logged min/max ranges first, then the
+        per-file blooms for each EQUALITY conjunct — the complement of
+        range skipping for high-cardinality columns whose values are
+        scattered across files (point lookups on a non-clustered key).
+        Sidecars load lazily, only for files that survived the range
+        check. Sound: unknown stats, a missing sidecar or a value whose
+        type family differs from the column's keep the file, and bloom
+        false positives only scan."""
+        eqs = [(c, v) for c, op, v in where if op == "="]
+        return [
+            f
+            for f in snap.files
+            if _may_match(snap.stats.get(f), where)
+            and all(self._bloom_any_hit(snap, f, c, [v]) for c, v in eqs)
+        ]
+
+    def _dv_dml(
+        self,
+        condition: str,
+        return_count: bool,
+        apply: Callable[[Snapshot, DataFrame], tuple[int, int]],
+    ) -> int | tuple[int, int]:
+        """Row-level DML over deletion vectors: ``apply(snap, matched)``
+        commits on top of the latest snapshot, where ``matched`` is its
+        VISIBLE rows (previous DV already subtracted, so a match count
+        is exactly SQL's affected-row count) satisfying ``condition``,
+        with their addresses. The match scan is pruned by the
+        condition's extracted conjuncts (a pruned-out file provably
+        holds no matching row; the ORIGINAL condition still filters
+        every scanned row — extraction is an optimization, never
+        semantics). When the logged stats prove the table empty (logs
+        written before zero-row files were dropped at stage time can
+        name all-empty files, whose scan plans zero tasks) or the prune
+        leaves no file, an empty commit stands in, zero jobs."""
+        snap = self.snapshot()
+        files = []
+        if snap.logged_rows() != 0:
+            files = self._prune(snap, _extract_conjuncts(condition))
+        if files:
+            matched = self._visible(snap, files, with_pos=True).filter(
+                f"coalesce(({condition}), false)"
+            )
+            v, n = apply(snap, matched)
+        else:
+            v, n = self._commit(snap.version + 1, [], snap.schema_json), 0
+        return (v, n) if return_count else v
 
     def delete_where_dv(
         self, condition: str, return_count: bool = False
     ) -> int | tuple[int, int]:
         """Row-level DELETE via deletion vectors (Delta DV shape): no
-        data file is rewritten — the commit writes a (file, pos) store
-        naming the deleted rows and points the snapshot at it.  The new
-        store is the union of the previous DV and the newly matched
-        rows, so the log always has ONE active DV (the superseded store
-        becomes vacuumable).  At 100 TB this turns a 10-minute
-        copy-on-write rewrite of every touched file into a job bounded
-        by the matched rows; OPTIMIZE/overwrite materialize the
-        deletions and clear the vector.
-
-        Matching runs over the VISIBLE row set (previous DV already
-        subtracted), so the matched count is exactly SQL DELETE's
-        affected-row count; with ``return_count=True`` the count comes
-        from the DV PARQUET FOOTERS (new DV rows − old DV rows — the
-        two stores are disjoint because matching runs post-subtraction),
-        so it costs KBs of metadata, never a second data pass.  An
-        earlier version observed the count in-plan, but Spark loses a
-        CollectMetrics node's value when a union+dedup shuffle sits
-        above it (and never fires it on a zero-task scan) — the footer
-        is the version that cannot crash."""
-        snap = self.snapshot()
-        # stats-zero fast path: logs written before zero-row files were
-        # filtered at stage time can still name all-empty files; a scan
-        # over them plans zero tasks and writes nothing useful. The
-        # logged footer stats already prove 0 visible rows.
-        if snap.logged_rows() == 0:
-            v = self._commit(snap.version + 1, [], snap.schema_json)
-            return (v, 0) if return_count else v
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
-
-        # data skipping for the MATCH scan: conjuncts extracted from
-        # the condition prune via logged min/max stats + blooms (a
-        # pruned-out file provably holds no matching row, so its
-        # positions can't belong in the DV); the ORIGINAL condition
-        # still filters every row — extraction is an optimization,
-        # never semantics. `DELETE FROM t WHERE k = <x>` on 100 TB
-        # scans the bloom-hit files, not the table.
-        prune = _extract_conjuncts(condition)
-        files = list(snap.files)
-        if prune:
-            files = [f for f in files if _may_match(snap.stats.get(f), prune)]
-            files = self._bloom_prune(snap, files, prune)
-        if not files:
-            v = self._commit(snap.version + 1, [], snap.schema_json)
-            return (v, 0) if return_count else v
-        paths = [os.path.join(self.path, f) for f in files]
-        if snap.schema_json:
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            raw = self.spark.read.schema(schema).parquet(*paths)
-        else:
-            raw = self.spark.read.parquet(*paths)
-        visible = self._apply_dv(
-            raw.withColumn(
-                "__f", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-            ).withColumn("__p", F.col("_metadata.row_index")),
-            snap,
+        data file is rewritten — the matched rows' positions commit
+        through :meth:`commit_dv_delta`. At 100 TB this turns a
+        10-minute copy-on-write rewrite of every touched file into a
+        job bounded by the matched rows; OPTIMIZE/overwrite materialize
+        the deletions and clear the vector. `DELETE FROM t WHERE k = <x>`
+        scans the bloom-hit files, not the table. With
+        ``return_count=True`` the affected count comes from the DV
+        parquet footers, never a second data pass. (An earlier version
+        observed the count in-plan, but Spark loses a CollectMetrics
+        node's value when a union+dedup shuffle sits above it, and
+        never fires it on a zero-task scan.)"""
+        return self._dv_dml(
+            condition,
+            return_count,
+            lambda snap, matched: self.commit_dv_delta(snap, [], _dv_positions(matched)),
         )
-        matched = (
-            visible.filter(f"coalesce(({condition}), false)")
-            .select(F.col("__f").alias("file"), F.col("__p").alias("pos"))
-        )
-        old_rows = 0
-        if snap.dv_file:
-            old = self.spark.read.schema("file string, pos long").parquet(
-                os.path.join(self.path, snap.dv_file)
-            )
-            # no dedup shuffle: matched comes from the DV-subtracted
-            # visible set, so it is disjoint from the old store, and
-            # (file,pos) is unique within matched by construction
-            matched = matched.unionByName(old)
-            old_rows = self._dv_rows(snap.dv_file)
-        dv_name = f"dv-{uuid.uuid4().hex}"
-        matched.write.parquet(os.path.join(self.path, dv_name))
-        affected = self._dv_rows(dv_name) - old_rows
-        v = self._commit(snap.version + 1, [{"set_dv": dv_name}], snap.schema_json)
-        return (v, affected) if return_count else v
 
     def files_matching_keys(
         self, snap: "Snapshot", col: str, values: list
@@ -1349,10 +1345,7 @@ class TxnTable:
         self, snap: "Snapshot", f: str, col: str, vals: list
     ) -> bool:
         """True unless the file's bloom PROVES none of ``vals`` is
-        present (vectorized: all k probe bits checked for the whole
-        value array at once)."""
-        import numpy as np
-
+        present."""
         meta = self._bloom_meta(snap, f)
         if meta is None:
             return True
@@ -1364,12 +1357,7 @@ class TxnTable:
         probes = [p for p in probes if p is not None]
         if len(probes) != len(vals):
             return True  # any un-normalizable value: cannot prove absence
-        arr = np.frombuffer(bits, dtype=np.uint8)
-        hit = np.ones(len(probes), dtype=bool)
-        for idx in _bloom_indices(_bloom_hash64(probes), meta["m"]):
-            i = idx.astype(np.int64)
-            hit &= ((arr[i >> 3] >> (i & 7)) & 1).astype(bool)
-        return bool(hit.any())
+        return bool(_bloom_member(bits, meta["m"], _bloom_hash64(probes)).any())
 
     def files_matching_keys_df(
         self, snap: "Snapshot", col: str, keys: DataFrame, key_col: str
@@ -1419,7 +1407,7 @@ class TxnTable:
 
             from dbt_maxcompute_spark.txnlog import (
                 _bloom_hash64,
-                _bloom_indices,
+                _bloom_member,
                 _bloom_normalize,
             )
 
@@ -1456,15 +1444,11 @@ class TxnTable:
                         # same rule as the driver-side prune: only
                         # in-range keys probe, and any of them that
                         # cannot be normalized keeps the file
-                        if ok[in_range].all():
-                            h = hashes[in_range]
-                            arr = np.frombuffer(bits, dtype=np.uint8)
-                            hit = np.ones(len(h), dtype=bool)
-                            for idx in _bloom_indices(h, m):
-                                i = idx.astype(np.int64)
-                                hit &= ((arr[i >> 3] >> (i & 7)) & 1).astype(bool)
-                            if not hit.any():
-                                continue  # bloom proves absence
+                        if (
+                            ok[in_range].all()
+                            and not _bloom_member(bits, m, hashes[in_range]).any()
+                        ):
+                            continue  # bloom proves absence
                     survivors.append(f)
                 if survivors:
                     yield pd.DataFrame({"__file": survivors})
@@ -1480,39 +1464,6 @@ class TxnTable:
             bc.unpersist()
         return auto_keep + names
 
-    def _visible_with_pos(
-        self, snap: "Snapshot", files: list[str] | None = None
-    ) -> DataFrame:
-        """VISIBLE rows of ``snap`` (DV already subtracted) carrying
-        their physical address as ``__f`` (file basename) and ``__p``
-        (row index) — the frame every DV writer matches against.
-        ``files`` restricts the scan (callers pass a stats/bloom-pruned
-        list); position fidelity is per-file, so pruning never shifts
-        an address."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
-
-        use = snap.files if files is None else files
-        if not use:
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            empty = local_frame(self.spark, [], schema)
-            return empty.withColumn("__f", F.lit(None).cast("string")).withColumn(
-                "__p", F.lit(None).cast("long")
-            )
-        paths = [os.path.join(self.path, f) for f in use]
-        reader = self.spark.read
-        if snap.schema_json:
-            reader = reader.schema(
-                StructType.fromJson(json.loads(snap.schema_json))
-            )
-        raw = reader.parquet(*paths)
-        return self._apply_dv(
-            raw.withColumn(
-                "__f", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-            ).withColumn("__p", F.col("_metadata.row_index")),
-            snap,
-        )
-
     def commit_dv_delta(
         self,
         snap: "Snapshot",
@@ -1521,33 +1472,31 @@ class TxnTable:
         txn: dict[str, Any] | list[dict[str, Any]] | None = None,
     ) -> tuple[int, int]:
         """Commit staged ``adds`` plus a deletion-vector DELTA of
-        ``pos`` (file/pos of newly-deleted VISIBLE rows, disjoint from
-        the old store by construction) as ONE version on top of
-        ``snap``. Returns (version, dv_delta) where dv_delta is the
-        number of newly-deleted positions, read from parquet footers —
-        never a count job."""
+        ``pos`` (file/pos of newly-deleted VISIBLE rows) as ONE version
+        on top of ``snap``, under ``snap``'s schema — the one writer of
+        DV stores. The new ``dv-<hex>`` store is the old store ∪
+        ``pos``, a plain union with no dedup shuffle: ``pos`` is drawn
+        from the DV-subtracted visible set, so it is disjoint from the
+        old store, and (file, pos) is unique within it by construction.
+        The log thus has ONE active DV (a superseded store becomes
+        vacuumable); a delta of no position keeps the old store and
+        commits only the adds. Returns (version, dv_delta), dv_delta
+        being the number of newly-deleted positions, read from parquet
+        footers — never a count job."""
+        import shutil
+
         old_rows = 0
         if snap.dv_file:
-            old = self.spark.read.schema("file string, pos long").parquet(
-                os.path.join(self.path, snap.dv_file)
-            )
-            pos = pos.unionByName(old)
+            pos = pos.unionByName(self._read_dv(snap.dv_file))
             old_rows = self._dv_rows(snap.dv_file)
         dv_name = f"dv-{uuid.uuid4().hex}"
         pos.write.parquet(os.path.join(self.path, dv_name))
         delta = self._dv_rows(dv_name) - old_rows
+        actions = adds + [{"set_dv": dv_name}]
         if delta == 0:
-            # no new deletions: keep the OLD store (don't swap in an
-            # identical copy) and commit only the adds (if any)
-            import shutil as _shutil
-
-            _shutil.rmtree(os.path.join(self.path, dv_name), ignore_errors=True)
-            v = self._commit(snap.version + 1, adds, snap.schema_json, txn=txn)
-            return v, 0
-        v = self._commit(
-            snap.version + 1, adds + [{"set_dv": dv_name}], snap.schema_json, txn=txn
-        )
-        return v, delta
+            shutil.rmtree(os.path.join(self.path, dv_name), ignore_errors=True)
+            actions = adds
+        return self._commit(snap.version + 1, actions, snap.schema_json, txn=txn), delta
 
     def dv_update_pays(self, condition: str) -> bool:
         """Metadata-only routing for conditional UPDATE (zero Spark
@@ -1563,12 +1512,8 @@ class TxnTable:
         snap = self.snapshot()
         if not snap.files:
             return False
-        prune = _extract_conjuncts(condition)
-        if prune:
-            kept = [f for f in snap.files if _may_match(snap.stats.get(f), prune)]
-            kept = self._bloom_prune(snap, kept, prune)
-            if len(kept) < len(snap.files):
-                return True
+        if len(self._prune(snap, _extract_conjuncts(condition))) < len(snap.files):
+            return True
         rows = snap.logged_rows()
         return rows is None or rows >= 100_000
 
@@ -1587,58 +1532,38 @@ class TxnTable:
         `UPDATE t SET ... WHERE k = x` touches the bloom-hit files,
         never a table rewrite (the copy-on-write overwrite path
         remains for unconditional updates, which rewrite everything
-        anyway). Matching runs over the VISIBLE row set, so the
-        affected count equals SQL UPDATE's matched-row count and comes
-        from the DV parquet footers (never a second data pass)."""
-        snap = self.snapshot()
-        if snap.logged_rows() == 0:
-            v = self._commit(snap.version + 1, [], snap.schema_json)
-            return (v, 0) if return_count else v
+        anyway). The affected count equals SQL UPDATE's matched-row
+        count and comes from the DV parquet footers (never a second
+        data pass)."""
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
 
-        prune = _extract_conjuncts(condition)
-        files = list(snap.files)
-        if prune:
-            files = [f for f in files if _may_match(snap.stats.get(f), prune)]
-            files = self._bloom_prune(snap, files, prune)
-        if not files:
-            v = self._commit(snap.version + 1, [], snap.schema_json)
-            return (v, 0) if return_count else v
-        visible = self._visible_with_pos(snap, files)
-        cols = [c for c in visible.columns if c not in ("__f", "__p")]
-        bad = set(sets) - set(cols)
-        if bad:
-            raise ValueError(f"update_where_dv: unknown columns {sorted(bad)}")
-        # matched feeds TWO jobs (rewritten-row staging, then the DV
-        # position write) — persist it so the pruned scan + filter run
-        # once per UPDATE, not twice. Bounded by the affected rows,
-        # which the rewrite materializes anyway.
-        matched = visible.filter(f"coalesce(({condition}), false)").persist()
-        try:
-            # pass 1: the rewritten rows (SET against the pre-update row,
-            # types re-pinned to the committed schema)
-            dtypes = {f.name: f.dataType for f in visible.schema.fields}
-            new_rows = matched.select(
-                *[
-                    (
-                        F.expr(sets[c]).cast(dtypes[c]).alias(c)
-                        if c in sets
-                        else F.col(c)
-                    )
-                    for c in cols
-                ]
-            )
-            adds = self._stage_files(new_rows)
-            # pass 2: the DV positions of the replaced rows (disjoint from
-            # the old store — matching ran post-subtraction)
-            pos = matched.select(
-                F.col("__f").alias("file"), F.col("__p").alias("pos")
-            )
-            v, affected = self.commit_dv_delta(snap, adds, pos)
-        finally:
-            matched.unpersist()
-        return (v, affected) if return_count else v
+        def apply(snap: Snapshot, matched: DataFrame) -> tuple[int, int]:
+            cols = [c for c in matched.columns if c not in _ROW_ADDR]
+            bad = set(sets) - set(cols)
+            if bad:
+                raise ValueError(f"update_where_dv: unknown columns {sorted(bad)}")
+            # matched feeds TWO jobs (rewritten-row staging, then the DV
+            # position write) — persist it so the pruned scan + filter
+            # run once per UPDATE, not twice. Bounded by the affected
+            # rows, which the rewrite materializes anyway.
+            matched = matched.persist()
+            try:
+                # pass 1: the rewritten rows (SET against the pre-update
+                # row, types re-pinned to the committed schema)
+                dtypes = {f.name: f.dataType for f in matched.schema.fields}
+                new_rows = matched.select(
+                    *[
+                        F.expr(sets[c]).cast(dtypes[c]).alias(c) if c in sets else F.col(c)
+                        for c in cols
+                    ]
+                )
+                adds = self._stage_files(new_rows)
+                # pass 2: the DV positions of the replaced rows
+                return self.commit_dv_delta(snap, adds, _dv_positions(matched))
+            finally:
+                matched.unpersist()
+
+        return self._dv_dml(condition, return_count, apply)
 
     def stats_row_count(self, snap: "Snapshot | None" = None) -> int | None:
         """VISIBLE row count from metadata alone: sum of the logged
@@ -1673,63 +1598,7 @@ class TxnTable:
         the observable for data-skipping tests and EXPLAIN-style
         tooling."""
         snap = self.snapshot(version)
-        if not where:
-            return list(snap.files)
-        files = [f for f in snap.files if _may_match(snap.stats.get(f), where)]
-        return self._bloom_prune(snap, files, where)
-
-    def _bloom_prune(
-        self, snap: "Snapshot", files: list[str], where: list[tuple]
-    ) -> list[str]:
-        """Per-file bloom pruning for EQUALITY predicates — the
-        complement of min/max range skipping for high-cardinality
-        columns whose values are scattered across files (point lookups
-        on a non-clustered key). Sidecars load lazily, only for files
-        that survived range pruning, and cache per instance — a miss
-        costs one KB-sized JSON read, a hit prunes a whole file from
-        the scan. False positives scan (never wrong results); a value
-        whose type family differs from the column's never prunes."""
-        eqs = [(c, v) for c, op, v in where if op == "="]
-        if not eqs or not files:
-            return files
-        out = []
-        for f in files:
-            bf = (snap.stats.get(f) or {}).get("bloomFile")
-            if not bf:
-                out.append(f)
-                continue
-            meta = self._bloom_cache.get(bf)
-            if meta is None:
-                try:
-                    with open(os.path.join(self.path, bf)) as fh:
-                        raw = json.load(fh)
-                    import base64
-
-                    meta = {
-                        "m": raw["m"],
-                        "cols": {
-                            c: (base64.b64decode(d["b"]), d["t"])
-                            for c, d in raw["cols"].items()
-                        },
-                    }
-                except (OSError, ValueError, KeyError):
-                    meta = {"m": 0, "cols": {}}
-                self._bloom_cache[bf] = meta
-            keep = True
-            for c, v in eqs:
-                ent = meta["cols"].get(c)
-                if ent is None or not meta["m"]:
-                    continue
-                bits, fam = ent
-                probe = _bloom_normalize(v, fam)
-                if probe is None:
-                    continue  # family mismatch: never prune
-                if not _bloom_contains(bits, meta["m"], probe):
-                    keep = False
-                    break
-            if keep:
-                out.append(f)
-        return out
+        return self._prune(snap, where or [])
 
     def history(self) -> list[dict[str, Any]]:
         out = []
@@ -1817,18 +1686,9 @@ class TxnTable:
         if append_only:
             if not interval_adds:
                 return new.limit(0).withColumn("_change_type", F.lit("insert"))
-            paths = [os.path.join(self.path, f) for f in interval_adds]
-            from pyspark.sql.types import StructType
-
-            snap = self.snapshot(to_version)
-            reader = self.spark.read
-            if snap.schema_json:
-                reader = reader.schema(
-                    StructType.fromJson(json.loads(snap.schema_json))
-                )
-            return reader.parquet(*paths).withColumn(
-                "_change_type", F.lit("insert")
-            )
+            return self._scan(
+                self.snapshot(to_version).schema_json, interval_adds
+            ).withColumn("_change_type", F.lit("insert"))
         from_snap = self.snapshot(from_version)
         to_snap = self.snapshot(to_version)
         if not from_snap.files:
@@ -1993,42 +1853,15 @@ class TxnTable:
         ).select(*cols, "_change_type")
 
     def _read_dv(self, dv_file: str | None) -> DataFrame:
+        """The (file, pos) rows of a deletion-vector store (empty for
+        None) — its one reader. The schema is explicit: an all-rows-
+        filtered DV write leaves a directory with no data files, which
+        schema inference would reject."""
         if not dv_file:
             return local_frame(self.spark, [], "file string, pos long")
         return self.spark.read.schema("file string, pos long").parquet(
             os.path.join(self.path, dv_file)
         )
-
-    def _rows_at_positions(
-        self, files: list[str], positions: DataFrame, schema_json: str | None
-    ) -> DataFrame:
-        """Rows of ``files`` whose (basename, row_index) appear in
-        ``positions`` — the scan is pruned to exactly ``files`` and the
-        (metadata-sized) position set is broadcast."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
-
-        if not files:
-            schema = StructType.fromJson(json.loads(schema_json))
-            return local_frame(self.spark, [], schema)
-        reader = self.spark.read
-        if schema_json:
-            reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
-        raw = reader.parquet(*[os.path.join(self.path, f) for f in files])
-        cols = raw.columns
-        tagged = raw.withColumn(
-            "__f", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-        ).withColumn("__p", F.col("_metadata.row_index"))
-        kept = tagged.join(
-            F.broadcast(
-                positions.select(
-                    F.col("file").alias("__f"), F.col("pos").alias("__p")
-                )
-            ),
-            ["__f", "__p"],
-            "left_semi",
-        )
-        return kept.select(*cols)
 
     def _change_feed_dv(
         self, from_snap: Snapshot, to_snap: Snapshot, interval_adds: list[str]
@@ -2048,41 +1881,13 @@ class TxnTable:
         end (one feed-sized signed-count shuffle, ``_net_feed``) so the
         result keeps the general path's multiset contract exactly."""
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
 
         schema_json = to_snap.schema_json
         dv_from = self._read_dv(from_snap.dv_file)
         dv_to = self._read_dv(to_snap.dv_file)
         delta_del = dv_to.join(dv_from, ["file", "pos"], "left_anti")
         delta_res = dv_from.join(dv_to, ["file", "pos"], "left_anti")
-
-        if interval_adds:
-            reader = self.spark.read
-            if schema_json:
-                reader = reader.schema(
-                    StructType.fromJson(json.loads(schema_json))
-                )
-            added_raw = reader.parquet(
-                *[os.path.join(self.path, f) for f in interval_adds]
-            )
-            cols = added_raw.columns
-            tagged = added_raw.withColumn(
-                "__f",
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-            ).withColumn("__p", F.col("_metadata.row_index"))
-            added_vis = tagged.join(
-                F.broadcast(
-                    dv_to.select(
-                        F.col("file").alias("__f"), F.col("pos").alias("__p")
-                    )
-                ),
-                ["__f", "__p"],
-                "left_anti",
-            ).select(*cols)
-        else:
-            added_vis = local_frame(
-                self.spark, [], StructType.fromJson(json.loads(schema_json))
-            )
+        added_vis = self._scan(schema_json, interval_adds, drop=dv_to)
 
         # file lists are metadata-sized (they bound the pruned scans);
         # ONE driver job fetches both sides
@@ -2096,11 +1901,11 @@ class TxnTable:
         )
         del_files = {r["file"] for r in tagged_files if r["side"] == "d"}
         res_files = {r["file"] for r in tagged_files if r["side"] == "r"}
-        deletes = self._rows_at_positions(
-            [f for f in from_snap.files if f in del_files], delta_del, schema_json
+        deletes = self._scan(
+            schema_json, [f for f in from_snap.files if f in del_files], keep=delta_del
         )
-        restored = self._rows_at_positions(
-            [f for f in to_snap.files if f in res_files], delta_res, schema_json
+        restored = self._scan(
+            schema_json, [f for f in to_snap.files if f in res_files], keep=delta_res
         )
         inserts = added_vis.unionByName(restored)
         # net identical-value pairs: multiset contract of the general path
@@ -2317,7 +2122,7 @@ class TxnTable:
             k = max(1, -(-cand_bytes // target_bytes))
             if k >= len(candidates):
                 return snap.version  # packing would not shrink: no-op
-            df = self._read_files(snap, candidates)
+            df = self._visible(snap, candidates)
         else:
             # candidate selection from logged stats only — no Spark
             # jobs, no footer reads, no file listing. NOTE: a file with
@@ -2345,7 +2150,7 @@ class TxnTable:
             k = max(1, -(-cand_rows // target_rows))
             if k >= len(candidates):
                 return snap.version  # packing would not shrink: no-op
-            df = self._read_files(snap, candidates)
+            df = self._visible(snap, candidates)
         persisted = None
         if cluster_by and zorder and len(cluster_by) > 1:
             # the z-key's quantile probe evaluates `df` and the staged
@@ -2383,24 +2188,6 @@ class TxnTable:
         if set(candidates) == set(snap.files):
             actions = actions + [{"clear_dv": True}]
         return self._commit(snap.version + 1, actions, df.schema.json())
-
-    def _read_files(self, snap: Snapshot, files: list[str]) -> DataFrame:
-        """DV-aware read of a SUBSET of a snapshot's files under the
-        committed schema — the compaction input path: only the named
-        files are opened; DV entries naming other files simply never
-        match the anti-join."""
-        from pyspark.sql.types import StructType
-
-        if not files:
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            return local_frame(self.spark, [], schema)
-        paths = [os.path.join(self.path, f) for f in files]
-        if snap.schema_json:
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            df = self.spark.read.schema(schema).parquet(*paths)
-        else:
-            df = self.spark.read.parquet(*paths)
-        return self._apply_dv(df, snap)
 
     def restore(self, version: int) -> int:
         """Delta-style RESTORE: commit a NEW version whose visible

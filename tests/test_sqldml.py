@@ -715,6 +715,29 @@ def test_merge_source_rows_from_stats(spark, cat):
     assert sqldml._merge_source_rows_from_stats(cat, m2) is None
 
 
+def test_merge_routing_falls_back_without_a_log(spark, cat):
+    """The MERGE routing helpers read only logged metadata: a table
+    whose log is gone routes copy-on-write (False / None); only a
+    missing or unreadable log is a fallback, other errors surface."""
+    import shutil
+
+    _mk(cat, spark, n=12)
+    cat.create_table(
+        "src_nolog",
+        spark.range(7).selectExpr("id", "id AS v", "'x' AS s"),
+        transactional=True, primary_keys=["id"],
+    )
+    for name in ("t", "src_nolog"):
+        shutil.rmtree(cat.txn(name).log_path)
+    assert sqldml._merge_target_big(cat.txn("t")) is False
+    sql = (
+        "MERGE INTO t USING src_nolog AS s ON t.id = s.id "
+        "WHEN MATCHED THEN DELETE"
+    )
+    m = sqldml.parse_merge(sql, sqldml.mask_sql(sql))
+    assert sqldml._merge_source_rows_from_stats(cat, m) is None
+
+
 # -- round-7 advisories ------------------------------------------------------
 
 def test_insert_static_partition_overlapping_column_list_rejected(spark, cat):

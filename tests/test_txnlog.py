@@ -16,8 +16,10 @@ def t(spark, tmp_path):
     return TxnTable(spark, str(tmp_path / "txn"))
 
 
-def _r(spark, lo, hi, mult=2):
-    return spark.range(lo, hi).select(F.col("id"), (F.col("id") * mult).alias("v"))
+def _r(spark, lo, hi, mult=2, parts=None):
+    return spark.range(lo, hi, numPartitions=parts).select(
+        F.col("id"), (F.col("id") * mult).alias("v")
+    )
 
 
 def test_create_append_overwrite_time_travel(spark, t):
@@ -646,7 +648,9 @@ def test_deletion_vectors_null_condition_keeps_row(spark, t):
 
 
 def test_optimize_materializes_dv_and_vacuum_reclaims(spark, t):
-    t.create(_r(spark, 0, 60).coalesce(3))
+    # three 20-row files: each is under the 30-row target, so every file
+    # is a candidate (the split of a bare range depends on core count)
+    t.create(_r(spark, 0, 60, parts=3).coalesce(3))
     t.delete_where_dv("id % 2 = 1")
     snap = t.snapshot()
     assert snap.dv_file is not None
@@ -659,6 +663,50 @@ def test_optimize_materializes_dv_and_vacuum_reclaims(spark, t):
     assert any(d.startswith("dv-") for d in removed)
     # and the live table still reads
     assert t.read().count() == 30
+
+
+def test_optimize_keeps_dv_when_a_file_is_untouched(spark, t):
+    # files of 30, 15 and 15 rows: the 30-row file is well-sized at the
+    # 30-row target, so compaction packs only the two small ones and the
+    # DV stays, still hiding the untouched file's deleted rows
+    t.create(_r(spark, 0, 30, parts=1))
+    t.append(_r(spark, 30, 45, parts=1))
+    t.append(_r(spark, 45, 60, parts=1))
+    t.delete_where_dv("id % 2 = 1")
+    snap = t.snapshot()
+    big = [f for f in snap.files if snap.stats[f]["numRecords"] == 30]
+    assert len(big) == 1 and len(snap.files) == 3
+    assert t.optimize(target_files=2) == snap.version + 1
+    after = t.snapshot()
+    assert after.dv_file == snap.dv_file
+    assert len(after.files) == 2 and big[0] in after.files
+    assert after.stats[big[0]] == snap.stats[big[0]]
+    assert sorted(r.id for r in t.read().collect()) == list(range(0, 60, 2))
+
+
+@pytest.mark.parametrize("op", ["delete", "upsert", "update"])
+def test_dv_dml_matching_no_row_keeps_the_dv_store(spark, t, op):
+    t.create(_r(spark, 0, 40).coalesce(2))
+    t.delete_where_dv("id < 5")
+    before = t.snapshot()
+    assert before.dv_file is not None
+    # not extractable as a prune conjunct: the match scan runs and finds
+    # nothing, rather than stats proving it up front
+    no_match = "id % 7 = 100"
+    src = spark.createDataFrame([(100, 1), (101, 2)], "id bigint, v bigint")
+    if op == "delete":
+        t.delete_where_dv(no_match)
+    elif op == "upsert":
+        t.delete_insert_dv(src, ["id"])
+    else:
+        t.update_where_dv({"v": "v + 1"}, no_match)
+    after = t.snapshot()
+    assert after.dv_file == before.dv_file
+    assert after.version == before.version + 1
+    feed = t.change_feed(before.version, after.version)
+    got = sorted((r.id, r.v, r._change_type) for r in feed.collect())
+    want = [(100, 1, "insert"), (101, 2, "insert")] if op == "upsert" else []
+    assert got == want
 
 
 def test_dv_with_data_skipping_where(spark, t):
