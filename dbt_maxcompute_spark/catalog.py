@@ -31,7 +31,7 @@ import shutil
 import time
 import uuid
 from dataclasses import asdict, dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -121,6 +121,82 @@ def cluster_for_write(df: DataFrame, pt_cols: list[str]) -> DataFrame:
     return df.repartition(n, *[F.col(c) for c in pt_cols])
 
 
+def _write_parquet(
+    df: DataFrame, path: str, pt_cols: list[str], mode: str = "overwrite"
+) -> None:
+    """The one writer of table data files: clustered by partition (see
+    :func:`cluster_for_write`) and hive-partitioned on ``pt_cols``."""
+    w = cluster_for_write(df, pt_cols).write.mode(mode)
+    if pt_cols:
+        w = w.partitionBy(*pt_cols)
+    w.parquet(path)
+
+
+def _dump_meta(table_dir: str, meta: TableMeta) -> None:
+    os.makedirs(table_dir, exist_ok=True)
+    tmp = os.path.join(table_dir, META_FILE + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(asdict(meta), f, indent=1)
+    os.replace(tmp, os.path.join(table_dir, META_FILE))
+
+
+def _leaf_partition_dirs(base: str, depth: int) -> list[str]:
+    """Relative ``k1=v1[/k2=v2...]`` dirs at the partition depth, sorted
+    level by level."""
+    out: list[str] = []
+
+    def walk(cur: str, level: int) -> None:
+        for d in sorted(os.listdir(os.path.join(base, cur) if cur else base)):
+            if "=" not in d:
+                continue
+            rel = os.path.join(cur, d) if cur else d
+            if level + 1 == depth:
+                out.append(rel)
+            else:
+                walk(rel, level + 1)
+
+    walk("", 0)
+    return out
+
+
+def _listed_partition_dirs(
+    spark: SparkSession, result: DataFrame, parts: list[dict], probe: str, pt: list[str]
+) -> list[str]:
+    """Exact hive-escaped ``k=v`` leaf dirs for an explicit partition
+    list, obtained by letting Spark write a one-row-per-partition probe
+    frame to ``probe`` and reading the dir names back — metadata-sized,
+    and the escaping can never drift from the engine's own."""
+    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+    fields = [result.schema[c] for c in pt]
+    schema = StructType(list(fields) + [StructField("__probe", IntegerType())])
+    rows = [tuple(p[c] for c in pt) + (1,) for p in parts]
+    try:
+        probe_df = local_frame(spark, rows, schema)
+    except TypeError:
+        # Mis-typed static partition values (e.g. '5' for an int
+        # column) must keep degrading gracefully, not raise from the
+        # probe write: route them through strings and CAST to the
+        # target column types; values no cast can represent drop out
+        # (null partition value ≙ partition that cannot exist).
+        str_schema = StructType(
+            [StructField(f.name, StringType()) for f in fields]
+            + [StructField("__probe", IntegerType())]
+        )
+        str_rows = [
+            tuple(None if v is None else str(v) for v in r[:-1]) + (1,)
+            for r in rows
+        ]
+        probe_df = local_frame(spark, str_rows, str_schema).select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields],
+            "__probe",
+        )
+        for f in fields:
+            probe_df = probe_df.filter(F.col(f.name).isNotNull())
+    probe_df.coalesce(1).write.mode("overwrite").partitionBy(*pt).parquet(probe)
+    return _leaf_partition_dirs(probe, len(pt))
+
+
 _STRING_FAMILY_RX = re.compile(r"^(?:string|text|(?:varchar|char)\s*\(\s*(\d+)\s*\))$")
 
 
@@ -159,9 +235,12 @@ def _bloom_cols_from_props(meta: "TableMeta") -> list[str] | None:
     return [c.strip() for c in str(raw).split(",") if c.strip()]
 
 
+_IDENT_RX = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
 def _valid_ident(name: str) -> None:
     for part in name.split("."):
-        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", part):
+        if not _IDENT_RX.fullmatch(part):
             raise ValueError(f"invalid identifier: {name!r}")
 
 
@@ -232,11 +311,7 @@ class EngineCatalog:
             return TableMeta(**json.load(f))
 
     def _write_meta(self, name: str, meta: TableMeta) -> None:
-        os.makedirs(self.table_dir(name), exist_ok=True)
-        tmp = self._meta_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(asdict(meta), f, indent=1)
-        os.replace(tmp, self._meta_path(name))
+        _dump_meta(self.table_dir(name), meta)
         # a meta rewrite keeps the same file name — force this table to
         # re-register on the next register_views (see _table_fingerprint)
         self.mark_dirty(name)
@@ -245,8 +320,8 @@ class EngineCatalog:
         """Record a table mutation EVENT: the next register_views
         re-fingerprints (and re-registers) only dirty tables instead of
         walking the whole catalog per statement. Every engine write
-        path reports here — catalog DDL via _write_meta, DML staging
-        swaps and plain appends (plans/dml.py), and transaction-log
+        path reports here — catalog DDL via _write_meta, every
+        :meth:`replace` and :meth:`append_files`, and transaction-log
         commits through the :meth:`txn` on_commit hook. Out-of-band
         writes (a TxnTable constructed directly on a table path)
         bypass events by definition; :meth:`invalidate_views` restores
@@ -263,9 +338,11 @@ class EngineCatalog:
         base = os.path.join(self.warehouse, schema)
         if not os.path.isdir(base):
             return []
+        # staging and aside dirs of a replace (see :meth:`replace`) are
+        # named as no identifier can be, so they never list as tables
         names = sorted(
             d for d in os.listdir(base)
-            if os.path.exists(os.path.join(base, d, META_FILE))
+            if _IDENT_RX.fullmatch(d) and os.path.exists(os.path.join(base, d, META_FILE))
         )
         if pattern:
             # SQL LIKE -> regex, %→.* and _→. (reference impl.py:671-724)
@@ -302,9 +379,14 @@ class EngineCatalog:
 
         An enforced `contract` (reference create.sql:22-26 +
         impl.py:69-75) asserts declared==inferred columns before any
-        write, then stages the data and validates not_null constraints
-        against the STAGED parquet (model query runs once); a violation
-        aborts and leaves any existing relation untouched.
+        write, then validates not_null constraints against the STAGED
+        table (the model query runs once).
+
+        The build goes through :meth:`replace`: with ``mode="overwrite"``
+        an existing relation stays readable until the new table is
+        staged and swapped in, so a model may read the table it
+        rebuilds, and a failed build (query error, constraint
+        violation, failed swap) leaves the old relation untouched.
         """
         from dbt_maxcompute_spark import contracts as _contracts
 
@@ -345,59 +427,132 @@ class EngineCatalog:
         out = df
         if meta.auto_partition:
             out = meta.auto.derive(out)
-        pt_cols = meta.all_partition_cols()
-        missing = [c for c in pt_cols if c not in out.columns]
+        missing = [c for c in meta.all_partition_cols() if c not in out.columns]
         if missing:
             raise ValueError(f"partition columns {missing} not in dataframe")
-        path = self.table_dir(name)
         nn_cols = (
             contract_obj.not_null_columns()
             if contract_obj and contract_obj.enforced
             else []
         )
-        if transactional:
-            # log-committed create: version 0 of the table IS the commit;
-            # readers resolve files through the log, never by listing.
-            # A not_null contract is validated against the model frame
-            # up front (violation = no log, nothing to roll back).
-            if nn_cols:
-                _contracts.validate_not_null(out, nn_cols)
-            if self.exists(name) and mode == "overwrite":
-                self.drop(name)
-            from dbt_maxcompute_spark.txnlog import TxnTable
-
-            os.makedirs(path, exist_ok=True)
-            TxnTable(
-                self.spark, path, bloom_cols=_bloom_cols_from_props(meta)
-            ).create(out)
-        elif nn_cols:
-            # stage -> validate staged files -> swap (rollback parity:
-            # the old relation survives a constraint violation)
-            staging = f"{path}__contract_stage_{uuid.uuid4().hex[:8]}"
-            w = cluster_for_write(out, pt_cols).write.mode("overwrite")
-            if pt_cols:
-                w = w.partitionBy(*pt_cols)
-            w.parquet(staging)
-            try:
-                _contracts.validate_not_null(
-                    self.spark.read.parquet(staging), nn_cols
-                )
-            except Exception:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
-            if self.exists(name) and mode == "overwrite":
-                self.drop(name)
-            os.replace(staging, path)
-        else:
-            if self.exists(name) and mode == "overwrite":
-                self.drop(name)
-            writer = cluster_for_write(out, pt_cols).write.mode("overwrite")
-            if pt_cols:
-                writer = writer.partitionBy(*pt_cols)
-            writer.parquet(path)
         meta.schema_json = out.schema.json()
-        self._write_meta(name, meta)
+        self.replace(
+            name,
+            out,
+            meta,
+            validate=(
+                (lambda staged: _contracts.validate_not_null(staged, nn_cols))
+                if nn_cols
+                else None
+            ),
+        )
         return meta
+
+    def replace(
+        self,
+        name: str,
+        df: DataFrame,
+        meta: TableMeta,
+        partitions: list[dict] | None = None,
+        validate: Callable[[DataFrame], None] | None = None,
+    ) -> None:
+        """Replace the table's files with ``df`` — the one protocol every
+        rebuild, rewrite, truncate, compaction and partition overwrite
+        goes through (dbt's build-aside-then-swap, reference
+        adapters.sql:14-26):
+
+        1. build the new table in a sibling staging dir: ``df`` through
+           the one parquet writer, or a fresh transaction log when
+           ``meta`` is transactional, plus the meta sidecar;
+        2. ``validate`` the staged table (read back), if given;
+        3. swap: each live dir renames aside, its staged counterpart
+           renames in, and the aside copy is removed;
+        4. on any failure, restore every dir moved aside and remove the
+           staging.
+
+        The old relation stays readable until step 3, so ``df`` may read
+        the table it replaces. ``meta`` is the new table's sidecar.
+        ``partitions`` (partition value dicts) limits the swap to those
+        leaf partition dirs; the sidecar stays, and a listed partition
+        the staged rows do not fill is emptied — the reference's static
+        INSERT OVERWRITE PARTITION(...) with an empty select clears it
+        (insert_overwrite.sql:39-63). Replacing the whole dir also drops
+        the old relation's bucket registration, as :meth:`drop` does.
+        """
+        pt = meta.all_partition_cols()
+        path = self.table_dir(name)
+        head, base = os.path.split(path)
+        tag = uuid.uuid4().hex[:8]
+        # a leading '.' is no identifier: never listed as a table
+        staging = os.path.join(head, f".{base}.stage-{tag}")
+        aside = os.path.join(head, f".{base}.old-{tag}")
+        whole = partitions is None or not pt
+        bucketed = whole and self._bucketed(name)
+        moved: list[tuple[str, str]] = []
+        swapped = False
+        try:
+            if meta.transactional:
+                from dbt_maxcompute_spark.txnlog import TxnTable
+
+                t = TxnTable(self.spark, staging, bloom_cols=_bloom_cols_from_props(meta))
+                t.create(df)
+            else:
+                _write_parquet(df, staging, pt)
+            if validate:
+                validate(
+                    t.read()
+                    if meta.transactional
+                    else self.spark.read.schema(df.schema).parquet(staging)
+                )
+            if whole:
+                _dump_meta(staging, meta)
+                swaps = [(staging, path)]
+            else:
+                # every leaf dir the staging write produced replaces its
+                # live counterpart — Spark's own hive path escaping
+                staged = _leaf_partition_dirs(staging, len(pt))
+                swaps = [(os.path.join(staging, r), os.path.join(path, r)) for r in staged]
+                if len(staged) < len(partitions):
+                    listed = _listed_partition_dirs(
+                        self.spark, df, partitions, os.path.join(staging, "_probe"), pt
+                    )
+                    have = set(staged)
+                    swaps += [(None, os.path.join(path, r)) for r in listed if r not in have]
+            os.makedirs(aside)
+            for i, (new, live) in enumerate(swaps):
+                old = os.path.join(aside, str(i))
+                if os.path.exists(live):
+                    os.replace(live, old)
+                moved.append((live, old))
+                if new is not None:
+                    os.makedirs(os.path.dirname(live), exist_ok=True)
+                    os.replace(new, live)
+            swapped = True
+        finally:
+            if not swapped:
+                for live, old in reversed(moved):
+                    if os.path.exists(live):
+                        shutil.rmtree(live)
+                    if os.path.exists(old):
+                        os.replace(old, live)
+            shutil.rmtree(staging, ignore_errors=True)
+            shutil.rmtree(aside, ignore_errors=True)
+        if bucketed:
+            self._drop_bucket_reg(name)
+        self.mark_dirty(name)
+
+    def partition_dirs(self, name: str) -> list[str]:
+        """The table's leaf partition dirs (``k1=v1[/k2=v2...]``), sorted
+        level by level — for a hive layout the tree IS the partition
+        list."""
+        depth = len(self.meta(name).all_partition_cols())
+        return _leaf_partition_dirs(self.table_dir(name), depth)
+
+    def append_files(self, name: str, df: DataFrame) -> None:
+        """Plain append: new files land beside the live ones, nothing is
+        replaced (transactional tables append through their log)."""
+        _write_parquet(df, self.table_dir(name), self.meta(name).all_partition_cols(), "append")
+        self.mark_dirty(name)
 
     # -- bucketed tables ------------------------------------------------------
 
@@ -733,20 +888,24 @@ class EngineCatalog:
         if EngineCatalog._active_registrar is not self:
             return
         schema, table = self._split(name)
+        # dropTempView answers False for a view that is not registered
+        if schema == self.default_schema:
+            self.spark.catalog.dropTempView(table)
+        self.spark.catalog.dropTempView(f"{schema}_{table}")
+
+    def _bucketed(self, name: str) -> bool:
+        """Whether ``name``'s sidecar records a bucketed layout (whose
+        session-catalog registration must go with its files). An
+        unreadable or foreign sidecar counts as not bucketed, so its
+        files can still be removed."""
         try:
-            if schema == self.default_schema:
-                self.spark.catalog.dropTempView(table)
-            self.spark.catalog.dropTempView(f"{schema}_{table}")
-        except Exception:
-            pass
+            return self.exists(name) and bool(self.meta(name).bucket_by)
+        except (OSError, ValueError, TypeError):
+            return False
 
     def drop(self, name: str) -> None:
-        if self.exists(name):
-            try:
-                if self.meta(name).bucket_by:
-                    self._drop_bucket_reg(name)
-            except Exception:
-                pass  # sidecar unreadable — still remove the files
+        if self._bucketed(name):
+            self._drop_bucket_reg(name)
         p = self.table_dir(name)
         if os.path.exists(p):
             shutil.rmtree(p)
@@ -783,21 +942,8 @@ class EngineCatalog:
             t = self.txn(name)
             t.overwrite(t.read().limit(0))
             return
-        empty = self.read(name).limit(0)
-        # preserve schema: overwrite with an empty frame
-        pt = meta.all_partition_cols()
-        writer = empty.write.mode("overwrite")
-        if pt:
-            writer = writer.partitionBy(*pt)
-        self.drop_data_keep_meta(name)
-        writer.parquet(self.table_dir(name))
-        self._write_meta(name, meta)
-
-    def drop_data_keep_meta(self, name: str) -> None:
-        meta = self.meta(name)
-        shutil.rmtree(self.table_dir(name))
-        os.makedirs(self.table_dir(name), exist_ok=True)
-        self._write_meta(name, meta)
+        # preserve schema: replace with an empty frame
+        self.replace(name, self.read(name).limit(0), meta)
 
     def clone(self, src: str, dst: str) -> None:
         """CLONE TABLE src TO dst, drop-if-exists first (reference
@@ -826,8 +972,9 @@ class EngineCatalog:
         file per hive partition for partitioned ones — the same
         clustering the original write used, so splitting an oversized
         single partition stays the caller's partition-granularity
-        decision). Stage-then-swap, so a failed compaction leaves the
-        table untouched. Returns {files_before, files_after, bytes}.
+        decision). Goes through :meth:`replace`, so a failed compaction
+        leaves the table untouched. Returns {files_before, files_after,
+        bytes}.
         """
         meta = self.meta(name)
         if meta.table_type != "table":
@@ -866,34 +1013,9 @@ class EngineCatalog:
         before = _data_files()
         total = sum(os.path.getsize(f) for f in before)
         df = self.read(name)
-        pt = meta.all_partition_cols()
-        staging = f"{path}__compact_stage_{uuid.uuid4().hex[:8]}"
-        try:
-            if pt:
-                w = cluster_for_write(df, pt).write.mode("overwrite")
-                w.partitionBy(*pt).parquet(staging)
-            else:
-                n = max(1, -(-total // max(1, target_file_bytes)))
-                df.repartition(int(n)).write.mode("overwrite").parquet(staging)
-        except Exception:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        # meta sidecar travels WITH the staged dir, so the table dir is
-        # never meta-less; the swap itself is rename-aside / rename-in /
-        # restore-on-failure — a crash at any point leaves either the old
-        # or the new table fully intact (ADVICE r3: rmtree-then-replace
-        # had a window where the table vanished)
-        with open(os.path.join(staging, META_FILE), "w") as fh:
-            json.dump(asdict(meta), fh, indent=1)
-        old = f"{path}__compact_old_{uuid.uuid4().hex[:8]}"
-        os.replace(path, old)
-        try:
-            os.replace(staging, path)
-        except Exception:
-            os.replace(old, path)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+        if not meta.all_partition_cols():
+            df = df.repartition(int(max(1, -(-total // max(1, target_file_bytes)))))
+        self.replace(name, df, meta)
         return {
             "files_before": len(before),
             "files_after": len(_data_files()),
@@ -1025,25 +1147,16 @@ class EngineCatalog:
         self._rewrite(name, df, meta)
 
     def _rewrite(self, name: str, df: DataFrame, meta: TableMeta) -> None:
-        """Full rewrite through a staging dir (cannot read+overwrite the
-        same parquet path in one job). Transactional tables need no
-        staging dance — data files are immutable, so the rewrite is just
-        the next commit."""
+        """Full rewrite through :meth:`replace` (cannot read+overwrite
+        the same parquet path in one job). Transactional tables need no
+        staging — data files are immutable, so the rewrite is just the
+        next commit."""
+        meta.schema_json = df.schema.json()
         if meta.transactional:
             self.txn(name).overwrite(df)
-            meta.schema_json = df.schema.json()
             self._write_meta(name, meta)
-            return
-        staging = self.table_dir(name) + "__staging"
-        pt = meta.all_partition_cols()
-        w = cluster_for_write(df, pt).write.mode("overwrite")
-        if pt:
-            w = w.partitionBy(*pt)
-        w.parquet(staging)
-        shutil.rmtree(self.table_dir(name))
-        os.replace(staging, self.table_dir(name))
-        meta.schema_json = df.schema.json()
-        self._write_meta(name, meta)
+        else:
+            self.replace(name, df, meta)
 
     # -- info schema / lifecycle -------------------------------------------------
 

@@ -76,11 +76,8 @@ def refresh_materialized_view(catalog: EngineCatalog, name: str) -> None:
     if meta.table_type != "materialized_view":
         raise ValueError(f"{name} is not a materialized view")
     df = catalog.sql(meta.view_sql, mv_rewrite=False)
-    from dbt_maxcompute_spark.plans.dml import _stage_and_swap
-
-    _stage_and_swap(catalog, name, meta, df, None)
     meta.mv_config["built_at"] = time.time()
-    catalog._write_meta(name, meta)  # noqa: SLF001
+    catalog.replace(name, df, meta)
 
 
 def merge_additive_rollup(

@@ -158,9 +158,7 @@ def run_snapshot(
         # run is a time-travelable version
         catalog.txn(name).overwrite(result)
     else:
-        from dbt_maxcompute_spark.plans.dml import _stage_and_swap  # shared writer
-
-        _stage_and_swap(catalog, name, meta, result, None)
+        catalog.replace(name, result, meta)
     return "merge"
 
 

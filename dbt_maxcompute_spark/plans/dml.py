@@ -29,21 +29,19 @@ Scale design:
   key). Update-set semantics, partition-column exclusion from UPDATE
   (merge.sql:7-16), and incremental_predicates (merge.sql:2,26-33)
   are column-level expressions on top.
-- Writes stage to a sibling directory then atomically swap affected
-  partitions (a parquet path can't be read and overwritten in the
-  same job — the reference's temp-table pattern, incremental.sql:69-71).
+- Writes go through ``EngineCatalog.replace``: stage to a sibling
+  directory, then swap in the affected partitions (or the whole table)
+  — a parquet path can't be read and overwritten in the same job (the
+  reference's temp-table pattern, incremental.sql:69-71). This module
+  plans rows; it never touches table files itself.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dbt_maxcompute_spark.catalog import EngineCatalog, TableMeta, cluster_for_write
+from dbt_maxcompute_spark.catalog import EngineCatalog, TableMeta
 from dbt_maxcompute_spark.localframe import local_frame
 from dbt_maxcompute_spark.txnlog import retry_commit
 
@@ -147,127 +145,6 @@ def _scope_to_partitions(df: DataFrame, pt_cols: list[str], parts: list[dict]) -
     return df.join(F.broadcast(renamed), cond, "left_semi")
 
 
-def _stage_and_swap(
-    catalog: EngineCatalog,
-    name: str,
-    meta: TableMeta,
-    result: DataFrame,
-    replace_partitions: list[dict] | None,
-) -> None:
-    """Write `result` to a staging dir, then swap it into the target:
-    whole-table swap, or per-partition directory swap when pruned."""
-    table_dir = catalog.table_dir(name)
-    staging = f"{table_dir}__stage_{uuid.uuid4().hex[:8]}"
-    pt = meta.all_partition_cols()
-    w = cluster_for_write(result, pt).write.mode("overwrite")
-    if pt:
-        w = w.partitionBy(*pt)
-    w.parquet(staging)
-    try:
-        if replace_partitions is None or not pt:
-            meta_backup = catalog.meta(name)
-            shutil.rmtree(table_dir)
-            os.replace(staging, table_dir)
-            catalog._write_meta(name, meta_backup)  # noqa: SLF001
-        else:
-            staged = set(_leaf_partition_dirs(staging, len(pt)))
-            if len(staged) < len(replace_partitions):
-                # A STATIC overwrite with a source that is empty for
-                # some listed partition must still truncate it — the
-                # reference's static branch is INSERT OVERWRITE
-                # PARTITION(...), and overwriting with an empty select
-                # clears the partition (insert_overwrite.sql:39-63).
-                # Leaf dir names come from Spark's own hive escaping
-                # via a one-row-per-partition probe write — never
-                # re-implemented here.
-                for rel in _listed_partition_dirs(
-                    catalog.spark, result, replace_partitions, staging + "__probe", pt
-                ):
-                    if rel not in staged:
-                        dst_dir = os.path.join(table_dir, rel)
-                        if os.path.exists(dst_dir):
-                            shutil.rmtree(dst_dir)
-            # The result frame contains only affected partitions (target
-            # was pre-filtered to them), so every leaf partition dir the
-            # staging write produced replaces its target counterpart —
-            # Spark's own hive path escaping, no re-encoding guesswork.
-            for rel in staged:
-                src_dir = os.path.join(staging, rel)
-                dst_dir = os.path.join(table_dir, rel)
-                if os.path.exists(dst_dir):
-                    shutil.rmtree(dst_dir)
-                os.makedirs(os.path.dirname(dst_dir), exist_ok=True)
-                os.replace(src_dir, dst_dir)
-        catalog.mark_dirty(name)
-    finally:
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-
-
-def _listed_partition_dirs(
-    spark, result: DataFrame, parts: list[dict], probe: str, pt: list[str]
-) -> list[str]:
-    """Exact hive-escaped ``k=v`` leaf dirs for an explicit partition
-    list, obtained by letting Spark write a one-row-per-partition probe
-    frame and reading the dir names back — metadata-sized, and the
-    escaping can never drift from the engine's own."""
-    fields = [result.schema[c] for c in pt]
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    schema = StructType(list(fields) + [StructField("__probe", IntegerType())])
-    rows = [tuple(p[c] for c in pt) + (1,) for p in parts]
-    try:
-        try:
-            probe_df = local_frame(spark, rows, schema)
-        except TypeError:
-            # Mis-typed static partition values (e.g. '5' for an int
-            # column) must keep degrading gracefully, not raise from the
-            # probe write: route them through strings and CAST to the
-            # target column types; values no cast can represent drop out
-            # (null partition value ≙ partition that cannot exist).
-            str_schema = StructType(
-                [StructField(f.name, StringType()) for f in fields]
-                + [StructField("__probe", IntegerType())]
-            )
-            str_rows = [
-                tuple(None if v is None else str(v) for v in r[:-1]) + (1,)
-                for r in rows
-            ]
-            probe_df = local_frame(spark, str_rows, str_schema).select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in fields
-                ],
-                "__probe",
-            )
-            for f in fields:
-                probe_df = probe_df.filter(F.col(f.name).isNotNull())
-        probe_df.coalesce(1).write.mode(
-            "overwrite"
-        ).partitionBy(*pt).parquet(probe)
-        return _leaf_partition_dirs(probe, len(pt))
-    finally:
-        shutil.rmtree(probe, ignore_errors=True)
-
-
-def _leaf_partition_dirs(base: str, depth: int) -> list[str]:
-    """Relative `k1=v1[/k2=v2...]` dirs at the partition depth."""
-    out: list[str] = []
-
-    def walk(cur: str, level: int) -> None:
-        for d in os.listdir(os.path.join(base, cur) if cur else base):
-            if "=" not in d:
-                continue
-            rel = os.path.join(cur, d) if cur else d
-            if level + 1 == depth:
-                out.append(rel)
-            else:
-                walk(rel, level + 1)
-
-    walk("", 0)
-    return out
-
-
 # Distinct-key ceiling for the deletion-vector upsert fast path: the op
 # broadcasts source.select(keys).distinct(), so above this the batch
 # routes to the copy-on-write recompute instead of risking a broadcast/
@@ -324,12 +201,7 @@ def append(catalog: EngineCatalog, name: str, source: DataFrame) -> None:
         t = catalog.txn(name)
         retry_commit(lambda: t.append(src))
         return
-    pt = meta.all_partition_cols()
-    w = cluster_for_write(src, pt).write.mode("append")
-    if pt:
-        w = w.partitionBy(*pt)
-    w.parquet(catalog.table_dir(name))
-    catalog.mark_dirty(name)
+    catalog.append_files(name, src)
 
 
 # ---------------------------------------------------------------------------
@@ -402,7 +274,7 @@ def merge(
         tgt = _scope_to_partitions(tgt, pt_cols, replace_parts)
 
     result = _merge_result(tgt, src, keys, update_cols, incremental_predicates)
-    _stage_and_swap(catalog, name, meta, result, replace_parts)
+    catalog.replace(name, result, meta, partitions=replace_parts)
 
 
 def _merge_result(
@@ -576,7 +448,7 @@ def delete_insert(
 
     survivors = _delete_insert_survivors(tgt_scope, src, keys, incremental_predicates)
     result = survivors.unionByName(src)
-    _stage_and_swap(catalog, name, meta, result, replace_parts)
+    catalog.replace(name, result, meta, partitions=replace_parts)
 
 
 # ---------------------------------------------------------------------------
@@ -607,7 +479,7 @@ def insert_overwrite(
         replace = _affected_partitions(src, pt_cols)
     if not replace:
         return []  # empty source: nothing to overwrite
-    _stage_and_swap(catalog, name, meta, src, replace)
+    catalog.replace(name, src, meta, partitions=replace)
     return replace
 
 

@@ -1121,14 +1121,14 @@ def execute_statement(catalog: "EngineCatalog", stmt: str) -> DataFrame | None:
         df = catalog.sql(rewrite_time_travel(catalog, strip_outer_parens(query)))
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        if replace and catalog.exists(tbl):
-            catalog.drop(tbl)
         kw = {}
         if txn:
             # TRANSACTIONAL TABLE ... PRIMARY KEY (...) mirrors the
             # reference's create.sql:44-49 surface in one statement
             kw = {"transactional": True, "primary_keys": pk or []}
-        catalog.create_table(tbl, df, **kw)
+        # OR REPLACE swaps the new table in once it is built: the query
+        # may read the table it replaces, and a failure keeps the old one
+        catalog.create_table(tbl, df, mode="overwrite" if replace else "error", **kw)
         # row count observed on the create's own write — re-running the
         # defining query for the summary would double the cost and can
         # disagree with the written data for nondeterministic queries
@@ -1315,35 +1315,18 @@ def execute_statement(catalog: "EngineCatalog", stmt: str) -> DataFrame | None:
         new_v = t.restore(ver)
         return _summary(catalog, "RESTORE", tbl, new_v)
     if op == "show_partitions":
-        import os as _os
-
         _, tbl = parsed
-        meta = catalog.meta(tbl)
-        pt = list(meta.partition_by or [])
-        if meta.auto_partition and meta.auto.generated_column not in pt:
-            pt.append(meta.auto.generated_column)
-        if not pt:
+        if not catalog.meta(tbl).all_partition_cols():
             raise ValueError(f"SHOW PARTITIONS: {tbl} is not partitioned")
         # hive layout: the directory tree IS the partition list —
         # metadata-only, zero Spark jobs (the reference's warehouse
         # answers this from table metadata the same way). Partitioned
         # tables are never transactional here (catalog.create_table
         # rejects the combination), so the tree is authoritative.
-        base = catalog.table_dir(tbl)
-        combos: list[str] = []
-
-        def walk(d: str, depth: int, prefix: list[str]) -> None:
-            if depth == len(pt):
-                combos.append("/".join(prefix))
-                return
-            want = pt[depth] + "="
-            for e in sorted(_os.listdir(d)):
-                if e.startswith(want) and _os.path.isdir(_os.path.join(d, e)):
-                    walk(_os.path.join(d, e), depth + 1, prefix + [e])
-
-        walk(base, 0, [])
         return local_frame(
-            catalog.spark, [(p,) for p in combos], "partition string"
+            catalog.spark,
+            [(p,) for p in catalog.partition_dirs(tbl)],
+            "partition string",
         )
     if op == "copy_into":
         import fnmatch as _fnmatch
@@ -1407,9 +1390,6 @@ def execute_statement(catalog: "EngineCatalog", stmt: str) -> DataFrame | None:
                     if f.endswith(".parquet"):
                         n_files += 1
                         size += _os.path.getsize(_os.path.join(root, f))
-        pt = list(meta.partition_by or [])
-        if meta.auto_partition and meta.auto.generated_column not in pt:
-            pt.append(meta.auto.generated_column)
         return local_frame(
             catalog.spark,
             [(
@@ -1417,7 +1397,7 @@ def execute_statement(catalog: "EngineCatalog", stmt: str) -> DataFrame | None:
                 meta.table_type,
                 "parquet",
                 base,
-                pt,
+                meta.all_partition_cols(),
                 n_files,
                 size,
                 bool(meta.transactional),

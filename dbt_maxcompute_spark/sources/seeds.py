@@ -111,7 +111,6 @@ def load_seed(
     typed = raw.select(
         *[F.col(c).cast(t).alias(c) for c, t in schema_map.items()]
     )
-    if catalog.exists(name) and full_refresh:
-        catalog.drop(name)
-    catalog.create_table(name, typed, **create_opts)
+    mode = "overwrite" if full_refresh else "error"
+    catalog.create_table(name, typed, mode=mode, **create_opts)
     return catalog.read(name)

@@ -301,3 +301,175 @@ def test_register_views_freshness_after_mutation(spark, tmp_path):
     cat2.create_table("t", spark.range(9).selectExpr("id"))
     assert cat2.sql("SELECT count(*) AS n FROM t").collect()[0].n == 9
     assert cat.sql("SELECT count(*) AS n FROM t").collect()[0].n == 2
+
+
+# -- the replacement contract: build beside the table, swap in once ---------
+#
+# Every rebuild entry point rebuilds `t` from a query over `t` itself; the
+# old relation must stay readable until the new one is staged and swapped
+# in, and a failure at any step must leave it exactly as it was.
+
+_LAYOUTS = {
+    "plain": {},
+    "partitioned": {"partition_by": ["pt"]},
+    "transactional": {"transactional": True, "primary_keys": ["id"]},
+}
+_CONTRACT = {
+    "enforced": True,
+    "columns": [
+        {"name": "id", "data_type": "bigint", "constraints": ["not_null"]},
+        {"name": "name", "data_type": "string"},
+        {"name": "pt", "data_type": "string"},
+    ],
+}
+_KEEP = "SELECT id, name, pt FROM t WHERE id >= 3"
+# fails at run time, inside the write job, after planning succeeded
+_BOOM = (
+    "SELECT CASE WHEN id = 3 THEN CAST(raise_error('boom') AS BIGINT) "
+    "ELSE id END AS id, name, pt FROM t"
+)
+
+
+def _rebuild_run_model(catalog, layout, query):
+    from dbt_maxcompute_spark.runner import run_model
+
+    run_model(catalog, {"name": "t", "materialized": "table", **_LAYOUTS[layout]}, query)
+
+
+def _rebuild_full_refresh(catalog, layout, query):
+    from dbt_maxcompute_spark.materializations.incremental import run_incremental
+
+    run_incremental(catalog, "t", catalog.sql(query), full_refresh=True, **_LAYOUTS[layout])
+
+
+def _rebuild_ctas(catalog, layout, query):
+    kind = "TRANSACTIONAL TABLE t PRIMARY KEY (id)" if layout == "transactional" else "TABLE t"
+    catalog.execute(f"CREATE OR REPLACE {kind} AS {query}")
+
+
+def _rebuild_contract(catalog, layout, query):
+    catalog.create_table(
+        "t", catalog.sql(query), contract=_CONTRACT, mode="overwrite", **_LAYOUTS[layout]
+    )
+
+
+_REBUILDS = {
+    "run_model_table": _rebuild_run_model,
+    "full_refresh": _rebuild_full_refresh,
+    "ctas_or_replace": _rebuild_ctas,
+    "contract_overwrite": _rebuild_contract,
+}
+_replacement = pytest.mark.parametrize(
+    "layout,entry",
+    [(layout, entry) for entry in _REBUILDS for layout in _LAYOUTS],
+)
+
+
+def _seed(spark, catalog, layout):
+    df = spark.createDataFrame(
+        [(i, f"n{i}", f"p{i % 2}") for i in range(6)], "id bigint, name string, pt string"
+    )
+    catalog.create_table("t", df, **_LAYOUTS[layout])
+
+
+def _rows(catalog):
+    return sorted(tuple(r) for r in catalog.read("t").select("id", "name", "pt").collect())
+
+
+def _hook_swap(monkeypatch, catalog, on_aside=lambda: None, on_rename_in=lambda: None):
+    """Call ``on_aside()`` just before the table's dir is renamed away,
+    and ``on_rename_in()`` just before another dir is renamed onto it."""
+    import os
+
+    real, live, aside = os.replace, os.path.abspath(catalog.table_dir("t")), []
+
+    def hooked(src, dst):
+        if os.path.abspath(src) == live:
+            on_aside()
+            aside.append(os.path.abspath(dst))
+        elif os.path.abspath(dst) == live and os.path.abspath(src) not in aside:
+            on_rename_in()
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", hooked)
+
+
+@_replacement
+def test_rebuild_reading_its_own_table(spark, catalog, layout, entry):
+    _seed(spark, catalog, layout)
+    _REBUILDS[entry](catalog, layout, _KEEP)
+    assert _rows(catalog) == [(i, f"n{i}", f"p{i % 2}") for i in range(3, 6)]
+
+
+@_replacement
+def test_failed_rebuild_keeps_old_table(spark, catalog, layout, entry):
+    _seed(spark, catalog, layout)
+    rows, meta = _rows(catalog), catalog.meta("t")
+    with pytest.raises(Exception, match="boom"):
+        _REBUILDS[entry](catalog, layout, _BOOM)
+    assert catalog.exists("t")
+    assert _rows(catalog) == rows
+    assert catalog.meta("t") == meta
+
+
+@_replacement
+def test_failed_swap_restores_old_table(spark, catalog, layout, entry, monkeypatch):
+    import os
+
+    _seed(spark, catalog, layout)
+    rows, meta = _rows(catalog), catalog.meta("t")
+
+    def fail():
+        raise OSError("rename-in failed")
+
+    _hook_swap(monkeypatch, catalog, on_rename_in=fail)
+    with pytest.raises(OSError, match="rename-in failed"):
+        _REBUILDS[entry](catalog, layout, _KEEP)
+    monkeypatch.undo()
+    assert _rows(catalog) == rows
+    assert catalog.meta("t") == meta
+    # no staging or aside directory is left beside the table
+    assert os.listdir(os.path.dirname(catalog.table_dir("t"))) == ["t"]
+
+
+@_replacement
+def test_list_tables_during_replace(spark, catalog, layout, entry, monkeypatch):
+    _seed(spark, catalog, layout)
+    seen = []
+    _hook_swap(
+        monkeypatch,
+        catalog,
+        on_aside=lambda: seen.append(catalog.list_tables()),
+        on_rename_in=lambda: seen.append(catalog.list_tables()),
+    )
+    _REBUILDS[entry](catalog, layout, _KEEP)
+    # the staged table (sidecar included) sits beside `t` at both
+    # points and the old one in the aside dir at the second; neither
+    # lists, and `t` is missing only for the width of one rename
+    assert seen == [["t"], []]
+
+
+def test_partition_replace_failure_restores_every_partition(spark, catalog, monkeypatch):
+    """A partition overwrite swaps several leaf dirs; a failure on a
+    later one puts back the ones already swapped."""
+    import os
+
+    from dbt_maxcompute_spark.plans import dml
+
+    _seed(spark, catalog, "partitioned")
+    rows = _rows(catalog)
+    real, calls = os.replace, []
+
+    def flaky(src, dst):
+        if os.path.basename(dst).startswith("pt="):  # a rename-in
+            calls.append(dst)
+            if len(calls) == 2:
+                raise OSError("second partition failed")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", flaky)
+    with pytest.raises(OSError, match="second partition"):
+        dml.insert_overwrite(catalog, "t", catalog.sql("SELECT id + 10 AS id, name, pt FROM t"))
+    monkeypatch.undo()
+    assert _rows(catalog) == rows
+    assert os.listdir(os.path.dirname(catalog.table_dir("t"))) == ["t"]
