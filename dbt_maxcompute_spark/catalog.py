@@ -33,6 +33,8 @@ import uuid
 from dataclasses import asdict, dataclass, field
 from typing import Any, Callable
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -130,6 +132,25 @@ def _write_parquet(
     if pt_cols:
         w = w.partitionBy(*pt_cols)
     w.parquet(path)
+
+
+def _write_bucketed(df: DataFrame, path: str, meta: TableMeta, reg: str) -> None:
+    """The one bucketed writer, through the session registration ``reg``
+    (external: dropping it keeps the files). Partitioning on the bucket
+    hash makes each bucket ONE file, so the scan keeps its SORTED BY
+    ordering (Spark drops it when a bucket spans files)."""
+    writer = (
+        df.repartition(meta.bucket_num, *[F.col(c) for c in meta.bucket_by])
+        .write.format("parquet")
+        .option("path", path)
+        .bucketBy(meta.bucket_num, *meta.bucket_by)
+    )
+    if meta.sort_by:
+        writer = writer.sortBy(*meta.sort_by)
+    try:
+        writer.saveAsTable(reg)
+    finally:
+        df.sparkSession.sql(f"DROP TABLE IF EXISTS {reg}")
 
 
 def _dump_meta(table_dir: str, meta: TableMeta) -> None:
@@ -306,6 +327,12 @@ class EngineCatalog:
     def exists(self, name: str) -> bool:
         return os.path.exists(self._meta_path(name))
 
+    def is_table(self, name: str) -> bool:
+        """Whether ``name`` holds a table: what an incremental, snapshot
+        or seed build adds to. Nothing, a view or an MV there means a
+        first run, swapped in over it (reference relation.py:42-50)."""
+        return self.exists(name) and self.meta(name).table_type == "table"
+
     def meta(self, name: str) -> TableMeta:
         with open(self._meta_path(name)) as f:
             return TableMeta(**json.load(f))
@@ -451,33 +478,37 @@ class EngineCatalog:
     def replace(
         self,
         name: str,
-        df: DataFrame,
+        df: DataFrame | str | None,
         meta: TableMeta,
         partitions: list[dict] | None = None,
         validate: Callable[[DataFrame], None] | None = None,
     ) -> None:
-        """Replace the table's files with ``df`` — the one protocol every
-        rebuild, rewrite, truncate, compaction and partition overwrite
-        goes through (dbt's build-aside-then-swap, reference
+        """Replace whatever is at ``name`` with the relation ``meta``
+        describes — the one protocol every build, rebuild, rewrite,
+        truncate, compaction, partition overwrite, clone and relation-
+        type change goes through (dbt's build-aside-then-swap, reference
         adapters.sql:14-26):
 
-        1. build the new table in a sibling staging dir: ``df`` through
-           the one parquet writer, or a fresh transaction log when
-           ``meta`` is transactional, plus the meta sidecar;
-        2. ``validate`` the staged table (read back), if given;
+        1. build the new relation in a sibling staging dir, its kind
+           read off ``meta``: a view is its sidecar only (``df`` None);
+           a clone copies the dir of the relation ``df`` names, history
+           included; a bucketed, transactional or plain table writes
+           ``df`` hash-bucketed, as a fresh log or as parquet; then the
+           meta sidecar;
+        2. ``validate`` the staged rows (read back), if given;
         3. swap: each live dir renames aside, its staged counterpart
            renames in, and the aside copy is removed;
         4. on any failure, restore every dir moved aside and remove the
            staging.
 
         The old relation stays readable until step 3, so ``df`` may read
-        the table it replaces. ``meta`` is the new table's sidecar.
-        ``partitions`` (partition value dicts) limits the swap to those
-        leaf partition dirs; the sidecar stays, and a listed partition
-        the staged rows do not fill is emptied — the reference's static
-        INSERT OVERWRITE PARTITION(...) with an empty select clears it
-        (insert_overwrite.sql:39-63). Replacing the whole dir also drops
-        the old relation's bucket registration, as :meth:`drop` does.
+        it. ``partitions`` (partition value dicts) limits the swap to
+        those leaf partition dirs; the sidecar stays, and a listed
+        partition the staged rows do not fill is emptied — the
+        reference's static INSERT OVERWRITE PARTITION(...) with an empty
+        select clears it (insert_overwrite.sql:39-63). A whole swap
+        unregisters the name's temp views, and from or to a bucketed
+        table drops its session registration.
         """
         pt = meta.all_partition_cols()
         path = self.table_dir(name)
@@ -487,16 +518,20 @@ class EngineCatalog:
         staging = os.path.join(head, f".{base}.stage-{tag}")
         aside = os.path.join(head, f".{base}.old-{tag}")
         whole = partitions is None or not pt
-        bucketed = whole and self._bucketed(name)
+        bucketed = whole and (bool(meta.bucket_by) or self._bucketed(name))
         moved: list[tuple[str, str]] = []
         swapped = False
         try:
-            if meta.transactional:
+            if isinstance(df, str):
+                shutil.copytree(self.table_dir(df), staging)
+            elif meta.bucket_by:
+                _write_bucketed(df, staging, meta, f"{self._bucket_reg_name(name)}_{tag}")
+            elif meta.transactional:
                 from dbt_maxcompute_spark.txnlog import TxnTable
 
                 t = TxnTable(self.spark, staging, bloom_cols=_bloom_cols_from_props(meta))
                 t.create(df)
-            else:
+            elif meta.table_type != "view":
                 _write_parquet(df, staging, pt)
             if validate:
                 validate(
@@ -539,6 +574,8 @@ class EngineCatalog:
             shutil.rmtree(aside, ignore_errors=True)
         if bucketed:
             self._drop_bucket_reg(name)
+        if whole:
+            self._drop_temp_views(name)
         self.mark_dirty(name)
 
     def partition_dirs(self, name: str) -> list[str]:
@@ -576,9 +613,9 @@ class EngineCatalog:
         warehouse; here an actual pre-shuffled layout).
 
         Files are written hash-bucketed on ``bucket_by`` (bucket id in
-        the file name) and the spec is registered in the Spark session
-        catalog — parquet files carry no bucket info, the catalog does.
-        Reads via :meth:`read_bucketed` then report
+        the file name) and the spec is kept in the sidecar — parquet
+        files carry no bucket info; :meth:`read_bucketed` registers it
+        in the Spark session catalog. Reads through it then report
         ``outputPartitioning = hash(bucket_by, n)``, so an equi-join or
         aggregation on the bucket key between co-bucketed tables plans
         with ZERO exchanges: at 100 TB that converts every repeated
@@ -596,28 +633,6 @@ class EngineCatalog:
         missing = [c for c in list(bucket_by) + list(sort_by or []) if c not in df.columns]
         if missing:
             raise ValueError(f"bucket/sort columns {missing} not in dataframe")
-        path = self.table_dir(name)
-        reg = self._bucket_reg_name(name)
-        self.spark.sql(f"DROP TABLE IF EXISTS {reg}")
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        # Align the write partitioning with the bucket hash (both are
-        # Murmur3 HashPartitioning) so every bucket is exactly ONE file:
-        # the write pays exactly one shuffle, and single-file buckets are
-        # what lets the scan report its SORTED BY ordering — Spark
-        # disables sorted-bucket scans when a bucket spans files, and
-        # sort-merge joins would silently re-sort. Size bucket_num so a
-        # single bucket file stays executor-memory-friendly at scale.
-        writer = (
-            df.repartition(bucket_num, *[F.col(c) for c in bucket_by])
-            .write.format("parquet")
-            .mode("overwrite")
-            .option("path", path)
-            .bucketBy(bucket_num, *bucket_by)
-        )
-        if sort_by:
-            writer = writer.sortBy(*sort_by)
-        writer.saveAsTable(reg)
         meta = TableMeta(
             name=name,
             bucket_num=bucket_num,
@@ -626,7 +641,7 @@ class EngineCatalog:
             schema_json=df.schema.json(),
             created_at=time.time(),
         )
-        self._write_meta(name, meta)
+        self.replace(name, df, meta)
         return meta
 
     def read_bucketed(self, name: str) -> DataFrame:
@@ -660,12 +675,13 @@ class EngineCatalog:
         return self.spark.table(reg)
 
     def create_view(self, name: str, sql: str, comment: str | None = None) -> TableMeta:
-        """CREATE OR REPLACE VIEW (reference view/create.sql:1-14)."""
+        """CREATE OR REPLACE VIEW (reference view/create.sql:1-14),
+        swapped in whole: a table at ``name`` leaves no files behind."""
         meta = TableMeta(
             name=name, table_type="view", view_sql=sql, comment=comment,
             created_at=time.time(),
         )
-        self._write_meta(name, meta)
+        self.replace(name, None, meta)
         return meta
 
     # -- read ------------------------------------------------------------------
@@ -812,7 +828,7 @@ class EngineCatalog:
             for schema, t, full in pending:
                 try:
                     df = self.spark.sql(self.meta(full).view_sql)
-                except Exception:
+                except (PySparkException, Py4JJavaError):
                     nxt.append((schema, t, full))
                     continue
                 if schema == self.default_schema:
@@ -849,7 +865,7 @@ class EngineCatalog:
             if rewritten is not None:
                 try:
                     return self.spark.sql(rewritten)
-                except Exception:
+                except (PySparkException, Py4JJavaError):
                     pass  # fall back to the original query
         return self.spark.sql(query)
 
@@ -946,17 +962,13 @@ class EngineCatalog:
         self.replace(name, self.read(name).limit(0), meta)
 
     def clone(self, src: str, dst: str) -> None:
-        """CLONE TABLE src TO dst, drop-if-exists first (reference
+        """CLONE TABLE src TO dst, replacing dst (reference
         macros/materializations/clone.sql:6-11). Vanilla parquet has no
         zero-copy; this is a file-level copy (cheaper than a re-query:
-        no decode/encode)."""
-        if self.exists(dst):
-            self.drop(dst)
+        no decode/encode), swapped in whole."""
         meta = self.meta(src)
-        os.makedirs(os.path.dirname(self.table_dir(dst)), exist_ok=True)
-        shutil.copytree(self.table_dir(src), self.table_dir(dst))
         meta.name = dst
-        self._write_meta(dst, meta)
+        self.replace(dst, src, meta)
 
     def compact(
         self, name: str, target_file_bytes: int = 128 * 1024 * 1024

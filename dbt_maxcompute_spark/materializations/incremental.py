@@ -102,7 +102,7 @@ def run_incremental(
         raise ValueError(
             "append strategy does not support unique_key (reference incremental.sql:36-38)"
         )
-    if full_refresh or not catalog.exists(name):
+    if full_refresh or not catalog.is_table(name):
         catalog.create_table(name, model, mode="overwrite", **create_opts)
         return "create"
 

@@ -12,8 +12,8 @@ _materialized_view.py:15-128`, `impl.py:112-158`) maps to:
   macros/relations/materialized_view/refresh.sql:2): re-run the
   stored query, INSERT OVERWRITE the table.
 - on config change: diff stored vs new config — changes to the
-  defining query or partitioning require DROP+CREATE (replace);
-  anything else is satisfiable by REBUILD/metadata update
+  defining query or partitioning require a replace (built beside,
+  swapped in); anything else is satisfiable by REBUILD
   (reference impl.py:112-158 returns RelationConfigChangeAction).
 
 `disable_rewrite` gates the automatic query rewrite implemented in
@@ -29,7 +29,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from dbt_maxcompute_spark.catalog import EngineCatalog
+from dbt_maxcompute_spark.catalog import EngineCatalog, TableMeta
 
 
 def create_materialized_view(
@@ -43,29 +43,41 @@ def create_materialized_view(
     tblproperties: dict[str, str] | None = None,
     columns: dict[str, str] | None = None,
 ) -> None:
+    """CREATE [OR REPLACE] MATERIALIZED VIEW: the rows and the MV
+    sidecar stage together and swap in over whatever is at ``name``."""
     df = catalog.sql(defining_sql, mv_rewrite=False)
     if build_deferred:
         df = df.limit(0)
-    meta = catalog.create_table(
-        name,
-        df,
-        partition_by=partition_by,
-        lifecycle=lifecycle,
-        tblproperties=tblproperties,
-        mode="overwrite",
+    cfg = _mv_config(
+        partition_by, lifecycle, build_deferred, disable_rewrite, tblproperties, columns
     )
-    meta.table_type = "materialized_view"
-    meta.view_sql = defining_sql
-    meta.mv_config = {
-        "partition_by": list(partition_by or []),
-        "lifecycle": lifecycle,
-        "build_deferred": build_deferred,
-        "disable_rewrite": disable_rewrite,
-        "tblproperties": dict(tblproperties or {}),
-        "columns": dict(columns or {}),
-        "built_at": time.time(),
-    }
-    catalog._write_meta(name, meta)  # noqa: SLF001
+    meta = TableMeta(
+        name=name,
+        table_type="materialized_view",
+        partition_by=cfg["partition_by"],
+        lifecycle=lifecycle,
+        tblproperties=cfg["tblproperties"],
+        view_sql=defining_sql,
+        mv_config={**cfg, "built_at": time.time()},
+        schema_json=df.schema.json(),
+        created_at=time.time(),
+    )
+    catalog.replace(name, df, meta)
+
+
+def _mv_config(
+    partition_by: list[str] | None = None,
+    lifecycle: int | None = None,
+    build_deferred: bool = False,
+    disable_rewrite: bool = False,
+    tblproperties: dict[str, str] | None = None,
+    columns: dict[str, str] | None = None,
+) -> dict[str, Any]:
+    return dict(
+        partition_by=list(partition_by or []), lifecycle=lifecycle,
+        build_deferred=build_deferred, disable_rewrite=disable_rewrite,
+        tblproperties=dict(tblproperties or {}), columns=dict(columns or {}),
+    )
 
 
 def refresh_materialized_view(catalog: EngineCatalog, name: str) -> None:
@@ -75,6 +87,12 @@ def refresh_materialized_view(catalog: EngineCatalog, name: str) -> None:
     meta = catalog.meta(name)
     if meta.table_type != "materialized_view":
         raise ValueError(f"{name} is not a materialized view")
+    _rebuild(catalog, name, meta)
+
+
+def _rebuild(catalog: EngineCatalog, name: str, meta: TableMeta) -> None:
+    """Re-run the stored query; the rows swap in with ``meta``, so a
+    config change lands only with the rows built under it."""
     df = catalog.sql(meta.view_sql, mv_rewrite=False)
     meta.mv_config["built_at"] = time.time()
     catalog.replace(name, df, meta)
@@ -680,28 +698,18 @@ def apply_materialized_view(
     **config: Any,
 ) -> str:
     """Idempotent MV application: create if missing, otherwise diff the
-    stored config and REBUILD / DROP+CREATE / no-op accordingly.
-    Returns the action taken."""
-    if not catalog.exists(name):
-        create_materialized_view(catalog, name, defining_sql, **config)
-        return "create"
-    meta = catalog.meta(name)
-    new_cfg = {
-        "partition_by": list(config.get("partition_by") or []),
-        "lifecycle": config.get("lifecycle"),
-        "build_deferred": config.get("build_deferred", False),
-        "disable_rewrite": config.get("disable_rewrite", False),
-        "tblproperties": dict(config.get("tblproperties") or {}),
-        "columns": dict(config.get("columns") or {}),
-    }
-    action = diff_config(meta.mv_config or {}, new_cfg, meta.view_sql or "", defining_sql)
-    if action == "replace":
-        catalog.drop(name)
+    stored config (none on another relation type) and REBUILD / replace
+    / no-op accordingly. Returns the action taken."""
+    meta = catalog.meta(name) if catalog.exists(name) else None
+    new_cfg = _mv_config(**config)
+    action = "create" if meta is None else diff_config(
+        meta.mv_config or {}, new_cfg, meta.view_sql or "", defining_sql
+    )
+    if action in ("create", "replace"):
         create_materialized_view(catalog, name, defining_sql, **config)
     elif action == "rebuild":
         meta.mv_config.update(new_cfg)
         meta.lifecycle = new_cfg["lifecycle"]
         meta.tblproperties = new_cfg["tblproperties"]
-        catalog._write_meta(name, meta)  # noqa: SLF001
-        refresh_materialized_view(catalog, name)
+        _rebuild(catalog, name, meta)
     return action

@@ -80,10 +80,10 @@ def run_snapshot(
     else:
         upd_col = F.lit(now).cast("timestamp")
 
-    if not catalog.exists(name):
+    if not catalog.is_table(name):
         first = _with_meta(source, keys, upd_col)
         catalog.create_table(
-            name, first, transactional=True, primary_keys=["dbt_scd_id"]
+            name, first, transactional=True, primary_keys=["dbt_scd_id"], mode="overwrite"
         )
         return "create"
 

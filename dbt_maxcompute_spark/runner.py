@@ -178,8 +178,6 @@ def _dispatch(
     model: DataFrame | str | None,
     empty: bool = False,
 ) -> Any:
-    _swap_relation_type(catalog, name, mat)
-
     def _model_df() -> DataFrame:
         df = _as_df(catalog, model)
         # --empty: limit 0 over the compiled model — schema, contracts
@@ -500,28 +498,3 @@ def run_unit_test(
 def _reject_extra(cfg: dict[str, Any]) -> None:
     if cfg:
         raise ValueError(f"unsupported config keys: {sorted(cfg)}")
-
-
-# relation type each materialization produces (None = never a stored relation)
-_TYPE_OF_MAT = {
-    "table": "table",
-    "view": "view",
-    "materialized_view": "materialized_view",
-    "incremental": "table",
-    "snapshot": "table",
-    "seed": "table",
-    "clone": "table",
-}
-
-
-def _swap_relation_type(catalog: EngineCatalog, name: str, mat: str) -> None:
-    """table/view/MV are replaceable relations (reference
-    relation.py:42-50, tests/functional/adapter/test_relations.py): when
-    an existing name changes materialization type, the old relation is
-    dropped so the new one can be created — without this, a view's meta
-    would overwrite a table's while its parquet files leak on disk."""
-    target = _TYPE_OF_MAT.get(mat)
-    if target is None or not catalog.exists(name):
-        return
-    if catalog.meta(name).table_type != target:
-        catalog.drop(name)

@@ -111,6 +111,6 @@ def load_seed(
     typed = raw.select(
         *[F.col(c).cast(t).alias(c) for c, t in schema_map.items()]
     )
-    mode = "overwrite" if full_refresh else "error"
+    mode = "overwrite" if full_refresh or not catalog.is_table(name) else "error"
     catalog.create_table(name, typed, mode=mode, **create_opts)
     return catalog.read(name)

@@ -116,3 +116,18 @@ def test_create_bucketed_validations(spark, cat):
         cat.create_bucketed_table("x", df, bucket_by=[], bucket_num=4)
     with pytest.raises(ValueError):
         cat.create_bucketed_table("x", df, bucket_by=["nope"], bucket_num=4)
+
+
+def test_bucketed_layout_survives_alter(spark, cat):
+    """ADD/DROP COLUMNS and CHANGE COLUMN rewrite a bucketed table
+    bucketed, so joins and aggregates on the bucket key still read it."""
+    _two_bucketed(spark, cat, n=1000)
+    cat.add_remove_columns("ta", add={"note": "string"})
+    cat.alter_column_type("ta", "v", "string", force=True)
+    cat.add_remove_columns("tb", add={"x": "bigint"}, remove=["w"])
+    ta, tb = cat.read_bucketed("ta"), cat.read_bucketed("tb")
+    got = sorted(tuple(r) for r in ta.join(tb, "k").select("k", "v", "note", "x").collect())
+    assert got == [(k, str(2 * k), None, None) for k in range(0, 1000, 2)]
+    agg = tb.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
+    assert sorted(tuple(r) for r in agg.collect()) == [(k, 1) for k in range(0, 1000, 2)]
+    assert "Exchange" not in agg._jdf.queryExecution().executedPlan().toString()

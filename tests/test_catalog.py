@@ -303,16 +303,20 @@ def test_register_views_freshness_after_mutation(spark, tmp_path):
     assert cat.sql("SELECT count(*) AS n FROM t").collect()[0].n == 2
 
 
-# -- the replacement contract: build beside the table, swap in once ---------
+# -- the replacement contract: build beside the relation, swap in once ------
 #
-# Every rebuild entry point rebuilds `t` from a query over `t` itself; the
-# old relation must stay readable until the new one is staged and swapped
-# in, and a failure at any step must leave it exactly as it was.
+# Every entry point replaces `t`, whatever relation kind is seeded there,
+# mostly from a query over `t` itself; the old relation must stay readable
+# until the new one is staged and swapped in, and a failure at any step
+# must leave it exactly as it was.
 
-_LAYOUTS = {
+_LAYOUTS = {  # the seeded relation kind -> table options of a rebuild
     "plain": {},
     "partitioned": {"partition_by": ["pt"]},
     "transactional": {"transactional": True, "primary_keys": ["id"]},
+    "view": {},
+    "mv": {},
+    "bucketed": {},
 }
 _CONTRACT = {
     "enforced": True,
@@ -327,6 +331,12 @@ _KEEP = "SELECT id, name, pt FROM t WHERE id >= 3"
 _BOOM = (
     "SELECT CASE WHEN id = 3 THEN CAST(raise_error('boom') AS BIGINT) "
     "ELSE id END AS id, name, pt FROM t"
+)
+# the seeded rows as SQL, for views and MVs (a view cannot read itself)
+_ROWS_SQL = (
+    "SELECT CAST(id AS BIGINT) AS id, name, pt FROM VALUES "
+    + ", ".join(f"({i}, 'n{i}', 'p{i % 2}')" for i in range(6))
+    + " AS v(id, name, pt)"
 )
 
 
@@ -353,22 +363,88 @@ def _rebuild_contract(catalog, layout, query):
     )
 
 
-_REBUILDS = {
+def _over_rows(query):
+    return query.replace(" FROM t", f" FROM ({_ROWS_SQL}) t")
+
+
+def _rebuild_run_model_view(catalog, layout, query):
+    from dbt_maxcompute_spark.runner import run_model
+
+    run_model(catalog, {"name": "t", "materialized": "view"}, _over_rows(query))
+
+
+def _rebuild_create_view(catalog, layout, query):
+    catalog.create_view("t", _over_rows(query))
+
+
+def _rebuild_mv_replace(catalog, layout, query):
+    from dbt_maxcompute_spark.materializations.materialized_view import apply_materialized_view
+
+    apply_materialized_view(catalog, "t", query)
+
+
+def _rebuild_clone(catalog, layout, query):
+    catalog.create_table("other.s", catalog.sql(query))
+    catalog.clone("other.s", "t")
+
+
+def _rebuild_clone_self(catalog, layout, query):
+    catalog.clone("t", "t")
+
+
+def _rebuild_bucketed(catalog, layout, query):
+    catalog.create_bucketed_table(
+        "t", catalog.sql(query), bucket_by=["id"], bucket_num=2, mode="overwrite"
+    )
+
+
+_TABLE_REBUILDS = {
     "run_model_table": _rebuild_run_model,
     "full_refresh": _rebuild_full_refresh,
     "ctas_or_replace": _rebuild_ctas,
     "contract_overwrite": _rebuild_contract,
 }
-_replacement = pytest.mark.parametrize(
-    "layout,entry",
-    [(layout, entry) for entry in _REBUILDS for layout in _LAYOUTS],
+_REBUILDS = {
+    **_TABLE_REBUILDS,
+    "run_model_view": _rebuild_run_model_view,
+    "create_view": _rebuild_create_view,
+    "mv_replace": _rebuild_mv_replace,
+    "clone": _rebuild_clone,
+    "clone_self": _rebuild_clone_self,
+    "bucketed_overwrite": _rebuild_bucketed,
+}
+# builds that run no query over `t`: a view stores its query, and a
+# clone onto itself copies `t` as it is
+_RUNS_NO_QUERY = ("run_model_view", "create_view", "clone_self")
+# table rebuilds over every table layout; the other entries, and the
+# runner's table build, over a plain table and every other relation
+# kind (a whole-dir swap treats all table layouts alike)
+_OTHER_KINDS = list(_LAYOUTS)[3:]
+_CASES = (
+    [(layout, entry) for entry in _TABLE_REBUILDS for layout in list(_LAYOUTS)[:3]]
+    + [(layout, "run_model_table") for layout in _OTHER_KINDS]
+    + [
+        (layout, entry)
+        for entry in _REBUILDS
+        if entry not in _TABLE_REBUILDS
+        for layout in ("plain", *_OTHER_KINDS)
+    ]
 )
+_replacement = pytest.mark.parametrize("layout,entry", _CASES)
 
 
 def _seed(spark, catalog, layout):
+    from dbt_maxcompute_spark.materializations.materialized_view import create_materialized_view
+
+    if layout == "view":
+        return catalog.create_view("t", _ROWS_SQL)
+    if layout == "mv":
+        return create_materialized_view(catalog, "t", _ROWS_SQL)
     df = spark.createDataFrame(
         [(i, f"n{i}", f"p{i % 2}") for i in range(6)], "id bigint, name string, pt string"
     )
+    if layout == "bucketed":
+        return catalog.create_bucketed_table("t", df, bucket_by=["id"], bucket_num=2)
     catalog.create_table("t", df, **_LAYOUTS[layout])
 
 
@@ -396,12 +472,25 @@ def _hook_swap(monkeypatch, catalog, on_aside=lambda: None, on_rename_in=lambda:
 
 @_replacement
 def test_rebuild_reading_its_own_table(spark, catalog, layout, entry):
+    import os
+
+    from dbt_maxcompute_spark.catalog import META_FILE
+
     _seed(spark, catalog, layout)
+    before = _rows(catalog)
     _REBUILDS[entry](catalog, layout, _KEEP)
-    assert _rows(catalog) == [(i, f"n{i}", f"p{i % 2}") for i in range(3, 6)]
+    if entry == "clone_self":
+        assert _rows(catalog) == before
+    else:
+        assert _rows(catalog) == [(i, f"n{i}", f"p{i % 2}") for i in range(3, 6)]
+    if catalog.meta("t").table_type == "view":
+        # nothing of a replaced table is left beside the view's sidecar
+        assert os.listdir(catalog.table_dir("t")) == [META_FILE]
 
 
-@_replacement
+@pytest.mark.parametrize(
+    "layout,entry", [case for case in _CASES if case[1] not in _RUNS_NO_QUERY]
+)
 def test_failed_rebuild_keeps_old_table(spark, catalog, layout, entry):
     _seed(spark, catalog, layout)
     rows, meta = _rows(catalog), catalog.meta("t")
@@ -447,6 +536,21 @@ def test_list_tables_during_replace(spark, catalog, layout, entry, monkeypatch):
     # points and the old one in the aside dir at the second; neither
     # lists, and `t` is missing only for the width of one rename
     assert seen == [["t"], []]
+
+
+@pytest.mark.parametrize("view_sql", ["SELECT * FROM no_such_table", "SELECT * FROM t"])
+@pytest.mark.parametrize("layout", list(_LAYOUTS))
+def test_view_that_does_not_analyze_hides_old_relation(spark, catalog, layout, view_sql):
+    """A view whose SQL does not analyze (a missing table, or `t`
+    itself) replaces `t`: SQL over `t` fails instead of reading the
+    relation the swap removed."""
+    from pyspark.errors import AnalysisException
+
+    _seed(spark, catalog, layout)
+    assert catalog.sql("SELECT count(*) AS n FROM t").collect()[0].n == 6
+    catalog.create_view("t", view_sql)
+    with pytest.raises(AnalysisException):
+        catalog.sql("SELECT * FROM t").collect()
 
 
 def test_partition_replace_failure_restores_every_partition(spark, catalog, monkeypatch):

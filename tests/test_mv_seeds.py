@@ -52,6 +52,19 @@ def test_mv_config_diff_rebuild_vs_replace(spark, catalog):
     assert apply_materialized_view(catalog, "mv2", MV_SQL + " HAVING count(*) > 0", lifecycle=30) == "noop"
 
 
+def test_mv_failed_rebuild_keeps_config(spark, catalog):
+    """A rebuild swaps the new config in with the rebuilt rows: when the
+    defining query no longer analyzes, the old config stays beside the
+    old rows."""
+    apply_materialized_view(catalog, "mv", MV_SQL, lifecycle=7)
+    meta = catalog.meta("mv")
+    catalog.add_remove_columns("src", remove=["v"])  # MV_SQL sums v
+    with pytest.raises(Exception, match="`v`"):
+        apply_materialized_view(catalog, "mv", MV_SQL, lifecycle=30)
+    assert catalog.meta("mv") == meta
+    assert catalog.read("mv").count() == 2
+
+
 def test_mv_build_deferred(spark, catalog):
     apply_materialized_view(catalog, "mv3", MV_SQL, build_deferred=True)
     assert catalog.read("mv3").count() == 0

@@ -443,6 +443,30 @@ class TestRelationTypeSwap:
         assert catalog.meta("m").created_at >= created
 
 
+@pytest.mark.parametrize("kind", ["view", "materialized_view"])
+def test_direct_builds_over_another_relation_type(spark, tmp_path, kind):
+    """Incremental, snapshot and seed builds called directly, not through
+    run_model, over a view or an MV build as a first run and leave a
+    table of the new rows."""
+    from dbt_maxcompute_spark.materializations.snapshot import run_snapshot
+    from dbt_maxcompute_spark.sources.seeds import load_seed
+
+    cat = EngineCatalog(spark, str(tmp_path / "wh"))
+    csv = tmp_path / "seed.csv"
+    csv.write_text("id,name\n1,a\n2,b\n3,c\n")
+    src = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id bigint, name string")
+    builds = {
+        "inc": lambda: run_incremental(cat, "inc", src, strategy="append"),
+        "snap": lambda: run_snapshot(cat, "snap", src, "id", strategy="check"),
+        "seed": lambda: load_seed(cat, "seed", str(csv), full_refresh=False),
+    }
+    for name, build in builds.items():
+        run_model(cat, {"name": name, "materialized": kind}, "SELECT 1 AS id, 'x' AS name")
+        build()
+        assert cat.meta(name).table_type == "table"
+        assert sorted(r["id"] for r in cat.read(name).collect()) == [1, 2, 3]
+
+
 # ---------------------------------------------------------------------------
 # query-comment injection (reference test_query_comment.py: comments are
 # injected into every executed statement and never break execution)
