@@ -106,23 +106,21 @@ def main() -> None:
             "noop"
         ).mode("overwrite").save()
 
-        # the production-width minhash fold has its own first-touch
-        # interpreted-expression/codegen cost — warm it on a 64-row
-        # literal frame so the first LSH query isn't billed for it
+        # the production-width minhash signature and band expressions
+        # have their own first-touch interpreted-expression/codegen
+        # cost — warm them on a 64-row literal frame so the first LSH
+        # query isn't billed for it
         from pyspark.sql import functions as F
 
-        from dbt_maxcompute_spark.operators.dedup import (
-            minhash_signature,
-            shingles,
-            tokens,
-        )
+        from dbt_maxcompute_spark.operators.dedup import banded_signatures
 
         tiny = spark.range(64, numPartitions=par).select(
-            F.concat(F.lit("warm doc text number "), F.col("id").cast("string")).alias("text")
+            "id",
+            F.concat(F.lit("warm doc text number "), F.col("id").cast("string")).alias("text"),
         )
-        tiny.select(
-            minhash_signature(shingles(tokens(F.col("text")), 3), 32)
-        ).write.format("noop").mode("overwrite").save()
+        banded_signatures(tiny, "id", "text", 32, 16, 3).write.format("noop").mode(
+            "overwrite"
+        ).save()
 
         # same first-touch cost for the classifier's interpreted
         # aggregate-over-map fold (~5 s of one-time analysis/codegen a

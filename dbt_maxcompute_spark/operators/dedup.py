@@ -7,16 +7,27 @@ verification, embedding-cosine near-dup.
 Scale design (the whole point of these):
 - Exact dedup = hash-groupBy — one shuffle on a 64-bit content hash,
   never on the full text.
-- MinHash+LSH: signatures are computed per-row with built-in
-  Catalyst expressions (split → shingle via transform/sequence/slice
-  → xxhash64 → array_min) — fully codegen'd, no Python in the hot
-  path. Banding turns the O(n²) pair space into per-bucket joins;
-  the only shuffle is groupBy(band, band_hash). At 100 TB the bucket
-  histogram is the thing to watch: a degenerate bucket (all-identical
-  boilerplate docs) creates a quadratic bucket — cap bucket size and
-  route overflow to a quarantine output rather than joining it.
-- Candidate verification computes exact token-set Jaccard only on
-  LSH candidates (tiny fraction of pairs).
+- MinHash+LSH: signatures are computed per row in one projection of
+  built-in Catalyst expressions (split → shingle via
+  transform/sequence/slice → xxhash64 → min-fold), no Python. The
+  array lambdas are higher-order functions, which Spark INTERPRETS
+  (CodegenFallback): no subexpression elimination reaches inside them,
+  so an expression a lambda refers to is re-evaluated per element.
+  Hence the tokens are bound once per row as a lambda variable
+  (``textanalysis.bind``), the shingle array and the signature
+  are projected to named columns before their consumers, and the
+  signature and band expressions are each one SQL parse (a handful of
+  py4j round trips instead of thousands). Banding turns the O(n²)
+  pair space into per-bucket joins: the band rows are shuffled ONCE on
+  (band, band_hash), and the bucket histogram and both self-join sides
+  read that one exchange. At 100 TB the histogram is the thing to
+  watch: a degenerate bucket (all-identical boilerplate docs) creates
+  a quadratic bucket — cap bucket size and route overflow to a
+  quarantine output rather than joining it.
+- Candidate verification computes exact shingle-set Jaccard only on
+  LSH candidates (tiny fraction of pairs): each pair explodes into its
+  two sides, joins the documents once, and regroups per pair. Nothing
+  is persisted, so no cached block outlives the query.
 - "Dedup" keeps the smallest doc_id of each duplicate group: a row
   drops iff it has a verified duplicate with a smaller id — one
   anti-join, no iterative connected components (documented
@@ -28,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from dbt_maxcompute_spark.operators.textanalysis import bind, tokens
 
 
 def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
@@ -59,67 +72,69 @@ def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# tokenization / shingles (shared, pure Catalyst expressions)
+# shingles and MinHash signatures (shared, pure Catalyst expressions)
 # ---------------------------------------------------------------------------
 
 
-def tokens(text: Column) -> Column:
-    return F.split(F.lower(F.trim(text)), r"\s+")
+def shingles(text: Column, n: int = 3) -> Column:
+    """Word n-grams of ``tokens(text)``; a doc shorter than n tokens
+    contributes its full token join as a single shingle. The tokens are
+    bound once per row (``textanalysis.bind``): referring to the token
+    expression inside the per-position lambda would re-split the text
+    once per shingle."""
+
+    def grams(toks: Column) -> Column:
+        ngrams = F.transform(
+            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        )
+        return F.when(F.size(toks) < n, F.array(F.concat_ws(" ", toks))).otherwise(ngrams)
+
+    return bind(tokens(text), grams)
 
 
-def shingles(toks: Column, n: int = 3) -> Column:
-    """Word n-grams; a doc shorter than n tokens contributes its full
-    token join as a single shingle."""
-    joined = F.concat_ws(" ", toks)
-    ngrams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+_MAX_LONG = (1 << 63) - 1
+
+
+def _mix_sql(k: int) -> str:
+    # the k-th hash of the family: h1 XOR rot_k(h2) (k = 0 is h1 alone)
+    if k == 0:
+        return "p.h1"
+    return f"(p.h1 ^ (shiftleft(p.h2, {k}) | shiftrightunsigned(p.h2, {64 - k})))"
+
+
+def minhash_signature(shingle_col: str, num_hashes: int = 32) -> Column:
+    """num_hashes independent min-hashes of the shingle array in column
+    ``shingle_col``: array<bigint>, built by ONE SQL parse.
+
+    Two-base-hash family: the k-th hash is h1 XOR rot_k(h2), with h1 =
+    xxhash64(s) and h2 = xxhash64(s, 1) — 2 hash calls per shingle
+    instead of num_hashes, and pure bit ops (ANSI mode forbids wrapping
+    arithmetic). The pair is materialized per shingle as a struct, so
+    the k combinations read lambda-variable fields, not recomputed
+    hashes; one fold with a num_hashes-wide min accumulator then reads
+    the shingle array ONCE (a per-k array_min over the shingles would
+    walk it num_hashes times). Built element-wise through the Column
+    API the same expression costs ~2,000 py4j round trips."""
+    mixes = ", ".join(_mix_sql(k) for k in range(num_hashes))
+    return F.expr(
+        f"aggregate(transform(`{shingle_col}`,"
+        " s -> named_struct('h1', xxhash64(s), 'h2', xxhash64(s, 1))),"
+        f" array_repeat({_MAX_LONG}L, {int(num_hashes)}),"
+        f" (acc, p) -> zip_with(acc, array({mixes}), (a, b) -> least(a, b)))"
     )
-    return F.when(F.size(toks) < n, F.array(joined)).otherwise(ngrams)
 
 
-def minhash_signature(sh: Column, num_hashes: int = 32) -> Column:
-    """num_hashes independent min-hashes: xxhash64 with per-function
-    seed, min over shingles. Array-valued column.
-
-    Single fold over the shingle array with a num_hashes-wide min
-    accumulator: the shingle-construction subexpression appears ONCE in
-    the plan (a per-k array_min(transform(sh, ...)) would re-inline it
-    num_hashes times — Catalyst's CollapseProject duplicates cheap-
-    looking expressions).
-
-    NB: per-k lambdas must be single-arg — a two-arg lambda is
-    interpreted by F.transform as (element, index) and would silently
-    bind the seed to the array index (every 'independent' hash
-    identical)."""
-    max_long = (1 << 63) - 1
-    # Two-base-hash family: the k-th hash is h1 XOR rot_k(h2) — 2
-    # xxhash64 calls per shingle instead of num_hashes, and pure bit
-    # ops (ANSI mode forbids wrapping arithmetic). The struct is
-    # materialized per element so the k combinations reference lambda-
-    # var fields, not recomputed hashes.
-    pre = F.transform(
-        sh,
-        lambda s: F.struct(
-            F.xxhash64(s).alias("h1"), F.xxhash64(s, F.lit(1)).alias("h2")
-        ),
+def _band_rows(sig_col: str, num_hashes: int, bands: int) -> Column:
+    """Generator of one (band int, bh int) row per band of the signature
+    in column ``sig_col``: bh is the Murmur3 ``hash`` of the band's
+    slice of r = num_hashes/bands min-hashes. ONE SQL parse."""
+    r = num_hashes // bands
+    structs = ", ".join(
+        f"named_struct('band', {b}, 'bh', hash(slice(`{sig_col}`, {b * r + 1}, {r})))"
+        for b in range(bands)
     )
-
-    def mix(p: Column, k: int) -> Column:
-        if k == 0:
-            return p["h1"]
-        rot = F.shiftleft(p["h2"], k).bitwiseOR(F.shiftrightunsigned(p["h2"], 64 - k))
-        return p["h1"].bitwiseXOR(rot)
-
-    return F.aggregate(
-        pre,
-        F.array_repeat(F.lit(max_long).cast("long"), num_hashes),
-        lambda acc, p: F.zip_with(
-            acc,
-            F.array(*[mix(p, k) for k in range(num_hashes)]),
-            lambda a, b: F.least(a, b),
-        ),
-    )
+    return F.expr(f"inline(array({structs}))")
 
 
 # ---------------------------------------------------------------------------
@@ -135,29 +150,95 @@ def banded_signatures(
     bands: int,
     shingle_n: int,
 ) -> DataFrame:
-    """(id, band, bh) LSH band rows for every document — the compact
+    """(__id, band, bh) LSH band rows for every document — the compact
     form that enters bucket joins (ids and two ints; shingle arrays
     never leave the signature projection). In a production crawl loop
     this is the table you PERSIST between batches: the store side of
-    incremental near-dup dedup is a read, not a recompute."""
-    r = num_hashes // bands
-    sh = shingles(tokens(F.col(text_col)), shingle_n)
-    sig = minhash_signature(sh, num_hashes)
-    sigs = df.select(F.col(id_col).alias("__id"), sig.alias("__sig"))
-    return sigs.select(
-        "__id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.hash(F.slice(F.col("__sig"), b * r + 1, r)).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("__id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+    incremental near-dup dedup is a read, not a recompute.
+
+    The shingles and the signature are projected to named columns
+    first, so the signature fold and the per-band slices refer to
+    attributes instead of re-inlining the expression below them."""
+    return (
+        df.select(
+            F.col(id_col).alias("__id"),
+            shingles(F.col(text_col), shingle_n).alias("__sh"),
+        )
+        .select("__id", minhash_signature("__sh", num_hashes).alias("__sig"))
+        .select("__id", _band_rows("__sig", num_hashes, bands))
+    )
+
+
+def _capped_buckets(banded: DataFrame, max_bucket: int) -> DataFrame:
+    """The band rows outside buckets of more than max_bucket rows.
+
+    The band rows are shuffled ONCE on (band, bh), and the signatures
+    under that exchange are computed once with nothing persisted. The
+    bucket histogram is a hash aggregate over the exchange, and its few
+    oversized keys are broadcast into a left-anti join — NOT a window
+    count, which would sort every banded row just to tag the rare
+    overflow.
+
+    Spark pushes a left-anti join below a repartition. Pushed there, the
+    join's side would sit on an exchange of its own, and the signatures
+    would be computed twice. Re-emitting the rows through a generator
+    after the exchange keeps the join above it: a join on a generator's
+    output cannot move below the generator. The histogram counts
+    ``__id`` (never NULL in a bucket that can pair) so that column
+    pruning leaves both consumers the same subtree, which Spark then
+    runs once (exchange reuse)."""
+    banded = banded.repartition("band", "bh")
+    oversized = F.broadcast(
+        banded.groupBy("band", "bh")
+        .agg(F.count("__id").alias("__n"))
+        .filter(F.col("__n") > max_bucket)
+        .select("band", "bh")
+    )
+    rows = banded.select(F.inline(F.array(F.struct("__id", "band", "bh"))))
+    return rows.join(oversized, ["band", "bh"], "left_anti")
+
+
+def _verified(
+    cand: DataFrame,
+    sides: list[tuple[int, str]],
+    docs: DataFrame,
+    shingle_n: int,
+    jaccard_threshold: float,
+) -> DataFrame:
+    """Candidate pairs whose exact shingle-set Jaccard clears the
+    threshold, with a ``jaccard`` column. ``sides`` names the pair's
+    two id columns with a side tag each; ``docs`` holds (__side, __tid,
+    __text) rows. Each pair explodes into its two sides, joins the
+    documents once, shingles after the join (only candidate docs are
+    shingled) and regroups per pair. The shingle sets are aggregate
+    outputs, so the Jaccard filter reads them as attributes: a
+    projected set would be re-inlined into the pushed-down filter and
+    rebuilt per reference. A NULL text has NULL shingles, which
+    ``collect_list`` drops, so its pairs get a NULL Jaccard and no
+    match."""
+    keys = [c for _, c in sides]
+    side = F.explode(
+        F.array(*[F.struct(F.lit(t).alias("__side"), F.col(c).alias("__tid")) for t, c in sides])
+    )
+    sets = (
+        cand.select(*keys, side.alias("__s"))
+        .select(*keys, "__s.__side", "__s.__tid")
+        .join(docs, ["__side", "__tid"])
+        .groupBy(*keys)
+        .agg(F.collect_list(F.array_distinct(shingles(F.col("__text"), shingle_n))).alias("__sets"))
+    )
+    a, b = F.get("__sets", 0), F.get("__sets", 1)
+    return (
+        sets.withColumn("jaccard", F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b)))
+        .filter(F.col("jaccard") >= jaccard_threshold)
+        .select(*keys, "jaccard")
+    )
+
+
+def _doc_texts(df: DataFrame, id_col: str, text_col: str, side: int) -> DataFrame:
+    return df.select(
+        F.lit(side).alias("__side"), F.col(id_col).alias("__tid"), F.col(text_col).alias("__text")
+    )
 
 
 def minhash_lsh_pairs(
@@ -182,34 +263,14 @@ def minhash_lsh_pairs(
     if num_hashes % bands:
         raise ValueError("num_hashes must divide into bands")
     src = spread(df)
-    sh = shingles(tokens(F.col(text_col)), shingle_n)
 
     # Band rows carry ONLY (id, band, bh): the shingle sets (wide
-    # arrays) never enter the bucket shuffle — they re-attach to the
-    # deduped candidate pairs at the end. The signature is projected
-    # to a named column FIRST (inside banded_signatures) so the
-    # per-band slices under the explode reference it as an attribute
-    # instead of re-inlining the fold `bands` times.
-    banded = banded_signatures(src, id_col, text_col, num_hashes, bands, shingle_n)
-
-    # bucket-size cap: degenerate buckets — boilerplate-identical docs
-    # — would go quadratic at scale; they're quarantined, not joined.
-    # The cap is a hash-aggregate (map-side combinable) + broadcast
-    # anti-join of the few oversized (band, bh) keys — NOT a window
-    # count, which would sort-shuffle every banded row just to tag the
-    # rare overflow.  Persist the PRE-cap band rows ((id, band, bh)
-    # only — tiny): three consumers sit below them (the oversized
-    # histogram and both self-join sides) and each would otherwise
-    # re-run the full signature computation.
-    banded = banded.persist()
-    oversized = (
-        banded.groupBy("band", "bh")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_bucket)
-        .select("band", "bh")
+    # arrays) never enter the bucket shuffle. Degenerate buckets —
+    # boilerplate-identical docs — would go quadratic at scale; they are
+    # quarantined, not joined.
+    banded = _capped_buckets(
+        banded_signatures(src, id_col, text_col, num_hashes, bands, shingle_n), max_bucket
     )
-    banded = banded.join(F.broadcast(oversized), ["band", "bh"], "left_anti")
-
     a = banded.select("band", "bh", F.col("__id").alias("id_a"))
     b = banded.select("band", "bh", F.col("__id").alias("id_b"))
     cand = (
@@ -218,34 +279,8 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-
-    # Verification token sets are built ONLY for docs that appear in a
-    # candidate pair (semi-join first): at 100 TB the candidates are a
-    # sliver of the corpus, so shingling the whole corpus again — twice,
-    # once per join side — would dwarf the verify itself. `cand` is
-    # persisted because three consumers (the id union and both pair
-    # joins) would otherwise re-run the bucket self-join.
-    cand = cand.persist()
-    cand_ids = (
-        cand.select(F.col("id_a").alias("__cid"))
-        .union(cand.select(F.col("id_b").alias("__cid")))
-        .distinct()
-    )
-    toksets = (
-        spread(df)
-        .join(cand_ids, F.col(id_col) == F.col("__cid"), "left_semi")
-        .select(F.col(id_col).alias("__tid"), F.array_distinct(sh).alias("__tokset"))
-    )
-    pairs = (
-        cand.join(toksets.select(F.col("__tid").alias("id_a"), F.col("__tokset").alias("tok_a")), "id_a")
-        .join(toksets.select(F.col("__tid").alias("id_b"), F.col("__tokset").alias("tok_b")), "id_b")
-    )
-    jac = F.size(F.array_intersect("tok_a", "tok_b")) / F.size(F.array_union("tok_a", "tok_b"))
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    docs = _doc_texts(src, id_col, text_col, 0)
+    return _verified(cand, [(0, "id_a"), (0, "id_b")], docs, shingle_n, jaccard_threshold)
 
 
 def dedup_against_store(
@@ -313,50 +348,24 @@ def lsh_dedup_against_store(
     history is never re-shingled; each batch computes its own bands,
     joins the stored table, and appends its survivors' band rows.
     """
-    nb = banded_signatures(spread(new_df), id_col, text_col, num_hashes, bands, shingle_n)
-    sb = banded_signatures(spread(store_df), id_col, text_col, num_hashes, bands, shingle_n)
-    sb = sb.persist()
-    oversized = (
-        sb.groupBy("band", "bh")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_bucket)
-        .select("band", "bh")
+    new_src, store_src = spread(new_df), spread(store_df)
+    nb = banded_signatures(new_src, id_col, text_col, num_hashes, bands, shingle_n)
+    # a batch row in an oversized store bucket meets no capped store row
+    sb = _capped_buckets(
+        banded_signatures(store_src, id_col, text_col, num_hashes, bands, shingle_n), max_bucket
     )
-    sb_capped = sb.join(F.broadcast(oversized), ["band", "bh"], "left_anti")
-    nb_capped = nb.join(F.broadcast(oversized), ["band", "bh"], "left_anti")
-
     cand = (
-        nb_capped.select("band", "bh", F.col("__id").alias("new_id"))
-        .join(
-            sb_capped.select("band", "bh", F.col("__id").alias("store_id")),
-            ["band", "bh"],
-        )
+        nb.select("band", "bh", F.col("__id").alias("new_id"))
+        .join(sb.select("band", "bh", F.col("__id").alias("store_id")), ["band", "bh"])
         .select("new_id", "store_id")
         .dropDuplicates(["new_id", "store_id"])
     )
-    cand = cand.persist()
-
-    sh = shingles(tokens(F.col(text_col)), shingle_n)
-    new_toks = (
-        spread(new_df)
-        .join(cand.select(F.col("new_id").alias("__cid")).distinct(),
-              F.col(id_col) == F.col("__cid"), "left_semi")
-        .select(F.col(id_col).alias("new_id"), F.array_distinct(sh).alias("tok_n"))
-    )
-    store_toks = (
-        spread(store_df)
-        .join(cand.select(F.col("store_id").alias("__cid")).distinct(),
-              F.col(id_col) == F.col("__cid"), "left_semi")
-        .select(F.col(id_col).alias("store_id"), F.array_distinct(sh).alias("tok_s"))
-    )
-    jac = F.size(F.array_intersect("tok_n", "tok_s")) / F.size(
-        F.array_union("tok_n", "tok_s")
+    # side 0 = batch, 1 = store: a batch id may also be a store id
+    docs = _doc_texts(new_src, id_col, text_col, 0).unionByName(
+        _doc_texts(store_src, id_col, text_col, 1)
     )
     dup_new = (
-        cand.join(new_toks, "new_id")
-        .join(store_toks, "store_id")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        _verified(cand, [(0, "new_id"), (1, "store_id")], docs, shingle_n, jaccard_threshold)
         .select(F.col("new_id").alias(id_col))
         .distinct()
     )
@@ -387,7 +396,7 @@ def ngram_jaccard_pairs(
     """Exact all-pairs shingle-set Jaccard — the brute-force oracle for
     LSH recall tests. O(n²): ONLY for verification/sampled audits; the
     scale path is minhash_lsh_pairs."""
-    sh = F.array_distinct(shingles(tokens(F.col(text_col)), shingle_n))
+    sh = F.array_distinct(shingles(F.col(text_col), shingle_n))
     base = df.select(F.col(id_col).alias("__id"), sh.alias("__sh"))
     a = base.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
     b = base.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
@@ -673,6 +682,35 @@ def semantic_dedup(
 # ---------------------------------------------------------------------------
 
 
+def _chunk_structs(text: Column, w: int) -> Column:
+    """array<struct<idx, chunk>> of the NON-OVERLAPPING w-token windows
+    of ``text``'s tokens. The tokens are bound once per row
+    (``textanalysis.bind``): the per-window lambda slicing a
+    ``tokens(text)`` expression would re-split the text once per
+    chunk."""
+    return bind(tokens(text), lambda toks: _windows(toks, w))
+
+
+def _windows(toks: Column, w: int) -> Column:
+    nch = F.ceil(F.size(toks) / F.lit(w)).cast("int")
+    # nch >= 1 guard: F.sequence(0, nch-1) at nch=0 would DESCEND to
+    # [0, -1] and slice at a non-positive start; nch IS NULL (null
+    # text: size() = -1 is a lie, tokens() of null is null) must also
+    # not silently vanish. Policy (explicit, round-12 advisory): docs
+    # with no chunkable text still get an output row with n_chunks=0
+    # and an empty clean_col — explode_outer keeps them.
+    idxs = F.when(nch >= 1, F.sequence(F.lit(0), nch - 1)).otherwise(
+        F.array().cast("array<int>")
+    )
+    return F.transform(
+        idxs,
+        lambda c: F.struct(
+            c.alias("idx"),
+            F.concat_ws(" ", F.slice(toks, c * w + 1, w)).alias("chunk"),
+        ),
+    )
+
+
 def dedup_substring_chunks(
     df: DataFrame,
     id_col: str,
@@ -703,24 +741,7 @@ def dedup_substring_chunks(
     collect; a 100 TB corpus is two bounded shuffles.
     """
     w = int(chunk_tokens)
-    toks = tokens(F.col(text_col))
-    nch = F.ceil(F.size(toks) / F.lit(w)).cast("int")
-    # nch >= 1 guard: F.sequence(0, nch-1) at nch=0 would DESCEND to
-    # [0, -1] and slice at a non-positive start; nch IS NULL (null
-    # text: size() = -1 is a lie, tokens() of null is null) must also
-    # not silently vanish. Policy (explicit, round-12 advisory): docs
-    # with no chunkable text still get an output row with n_chunks=0
-    # and an empty clean_col — explode_outer keeps them.
-    idxs = F.when(nch >= 1, F.sequence(F.lit(0), nch - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    chunks = F.transform(
-        idxs,
-        lambda c: F.struct(
-            c.alias("idx"),
-            F.concat_ws(" ", F.slice(toks, c * w + 1, w)).alias("chunk"),
-        ),
-    )
+    chunks = _chunk_structs(F.col(text_col), w)
     ch = (
         df.select(F.col(id_col), F.explode_outer(chunks).alias("__c"))
         .select(

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from dbt_maxcompute_spark.localframe import local_frame
 
-from dbt_maxcompute_spark.operators.textanalysis import tokens
+from dbt_maxcompute_spark.operators.textanalysis import tokens, with_tokens
 
 
 def hashed_features(text: Column, buckets: int, orders: tuple = (1, 2)) -> Column:
@@ -51,25 +51,29 @@ def hashed_features(text: Column, buckets: int, orders: tuple = (1, 2)) -> Colum
             buckets
         )
 
-    toks = tokens(text)
-    parts = []
-    if 1 in orders:
-        parts.append(F.transform(toks, bucket))
-    if 2 in orders:
-        bigrams = F.when(
-            F.size(toks) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - 1),
-                lambda i: bucket(F.concat_ws(" ", F.slice(toks, i, 2))),
-            ),
-        ).otherwise(F.array().cast("array<bigint>"))
-        parts.append(bigrams)
-    if not parts:
-        raise ValueError("orders must include 1 and/or 2")
-    out = parts[0]
-    for p in parts[1:]:
-        out = F.concat(out, p)
-    return out
+    def features(toks: Column) -> Column:
+        parts = []
+        if 1 in orders:
+            parts.append(F.transform(toks, bucket))
+        if 2 in orders:
+            bigrams = F.when(
+                F.size(toks) >= 2,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(toks) - 1),
+                    lambda i: bucket(F.concat_ws(" ", F.slice(toks, i, 2))),
+                ),
+            ).otherwise(F.array().cast("array<bigint>"))
+            parts.append(bigrams)
+        if not parts:
+            raise ValueError("orders must include 1 and/or 2")
+        out = parts[0]
+        for p in parts[1:]:
+            out = F.concat(out, p)
+        return out
+
+    # tokens bound once per row: the bigram lambda slicing a
+    # tokens(text) expression would re-split the text per position
+    return with_tokens(text, features)
 
 
 def _bucket_col(f: Column, buckets: int) -> Column:

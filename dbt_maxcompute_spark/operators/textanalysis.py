@@ -57,16 +57,22 @@ def stopword_hits(toks: Column, lang: str) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(words)))
 
 
+def bind(value: Column, fn) -> Column:
+    """Bind ``value`` ONCE per row as a lambda variable and evaluate fn
+    over it. Higher-order functions are interpreted (CodegenFallback),
+    so codegen subexpression elimination never dedupes an expression
+    referenced by several HOF calls or inside a per-element lambda —
+    each reference re-evaluates it. Routing the consumers through one
+    transform-over-singleton-array makes the cost O(1) per row
+    regardless of how many of them read it (measured 7x on the 3-gram
+    hasher at sf0.1)."""
+    return F.get(F.transform(F.array(value), fn), 0)
+
+
 def with_tokens(text: Column, fn) -> Column:
-    """Bind the token array ONCE per row as a lambda variable and
-    evaluate fn over it. Higher-order functions are interpreted
-    (CodegenFallback), so codegen subexpression elimination never
-    dedupes a `tokens(text)` referenced by several HOF calls — each
-    reference re-splits the text. Routing the metrics through one
-    transform-over-singleton-array makes the tokenization cost O(1)
-    per row regardless of how many token-level metrics consume it
-    (measured 7x on the 3-gram hasher at sf0.1)."""
-    return F.get(F.transform(F.array(tokens(text)), fn), 0)
+    """fn over the token array of ``text``, tokenized once per row
+    (:func:`bind`)."""
+    return bind(tokens(text), fn)
 
 
 def lang_id(text: Column) -> Column:

@@ -32,12 +32,16 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from dbt_maxcompute_spark.sources.registry import source_schema
+
 # The fixture's ts physical type has varied across driver generations
 # (TIMESTAMP(NANOS) read as long, tz-adjusted µs, tz-naive µs); the
-# stream reader sniffs the directory's current schema with a one-off
-# batch metadata read and normalizes to TIMESTAMP exactly like
-# sources.registry (a production stream knows its schema a priori —
-# the sniff is fixture-compat only).
+# stream reader sniffs the directory's current schema through
+# sources.registry's per-session resolver (one inference per set of
+# data files, so a re-staged directory of the same files costs no job)
+# and normalizes to TIMESTAMP exactly like sources.registry (a
+# production stream knows its schema a priori — the sniff is
+# fixture-compat only).
 EVENTS_RAW_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -128,7 +132,7 @@ def read_events_stream(
     `path` must be a directory (Spark's file stream source lists it)."""
     from pyspark.sql.types import TimestampNTZType
 
-    sniffed = spark.read.parquet(path).schema
+    sniffed = source_schema(spark, path)
     ts_type = sniffed["ts"].dataType
     if isinstance(ts_type, LongType):
         raw = (

@@ -45,7 +45,7 @@ def q_dedup_token_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact all-pairs token-set Jaccard on a bounded subset (O(n²) —
     # the LSH path is the scale story; this is its accuracy oracle).
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    toks = F.array_distinct(dedup.tokens(F.col("text")))
+    toks = F.array_distinct(ta.tokens(F.col("text")))
     base = docs.select(F.col("doc_id").alias("id"), toks.alias("tok"))
     a = base.select(F.col("id").alias("id_a"), F.col("tok").alias("tok_a"))
     b = base.select(F.col("id").alias("id_b"), F.col("tok").alias("tok_b"))

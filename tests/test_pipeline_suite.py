@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_maxcompute_spark.operators import dedup, multimodal, similarity
+from dbt_maxcompute_spark.operators import dedup, multimodal, similarity, textanalysis
 from dbt_maxcompute_spark.sources.registry import load_table
 from dbt_maxcompute_spark.suite import pipeline_suite
 from tests.oracle import compare_to_oracle
@@ -86,7 +86,7 @@ def test_simhash_fast_matches_catalyst_fold(spark, sf_dir):
     """The Arrow fast path must be bit-identical to the pure-Catalyst
     reference fold (same xxhash64 token hashes, same majority rule)."""
     docs = load_table(spark, sf_dir, "documents").limit(50)
-    toks = dedup.tokens(F.col("text"))
+    toks = textanalysis.tokens(F.col("text"))
     got = docs.select(
         _simhash_fold(toks).alias("slow"), dedup.simhash_fast(toks).alias("fast")
     ).collect()
